@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main — prints ONE JSON line per the driver contract.
   *
   * Methodology (BASELINE.md §"Our target" promised load/compute
@@ -34,15 +36,39 @@ package graft
   *    per-query medians, not totals, across the methodology change.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The scale-factor directory the runners read when none is given. */
+  def envSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The runners' shared session: `local[SPARK_GRAFT_CPUS]` with every
+    * table but the corpus preloaded. Returns it with the preload
+    * seconds (the bench's `load_s`). */
+  def session(sfDir: String): (SparkSession, Double) = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val t0 = System.nanoTime()
+    Tables.preload(spark, sfDir)
+    (spark, (System.nanoTime() - t0) / 1e9)
+  }
 
-    val tLoad = System.nanoTime()
-    Tables.preload(spark, sfDir, except = Set("documents", "embeddings"))
-    val loadS = (System.nanoTime() - tLoad) / 1e9
+  /** Seconds for one run of a registered query into the `noop` sink. */
+  def runOnce(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** JSON string literal: quote, backslash and every control char escaped. */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = envSfDir
+    val (spark, loadS) = session(sfDir)
 
     val headline = Seq(
       "agg_avg", "agg_max_date", "agg_multi",
@@ -97,13 +123,6 @@ object Bench {
       (SparkEntry.queries.keys.toSet -- headline).toSeq.sorted)
       .filterNot(pairFamily.contains)
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
     var errors = List.empty[(String, String)]
     var cold = List.empty[(String, Double)]
     def sweep(names: Seq[String], releaseEach: Boolean,
@@ -111,10 +130,10 @@ object Bench {
       names.flatMap { name =>
         try {
           beforeRun(name)
-          val coldT = runOnce(name) // warm-up; JIT + plan cost
+          val coldT = runOnce(spark, sfDir, name) // warm-up; JIT + plan cost
           beforeRun(name)
-          val t1 = runOnce(name)
-          def timed() = { beforeRun(name); runOnce(name) }
+          val t1 = runOnce(spark, sfDir, name)
+          def timed() = { beforeRun(name); runOnce(spark, sfDir, name) }
           val med =
             if (t1 < 0.2 || coldT > 0.5) math.min(t1, timed()) // 2 runs, floor
             else Seq(t1, timed(), timed()).sorted.apply(1) // 3 runs, median
@@ -151,11 +170,6 @@ object Bench {
     val (isolated, isolatedSkipped) =
       BenchIsolate.classify(results, errors.map(_._1).toSet, pairFamily.toSet, sfDir)
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     def jmap(xs: Seq[(String, Double)]): String =
       xs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }

@@ -889,10 +889,10 @@ object SparkEntry {
         |FROM c ORDER BY prev_type, next_type""".stripMargin,
     "tpch_q1_pricing" ->
       """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-        |       round(sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)), 2) AS sum_charge,
+        |       floor(sum(l_quantity) * 100 + 0.5) / 100 AS sum_qty,
+        |       floor(sum(l_extendedprice) * 100 + 0.5) / 100 AS sum_base_price,
+        |       floor(sum(l_extendedprice * (1.0 - l_discount)) * 100 + 0.5) / 100 AS sum_disc_price,
+        |       floor(sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)) * 100 + 0.5) / 100 AS sum_charge,
         |       round(avg(l_quantity), 4) AS avg_qty,
         |       round(avg(l_extendedprice), 4) AS avg_price,
         |       round(avg(l_discount), 4) AS avg_disc,
@@ -936,7 +936,7 @@ object SparkEntry {
         |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
     "tpch_q3_shipping" ->
       """SELECT l_orderkey, o_orderdate,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+        |       floor(sum(l_extendedprice * (1.0 - l_discount)) * 100 + 0.5) / 100 AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
@@ -945,7 +945,7 @@ object SparkEntry {
         |GROUP BY l_orderkey, o_orderdate
         |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin,
     "tpch_q5_local" ->
-      """SELECT n_name, round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+      """SELECT n_name, floor(sum(l_extendedprice * (1.0 - l_discount)) * 100 + 0.5) / 100 AS revenue
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
@@ -2850,7 +2850,8 @@ object SparkEntry {
     // Lossy-format twin: the clone re-encodes the DECODED jpeg pixels
     // LOSSLESSLY (png), so the floor identity pins Hamming 0 in closed
     // form no matter what quantization did; background floor 13
-    // measured through the full lossy pipe (tools.JpegProbe).
+    // measured through the full lossy pipe (the tools.JpegProbe main,
+    // source at commit f4abc46).
     "multimodal_dedup_phash_jpeg" ->
       """SELECT doc_id AS d1, (doc_id + 10000000)::BIGINT AS d2, 0 AS hamming
         |FROM documents WHERE doc_id < 10 ORDER BY d1, d2""".stripMargin,
@@ -2937,14 +2938,16 @@ object SparkEntry {
     // lossless at Al=0, so the two frame types decode bit-identically
     // — each planted pair (same pixels saved SOF2 vs SOF0, both
     // directions) sits at Hamming 0 in closed form; background floor
-    // 13 measured through the lossy pipe (tools.JpegProbe).
+    // 13 measured through the lossy pipe (the tools.JpegProbe main,
+    // source at commit f4abc46).
     "multimodal_dedup_jpeg_progressive" ->
       """SELECT doc_id AS d1, (doc_id + 10000000)::BIGINT AS d2, 0 AS hamming
         |FROM documents WHERE doc_id < 10 ORDER BY d1, d2""".stripMargin,
     // Audio twin: frame-duplication resample provably preserves the
     // aHash (floor-of-floor frame picks), so planted pairs sit at
     // Hamming 0 and the textured background (min non-planted distance
-    // measured by tools.GateProbe) keeps false pairs out of the <= 4
+    // measured by the tools.GateProbe main, source at commit f4abc46)
+    // keeps false pairs out of the <= 4
     // gate — the same closed-form contract as the phash row.
     "multimodal_dedup_ahash" ->
       """SELECT doc_id AS d1, (doc_id + 10000000)::BIGINT AS d2, 0 AS hamming

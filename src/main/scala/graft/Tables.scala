@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import scala.util.control.NonFatal
 
+import graft.sources.Layout
+
 /** Catalog over the driver-provided parquet tables (TESTDATA.md).
   *
   * Mirrors the reference's directory-as-catalog model
@@ -100,12 +102,13 @@ object Tables {
 
   /** Read + materialize tables into the Spark cache (bench use:
     * separates one-time load cost from per-query compute cost).
-    * `except` names stay uncached: scans over a row-based
-    * InMemoryRelation lose the vectorized parquet reader, which is a
-    * measured loss for the array-heavy documents/embeddings pipelines
-    * ("cache aggregates, not sort inputs" — BIGBENCH.md). */
+    * `except` names stay uncached, by default the corpus tables:
+    * scans over a row-based InMemoryRelation lose the vectorized
+    * parquet reader, which is a measured loss for the array-heavy
+    * documents/embeddings pipelines ("cache aggregates, not sort
+    * inputs" — BIGBENCH.md). */
   def preload(spark: SparkSession, dir: String,
-              except: Set[String] = Set.empty): Unit = {
+              except: Set[String] = Set("documents", "embeddings")): Unit = {
     sweepStopped()
     all.filterNot(except).foreach { n =>
       try {
@@ -121,7 +124,7 @@ object Tables {
         // file's size, not a fixed table list, so it scales with the
         // data and the dims stay single-partition.
         val raw = load(spark, dir, n)
-        val big = new java.io.File(s"$dir/$n.parquet").length() > (1L << 20)
+        val big = Layout.parquetBytes(spark, s"$dir/$n.parquet") > (1L << 20)
         val df = (if (big) raw.repartition(spark.sparkContext.defaultParallelism)
                   else raw).cache()
         df.count() // force materialization

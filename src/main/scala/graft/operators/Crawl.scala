@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.Layout
 
 /** The crawl FRONT END — the stages a web corpus passes through
   * before it ever becomes the `documents` table the rest of the
@@ -642,7 +643,7 @@ object Crawl {
     * are self-contained and blobs are bounded per chunk. */
   private def seamSpread(spark: SparkSession, dir: String)(
       df: DataFrame): DataFrame = {
-    val bytes = new java.io.File(s"$dir/documents.parquet").length()
+    val bytes = Layout.parquetBytes(spark, s"$dir/documents.parquet")
     val width = math.min(spark.sparkContext.defaultParallelism.toLong,
       bytes >> 20).toInt
     if (width > 1) df.repartition(width) else df

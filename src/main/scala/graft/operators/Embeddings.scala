@@ -646,9 +646,10 @@ object Embeddings {
     *    nearest (unit) centroid — how well cells explain the data.
     *    THE routing signal: IVF recall is the bet that a vector's
     *    neighbors share its top cells, which holds exactly when cells
-    *    are tight. Measured (ClusterednessProbe, this host, light
-    *    capped fit): uniform hash corpus 0.51 at 100k, driver tables
-    *    0.48–0.55, vs 0.93 on the 1000-center mixture and 0.99 on the
+    *    are tight. Measured (the `tools.ClusterednessProbe` main,
+    *    source at commit f4abc46, at local[16]; light capped fit):
+    *    uniform hash corpus 0.51 at 100k, driver tables 0.48–0.55,
+    *    vs 0.93 on the 1000-center mixture and 0.99 on the
     *    spec's 10-cluster fixture — a ≥0.37 gap at every scale
     *    probed.
     *  - `margin`: mean (cos to 1st − cos to 2nd centroid). Reported
@@ -1005,7 +1006,8 @@ object Embeddings {
     * m bytes/vector instead of 4·d), then the top `k·candFactor` PQ
     * survivors per query are re-scored with their exact embeddings.
     * Raw PQ ranking alone reads 0.28–0.62 recall@10 on the driver's
-    * structureless corpus (measured, `tools.PqProbe` — 32× compression
+    * structureless corpus (measured by the `tools.PqProbe` main, source
+    * at commit f4abc46 — 32× compression
     * cannot preserve a 0.25-over-σ ranking margin); routing only the
     * FINAL ranking through exact vectors restores recall while the
     * full-corpus pass still runs on codes. */
@@ -1594,7 +1596,8 @@ object Embeddings {
     * and let the DuckDB oracle state those constants. The learned
     * fits are deterministic (hash-sampled, seeded by the data), so
     * mean recall is a fixed number per corpus; each bar sits under
-    * the tri-scale measured minimum with margin (tools.GateProbe:
+    * the tri-scale measured minimum with margin (the `tools.GateProbe`
+    * main, source at commit f4abc46:
     * ivf 0.93/0.93/0.94, pq 0.89/0.92/0.68, ivfpq 0.91/0.88/0.69 at
     * sf0.001/0.01/0.1), while a cell-routing, codebook, LUT, or
     * rerank bug crushes recall toward k/n ≈ 0.005 and flips the
@@ -1691,8 +1694,9 @@ object Embeddings {
     *    components breaks it.
     *
     * A recall bar is deliberately absent: 16/64 dims of this
-    * hash-uniform corpus retains only 0.11–0.27 recall@10 (GateProbe,
-    * the honest cost of truncating structureless data), so retrieval
+    * hash-uniform corpus retains only 0.11–0.27 recall@10 (the
+    * `tools.GateProbe` main at commit f4abc46; the honest cost of
+    * truncating structureless data), so retrieval
     * quality is pinned by EmbeddingsSpec's planted-subspace fixture
     * and the `embed_pca_planted` clone row instead. */
   def embedPcaGate(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
@@ -1728,8 +1732,8 @@ object Embeddings {
 
   /** Mean recall of `approx` against `exact` (both `(q_id, vec_id)`
     * top-k frames). Driver-side collect — a measurement utility for
-    * the quality specs and `tools.PqProbe`, shared so the bar-setting
-    * probe and the enforcing spec are the same computation. */
+    * the quality specs; the `tools.PqProbe` main (source at commit
+    * f4abc46) set the PQ bar with this same computation. */
   def recallAt(exact: DataFrame, approx: DataFrame): Double = {
     def byQuery(df: DataFrame): Map[Long, Set[Long]] =
       df.select("q_id", "vec_id").collect()

@@ -1196,8 +1196,9 @@ object Multimodal {
     * (floor-of-floor identity above), so each planted pair sits at
     * Hamming 0 — closed-form rank for the oracle — while the measured
     * background separation is wide: the nearest non-planted pair among
-    * the hash-textured images is Hamming 14 (tools.GateProbe; the
-    * doc_id-only fixture is identical at every sf), so the ≤ 4 gate
+    * the hash-textured images is Hamming 14 (measured by the
+    * `tools.GateProbe` main, source at commit f4abc46; the doc_id-only
+    * fixture is identical at every sf), so the ≤ 4 gate
     * cannot admit a false pair on any driver corpus.
     *
     * Pair generation reuses [[Documents.simhashPairs]]' banded Hamming
@@ -1213,10 +1214,8 @@ object Multimodal {
 
   /** The (doc_id, simhash=dHash64) signature frame behind
     * [[multimodalDedupPhash]]: generate → decode → hash, with the 2×
-    * re-encoded clones planted for doc_id < 10. Exposed so the
-    * separation probe and the spec measure the SAME signatures the
-    * registered query joins. */
-  def phashSigs(spark: SparkSession, dir: String, limit: Long = 500L): DataFrame = {
+    * re-encoded clones planted for doc_id < 10. */
+  private def phashSigs(spark: SparkSession, dir: String, limit: Long = 500L): DataFrame = {
     import spark.implicits._
     mediaIds(spark, dir, limit)
       .mapPartitions { it =>
@@ -1292,9 +1291,10 @@ object Multimodal {
     * the identity and each planted pair sits at Hamming 0 in closed
     * form, while a JPEG→JPEG recompression stays the spec-measured
     * approximate contract. Background floor through the full lossy
-    * pipe: min non-planted Hamming 13 at 300 images
-    * (tools.JpegProbe; the doc_id-only fixture is identical at every
-    * sf), so the ≤ 4 gate admits exactly the planted pairs. */
+    * pipe: min non-planted Hamming 13 at 300 images (measured by the
+    * `tools.JpegProbe` main, source at commit f4abc46; the doc_id-only
+    * fixture is identical at every sf), so the ≤ 4 gate admits exactly
+    * the planted pairs. */
   def multimodalDedupPhashJpeg(spark: SparkSession, dir: String,
                                limit: Long = 500L, maxHamming: Int = 4): DataFrame =
     sigPairs(jpegSigs(spark, dir, limit), maxHamming)
@@ -1488,8 +1488,9 @@ object Multimodal {
     * put the SOF2 decode path (spectral selection, EOB runs,
     * correction bits) on the oracle-verified path for half the corpus
     * at every sf; the texture content equals the jpeg tier's, so the
-    * measured background floor (min non-planted Hamming 13,
-    * tools.JpegProbe) keeps false pairs out of the ≤ 4 gate. */
+    * measured background floor (min non-planted Hamming 13, the
+    * `tools.JpegProbe` main at commit f4abc46) keeps false pairs out of
+    * the ≤ 4 gate. */
   def multimodalDedupJpegProgressive(spark: SparkSession, dir: String,
                                      limit: Long = 500L, maxHamming: Int = 4): DataFrame =
     sigPairs(jpegProgSigs(spark, dir, limit), maxHamming)
@@ -1678,9 +1679,10 @@ object Multimodal {
     * byte codec (a real resample artifact, not a signature copy). The
     * floor-of-floor identity above puts each planted pair at Hamming 0
     * — closed-form for the oracle — while hash-textured samples give
-    * the background binomial-tail separation (tools.GateProbe
-    * measures the min non-planted distance; the doc_id-only fixture is
-    * identical at every sf), so the ≤ 4 gate cannot admit a false
+    * the background binomial-tail separation (the min non-planted
+    * distance was measured by the `tools.GateProbe` main, source at
+    * commit f4abc46; the doc_id-only fixture is identical at every
+    * sf), so the ≤ 4 gate cannot admit a false
     * pair. Pair generation reuses [[Documents.simhashPairs]]' banded
     * Hamming join — an aHash IS a 64-bit locality signature, the same
     * inheritance as [[multimodalDedupPhash]]. */
@@ -1690,10 +1692,8 @@ object Multimodal {
 
   /** The (doc_id, simhash=aHash64) signature frame behind
     * [[multimodalDedupAhash]]: generate → decode → hash, with 2×
-    * frame-duplication clones planted for doc_id < 10. Exposed so the
-    * separation probe and the spec measure the SAME signatures the
-    * registered query joins. */
-  def ahashSigs(spark: SparkSession, dir: String, limit: Long = 500L): DataFrame = {
+    * frame-duplication clones planted for doc_id < 10. */
+  private def ahashSigs(spark: SparkSession, dir: String, limit: Long = 500L): DataFrame = {
     import spark.implicits._
     mediaIds(spark, dir, limit)
       .mapPartitions { it =>

@@ -33,6 +33,11 @@ object Relational {
     * oracle on a non-UTC host. */
   private def ts(s: String): Column = to_timestamp(lit(s))
 
+  /** Half-up to cents as `floor(x·100 + 0.5)/100`, the same IEEE ops as
+    * the oracle SQL: on an exact half cent Spark's and DuckDB's
+    * `round(x, 2)` disagree, identical fp ops on the same double cannot. */
+  private def cents(c: Column): Column = floor(c * 100 + lit(0.5)) / 100
+
   // ---- SampleTest query shapes (reference golden suite, SURVEY §5) ----
 
   /** query1 shape: equi join + pushed filter + ungrouped AVG
@@ -1133,12 +1138,12 @@ object Relational {
       .filter(col("l_shipdate") <= ts("1998-09-02 00:00:00"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
+        cents(sum(col("l_quantity"))).as("sum_qty"),
+        cents(sum(col("l_extendedprice"))).as("sum_base_price"),
+        cents(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
           .as("sum_disc_price"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * (lit(1.0) + col("l_tax"))), 2).as("sum_charge"),
+        cents(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+          * (lit(1.0) + col("l_tax")))).as("sum_charge"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         round(avg(col("l_extendedprice")), 4).as("avg_price"),
         round(avg(col("l_discount")), 4).as("avg_disc"),
@@ -1233,7 +1238,7 @@ object Relational {
       .join(orders, lineitem("l_orderkey") === orders("o_orderkey"))
       .join(customer, orders("o_custkey") === customer("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
+      .agg(cents(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
         .as("revenue"))
       .orderBy(col("revenue").desc, col("l_orderkey").asc)
       .limit(10)
@@ -1260,7 +1265,7 @@ object Relational {
       .join(broadcast(nation), supplier("s_nationkey") === nation("n_nationkey"))
       .join(broadcast(region), nation("n_regionkey") === region("r_regionkey"))
       .groupBy(nation("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
+      .agg(cents(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
         .as("revenue"))
       .orderBy(col("revenue").desc, col("n_name").asc)
   }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.io.File
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,18 +90,8 @@ object Layout {
     *    values across tasks and re-fragment the output). */
   def compact(spark: SparkSession, srcDir: String, destDir: String,
               targetBytes: Long = 128L * 1024 * 1024): Int = {
-    import org.apache.hadoop.fs.Path
     val srcPath = new Path(srcDir)
     val fs = srcPath.getFileSystem(spark.sessionState.newHadoopConf())
-    def parquetBytes(p: Path): Seq[Long] = {
-      val it = fs.listFiles(p, true) // recursive: partitioned/nested dirs
-      val b = Seq.newBuilder[Long]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.getPath.getName.endsWith(".parquet")) b += s.getLen
-      }
-      b.result()
-    }
     // Hive partition columns, outermost first: each level of a
     // partitioned layout is a rank of `col=value` directories
     def partitionCols(p: Path): List[String] =
@@ -111,7 +100,7 @@ object Layout {
         case Some(child) => child.getName.takeWhile(_ != '=') :: partitionCols(child)
         case None => Nil
       }
-    val totalBytes = parquetBytes(srcPath).sum
+    val totalBytes = parquetBytes(spark, srcDir)
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(srcDir)
     val parts = partitionCols(srcPath)
@@ -120,7 +109,26 @@ object Layout {
     else
       df.repartition(nFiles, parts.map(df.col): _*)
         .write.mode("overwrite").partitionBy(parts: _*).parquet(destDir)
-    parquetBytes(new Path(destDir)).size
+    parquetFileSizes(spark, destDir).size
+  }
+
+  /** Total bytes of the `.parquet` files at `path` — one file, or a
+    * directory listed RECURSIVELY through the Hadoop FileSystem (a
+    * `java.io.File` length is a directory inode's size there, and
+    * works on the local FS only). */
+  def parquetBytes(spark: SparkSession, path: String): Long =
+    parquetFileSizes(spark, path).sum
+
+  private def parquetFileSizes(spark: SparkSession, path: String): Seq[Long] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listFiles(p, true) // recursive: partitioned/nested dirs
+    val b = Seq.newBuilder[Long]
+    while (it.hasNext) {
+      val s = it.next()
+      if (s.getPath.getName.endsWith(".parquet")) b += s.getLen
+    }
+    b.result()
   }
 
   /** 2-D Morton (Z-order) interleave: bit i of `a` lands at position

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Caches, GraftSession, SparkEntry, Tables}
+import graft.Bench
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -18,27 +18,18 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("agg_avg")
     val warmRuns = args.lift(1).map(_.toInt).getOrElse(1)
-    val sfDir = args.lift(2).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.preload(spark, sfDir, except = Set("documents", "embeddings"))
-
-    def run(): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val sfDir = args.lift(2).getOrElse(Bench.envSfDir)
+    val (spark, _) = Bench.session(sfDir)
+    def run(): Double = Bench.runOnce(spark, sfDir, name)
     for (i <- 1 to warmRuns) println(f"[profile] warm-up $i: ${run()}%.3f s")
 
     case class StageRec(stageId: Int, name: String, nTasks: Int,
                         submit: Long, complete: Long,
-                        taskMs: mutable.ArrayBuffer[Long],
-                        var shufRead: Long, var shufWrite: Long,
-                        var input: Long, var spill: Long)
+                        shufRead: Long, shufWrite: Long, input: Long, spill: Long)
     val stages = mutable.LinkedHashMap.empty[Int, StageRec]
+    // task-end events can arrive before stage-completed, so durations
+    // are gathered per stage id on their own
+    val taskMs = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
     val jobs = mutable.ArrayBuffer.empty[(Int, Long, Long)] // id, start, end
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -50,35 +41,20 @@ object ProfileQuery {
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
+        val m = si.taskMetrics
+        val done = si.completionTime.getOrElse(System.currentTimeMillis())
         stages.synchronized {
-          val r = stages.getOrElseUpdate(si.stageId, StageRec(
-            si.stageId, si.name, si.numTasks,
-            si.submissionTime.getOrElse(0L), si.completionTime.getOrElse(0L),
-            mutable.ArrayBuffer.empty, 0L, 0L, 0L, 0L))
-          r.shufRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
-          r.shufWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
-          r.input += si.taskMetrics.inputMetrics.bytesRead
-          r.spill += si.taskMetrics.diskBytesSpilled
+          stages(si.stageId) = StageRec(si.stageId, si.name, si.numTasks,
+            si.submissionTime.getOrElse(done), done,
+            m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+            m.inputMetrics.bytesRead, m.diskBytesSpilled)
         }
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         stages.synchronized {
-          stages.get(e.stageId).foreach(_.taskMs += e.taskInfo.duration)
+          taskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty) += e.taskInfo.duration
         }
     }
-    // task-end events can arrive before stage-completed; register stage
-    // shells on submit so onTaskEnd always has a home
-    val preListener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        val si = e.stageInfo
-        stages.synchronized {
-          stages.getOrElseUpdate(si.stageId, StageRec(
-            si.stageId, si.name, si.numTasks, 0L, 0L,
-            mutable.ArrayBuffer.empty, 0L, 0L, 0L, 0L))
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(preListener)
     spark.sparkContext.addSparkListener(listener)
     val wall = run()
     Thread.sleep(500) // let the async listener bus drain
@@ -88,10 +64,10 @@ object ProfileQuery {
     println(f"${"stage"}%6s ${"tasks"}%5s ${"wall_ms"}%8s ${"sum_ms"}%8s ${"max_ms"}%7s ${"med_ms"}%7s ${"in_MB"}%8s ${"sr_MB"}%8s ${"sw_MB"}%8s ${"spill"}%8s  name")
     val rows = stages.values.toSeq.sortBy(r => -(r.complete - r.submit))
     rows.foreach { r =>
-      val ts = r.taskMs.sorted
+      val ts = taskMs.getOrElse(r.stageId, mutable.ArrayBuffer.empty[Long]).sorted
       val med = if (ts.isEmpty) 0L else ts(ts.size / 2)
       val mx = if (ts.isEmpty) 0L else ts.last
-      val wallMs = if (r.complete > r.submit) r.complete - r.submit else 0L
+      val wallMs = r.complete - r.submit
       println(f"${r.stageId}%6d ${r.nTasks}%5d $wallMs%8d ${ts.sum}%8d $mx%7d $med%7d ${mb(r.input)} ${mb(r.shufRead)} ${mb(r.shufWrite)} ${mb(r.spill)}  ${r.name.take(80)}")
     }
     val jobWall = jobs.collect { case (_, s, e1) if e1 > 0 => e1 - s }.sum

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Caches, GraftSession, SparkEntry, Tables}
+import graft.{Bench, Caches}
 
 /** Single-query timing probe: run one registered query N times under
   * the same session/preload regime as [[graft.Bench]] and print each
@@ -16,18 +16,11 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("dedup_simhash")
     val runs = args.lift(1).map(_.toInt).getOrElse(5)
-    val sfDir = args.lift(2).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val sfDir = args.lift(2).getOrElse(Bench.envSfDir)
     val release = args.contains("--release")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.preload(spark, sfDir, except = Set("documents", "embeddings"))
+    val (spark, _) = Bench.session(sfDir)
     for (i <- 1 to runs) {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = Bench.runOnce(spark, sfDir, name)
       println(f"[timequery] $name run $i: $t%.3f s")
       if (release) Caches.release(spark)
     }

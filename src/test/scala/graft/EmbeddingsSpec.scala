@@ -370,14 +370,15 @@ class EmbeddingsSpec extends SparkSuite {
 
   test("annPq (PQ pre-filter + exact rerank) recall@10 >= 0.9 vs brute force") {
     // default m=8 × 16 codewords = 8 bytes/vector (32× compression);
-    // measured 0.94 at sf0.01 via tools.PqProbe — raw PQ ranking alone
+    // measured 0.94 at sf0.01 via the tools.PqProbe main (source at
+    // commit f4abc46) — raw PQ ranking alone
     // reads 0.28 on this structureless corpus, the exact rerank is
     // what restores the contract.
     val emb = Tables.load(spark, SparkSpec.sfSmall, "embeddings")
       .select("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    // recallAt is the SAME computation tools.PqProbe used to set this bar
+    // recallAt is the SAME computation the PqProbe main used to set this bar
     val recall = Embeddings.recallAt(
       Embeddings.knnBrute(emb, queries, k = 10),
       Embeddings.annPq(emb, col("vec_id") < 10, k = 10))

@@ -86,6 +86,13 @@ class LayoutSpec extends SparkSuite {
         .map(_.getName).toSet
     val fragCount = parquetFiles(frag).size
     assert(fragCount > langDirs(frag).size, s"fragmentation precondition: $fragCount")
+    // the sizing behind compaction, Tables.preload and the crawl seam:
+    // a directory-backed table sums every nested part file (a File
+    // length would read the directory inode), a single file is its length
+    val fragBytes = parquetFiles(frag).map(_.length).sum
+    assert(fragBytes > 0 && Layout.parquetBytes(spark, frag) === fragBytes)
+    val single = new java.io.File(SparkSpec.sfTiny, "documents.parquet")
+    assert(single.isFile && Layout.parquetBytes(spark, single.getPath) === single.length)
     val outCount = Layout.compact(spark, frag, compacted)
     // the partitioned layout SURVIVES the rewrite (pruning is the
     // point of the layout) and each value's litter collapses to one file

@@ -34,6 +34,11 @@ class TypedCsvSpec extends SparkSuite {
     new File(dest, "SampleTest")
   }
 
+  /** In-repo typed-CSV catalog (`Employees.csv`, 4 rows) for the
+    * round-trip tests, which use the reference fixture only as input. */
+  private lazy val employeesDir: File =
+    new File(getClass.getResource("/typedcsv").toURI)
+
   private def readCsv(f: File): Seq[Array[String]] = {
     val src = scala.io.Source.fromFile(f)
     try src.getLines().map(_.split(",", -1)).toList finally src.close()
@@ -88,7 +93,7 @@ class TypedCsvSpec extends SparkSuite {
     // the session lifecycle: catalog → SQL → typed sink → reload must
     // preserve column names AND types, like the reference sink
     // (`table.cpp:540-575`).
-    TypedCsv.loadDirectory(spark, new File(base, "data").getPath)
+    TypedCsv.loadDirectory(spark, employeesDir.getPath)
     val result = spark.sql(
       "SELECT Name, Salary * 2 AS doubled, JoinedDate FROM Employees ORDER BY Name")
     val out = new File("target/sampletest-spec/cli_roundtrip.csv")
@@ -157,7 +162,7 @@ class TypedCsvSpec extends SparkSuite {
   }
 
   test("typed-header sink round-trips") {
-    val df = TypedCsv.loadFile(spark, new File(base, "data/Employees.csv").getPath)
+    val df = TypedCsv.loadFile(spark, new File(employeesDir, "Employees.csv").getPath)
     val out = new File("target/sampletest-spec/roundtrip.csv")
     TypedCsv.saveSingleFile(df, out.getPath, typed = true)
     val reloaded = TypedCsv.loadFile(spark, out.getPath)
