@@ -66,6 +66,24 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
 
+  /** The PAIR-RIDING family shares one pair+CC pass per release in
+    * production. Benched in isolation each row re-pays the shared
+    * floor in its warm-up run, and per-row numbers proved
+    * ORDER-sensitive across sweeps (round-13 note in BIGBENCH.md:
+    * dedup_containment swung 0.4 ↔ 3.5 s with identical code). Charge
+    * the floor EXPLICITLY instead: the family runs LAST in this fixed
+    * order with NO release between members — dedup_clusters goes
+    * first and pays the pair pass + connected components (its number
+    * IS the shared floor), every other rider reports its NET cost
+    * against the standing frames, and one release closes the family.
+    * Sweep order can no longer move the floor between rows. `main`
+    * and `tools.BigBenchLlm` both run the family this way. */
+  val pairFamily: Seq[String] = Seq("dedup_clusters", "dedup_ngram_jaccard",
+    "dedup_containment", "dedup_source_matrix", "dedup_keep_list",
+    "dedup_cluster_keep", "dedup_cluster_stats", "corpus_dedup_savings",
+    "corpus_split_leakage", "corpus_split_leakfree")
+    .filter(SparkEntry.queries.contains)
+
   def main(args: Array[String]): Unit = {
     val sfDir = envSfDir
     val (spark, loadS) = session(sfDir)
@@ -96,23 +114,6 @@ object Bench {
       "events_active_users", "events_markov", "events_paths",
       "corpus_dsir", "corpus_dsir_select",
     ).filter(SparkEntry.queries.contains)
-    // The PAIR-RIDING family shares one pair+CC pass per release in
-    // production (BigBench's --shared mode is exactly this contract).
-    // Benched in isolation each row re-pays the shared floor in its
-    // warm-up run, and per-row numbers proved ORDER-sensitive across
-    // sweeps (round-13 note in BIGBENCH.md: dedup_containment swung
-    // 0.4 ↔ 3.5 s with identical code). Charge the floor EXPLICITLY
-    // instead: the family runs LAST in a fixed order with NO release
-    // between members — dedup_clusters goes first and pays the pair
-    // pass + connected components (its number IS the shared floor),
-    // every other rider reports its NET cost against the standing
-    // frames, and one release closes the family. Sweep order can no
-    // longer move the floor between rows.
-    val pairFamily = Seq("dedup_clusters", "dedup_ngram_jaccard",
-      "dedup_containment", "dedup_source_matrix", "dedup_keep_list",
-      "dedup_cluster_keep", "dedup_cluster_stats", "corpus_dedup_savings",
-      "corpus_split_leakage", "corpus_split_leakfree")
-      .filter(SparkEntry.queries.contains)
     // EVERY registered query gets a bench row — the curated order
     // above runs first (stable cross-round comparison), then the rest
     // sorted (minus the pair family, which runs last under the shared

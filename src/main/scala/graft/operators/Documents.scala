@@ -350,7 +350,7 @@ object Documents {
     // materializes during construction (localCheckpoint → fresh
     // LogicalRDDs), so persist()'s semantic-hash dedup can never hit —
     // without the memo each call in a long-lived session (bench
-    // repeats, the --shared rider family past the wave trigger) would
+    // repeats, the pair-riding family past the wave trigger) would
     // re-run every wave and strand another persisted frame. The key
     // carries the full CANONICALIZED plan string, not just its 32-bit
     // semanticHash: a memo hit here returns another corpus's
@@ -2046,7 +2046,7 @@ object Documents {
     // built from localCheckpoints (fresh LogicalRDDs), so persist()'s
     // semantic-hash dedup can never hit — without the memo every
     // cluster-family rider in a shared-pass session (Bench's family
-    // block, BigBench --shared, a production release run) re-pays the
+    // block, BigBenchLlm's family block, a production release run) re-pays the
     // whole star-contraction iteration on the same edge frame.
     //
     // The canonicalized plan STRING alone is NOT a safe key here: a

@@ -1015,7 +1015,8 @@ object Relational {
     * table: the bucketed scan's HashPartitioning(user_id) satisfies
     * the Window's required distribution, so the plan carries NO
     * Exchange — at 100M+ events the shuffle is the dominant cost of
-    * the parquet path (SessionizeBucketBench measures the delta). */
+    * the parquet path (BIGBENCH.md records the delta at 10M and 100M;
+    * LayoutSpec pins the Exchange-free plan). */
   def sessionizeFrame(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
     // gap/duration math on unix_micros (exact integers) — second-level

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{Bench, Caches, GraftSession}
 
 /** Same-scale comparison against BASELINE.md: the reference's published
   * numbers are at 10M rows (README.md:44-62); the driver's sf0.1 data
@@ -61,11 +61,24 @@ object BigBench {
     val cold = queries.map { case (name, q) =>
       name -> timeIt(noop(q(spark.read.parquet(dir))))
     }
-    def jmap(xs: Seq[(String, Double)]) =
-      xs.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString("{", ",", "}")
     println(s"""{"rows":$rows,"end_to_end":${jmap(cold)},"warm_median3":${jmap(warm)}}""")
     spark.stop()
   }
+
+  /** The optional comma-separated query subset in `args(1)`, else every
+    * name in `allNames`; an unknown name fails the run instead of
+    * silently dropping out of the printed line. */
+  private[tools] def selected(args: Array[String], allNames: Seq[String]): Seq[String] =
+    args.lift(1).fold(allNames) { arg =>
+      val names = arg.split(",").toSeq
+      val unknown = names.filterNot(allNames.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      names
+    }
+
+  /** `{"name":seconds,...}` with 3-decimal values, in `xs` order. */
+  private[tools] def jmap(xs: Seq[(String, Double)]): String =
+    xs.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString("{", ",", "}")
 }
 
 /** Scale proof for the events/time tier: synthesizes N events with the
@@ -82,11 +95,17 @@ object BigBench {
   */
 object BigBenchEvents {
   def main(args: Array[String]): Unit = {
+    val allNames = Seq("events_window", "events_json_props", "events_sessionize",
+      "events_funnel", "events_retention", "events_anomaly", "events_resample",
+      "events_active_users", "events_markov", "events_paths",
+      "events_attribution", "events_dedup_window", "group_percentile",
+      "events_ewma", "group_approx_distinct", "events_window_sliding",
+      "join_asof", "join_range", "join_range_capped")
+    val names = BigBench.selected(args, allNames)
     val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
     val dir = s"target/bigbench/events_$rows"
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
 
     if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists()) {
       val users = math.max(rows / 67, 1L) // ~67 events/user, like sf0.01
@@ -106,28 +125,12 @@ object BigBenchEvents {
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
     }
 
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    val allNames = Seq("events_window", "events_json_props", "events_sessionize",
-      "events_funnel", "events_retention", "events_anomaly", "events_resample",
-      "events_active_users", "events_markov", "events_paths",
-      "events_attribution", "events_dedup_window", "group_percentile",
-      "events_ewma", "group_approx_distinct", "events_window_sliding",
-      "join_asof", "join_range", "join_range_capped")
-    val names = args.lift(1).map(_.split(",").toSeq.filter(allNames.contains))
-      .getOrElse(allNames)
     val results = names.map { n =>
-      val t = timeIt(noop(graft.SparkEntry.queries(n)(spark, dir)))
-      graft.Caches.release(spark)
+      val t = Bench.runOnce(spark, dir, n)
+      Caches.release(spark)
       n -> t
     }
-    def jmap(xs: Seq[(String, Double)]) =
-      xs.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString("{", ",", "}")
-    println(s"""{"rows":$rows,"events_end_to_end":${jmap(results)}}""")
+    println(s"""{"rows":$rows,"events_end_to_end":${BigBench.jmap(results)}}""")
     spark.stop()
   }
 }
@@ -144,46 +147,6 @@ object BigBenchEvents {
   */
 object BigBenchLlm {
   def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val dir = s"target/bigbench/llm_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-
-    // embed-tier queries read only embeddings.parquet; an embed-only
-    // subset must not pay (or re-create — the 100M release run
-    // reclaims it) the 15 GB document corpus
-    val embedOnlyNames = Set("dedup_embed_cosine", "dedup_semantic",
-      "dedup_embed_cosine_exact")
-    def needsDocs(n: String): Boolean =
-      !n.startsWith("embed_") && !embedOnlyNames.contains(n)
-    val requestedNames = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("ALL"))
-    val docsNeeded = requestedNames.contains("ALL") || requestedNames.exists(needsDocs)
-    if (docsNeeded &&
-        !new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-      // 40-token docs over a 5k-word vocab; ~0.5% of docs get a planted
-      // near-dup (2 tokens changed) so the dedup outputs are non-empty.
-      val base = spark.range(0, rows, 1, 32).select(col("id").as("doc_id"),
-        array_join(expr(
-          "transform(sequence(0, 39), i -> concat('w', pmod(xxhash64(doc_id, i), 5000)))"),
-          " ").as("text"),
-        concat(lit("l"), pmod(col("id"), lit(5)).cast("string")).as("lang"),
-        concat(lit("s"), pmod(col("id"), lit(50)).cast("string")).as("source"))
-      val dups = base.filter(pmod(col("doc_id"), lit(200)) === 0)
-        .select((col("doc_id") + rows).as("doc_id"),
-          regexp_replace(col("text"), "^w[0-9]+ w[0-9]+ ", "wx wy ").as("text"),
-          col("lang"), col("source"))
-      base.unionAll(dups)
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
-
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
     val allNames = Seq("dedup_exact", "dedup_url", "dedup_simhash", "dedup_simhash_wide",
       "dedup_ngram_jaccard",
       "dedup_minhash", "dedup_embed_cosine", "embed_ann_lsh", "embed_ann_ivf",
@@ -222,8 +185,38 @@ object BigBenchLlm {
       "multimodal_audio_features")
     // optional 2nd arg: comma-separated query subset (re-measuring one
     // operator shouldn't cost a full sweep)
-    val names = args.lift(1).map(_.split(",").toSeq.filter(allNames.contains))
-      .getOrElse(allNames)
+    val names = BigBench.selected(args, allNames)
+    val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
+    val dir = s"target/bigbench/llm_$rows"
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+
+    // embed-tier queries read only embeddings.parquet; an embed-only
+    // subset must not pay (or re-create — the 100M release run
+    // reclaims it) the 15 GB document corpus
+    val embedOnlyNames = Set("dedup_embed_cosine", "dedup_semantic",
+      "dedup_embed_cosine_exact")
+    def needsDocs(n: String): Boolean =
+      !n.startsWith("embed_") && !embedOnlyNames.contains(n)
+    if (names.exists(needsDocs) &&
+        !new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
+      // 40-token docs over a 5k-word vocab; ~0.5% of docs get a planted
+      // near-dup (2 tokens changed) so the dedup outputs are non-empty.
+      val base = spark.range(0, rows, 1, 32).select(col("id").as("doc_id"),
+        array_join(expr(
+          "transform(sequence(0, 39), i -> concat('w', pmod(xxhash64(doc_id, i), 5000)))"),
+          " ").as("text"),
+        concat(lit("l"), pmod(col("id"), lit(5)).cast("string")).as("lang"),
+        concat(lit("s"), pmod(col("id"), lit(50)).cast("string")).as("source"))
+      val dups = base.filter(pmod(col("doc_id"), lit(200)) === 0)
+        .select((col("doc_id") + rows).as("doc_id"),
+          regexp_replace(col("text"), "^w[0-9]+ w[0-9]+ ", "wx wy ").as("text"),
+          col("lang"), col("source"))
+      base.unionAll(dups)
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    }
+
     // embeddings cost as much disk as the documents (64 floats/row);
     // generate them only when the selected subset reads them, with
     // their OWN _SUCCESS gate so a later full run backfills them
@@ -235,265 +228,23 @@ object BigBenchLlm {
         pmod(col("id"), lit(64)).cast("int").as("label"))
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     }
-    // --shared: keep operator-internal persists ACROSS queries — the
-    // measurement mode for the pair-riding family (leakage / leakfree /
-    // cluster-stats / savings), whose production semantics is exactly
-    // one shared pair+CC pass per release: the first row pays the
-    // floor, every rider's number is its true incremental cost. The
-    // default (release between queries) stays the standalone
-    // fresh-plan convention of every other tier.
-    val shared = args.contains("--shared")
     // The pair-riding family shares one pair+CC pass per release in
     // production; benched with per-row release its numbers were
     // ORDER-sensitive across sweeps (round-13 BIGBENCH.md note). Same
     // discipline as graft.Bench: the family runs LAST in fixed order,
     // dedup_clusters pays the shared floor, riders report net cost,
-    // one release closes the family.
-    val pairFamily = Seq("dedup_clusters", "dedup_ngram_jaccard",
-      "dedup_containment", "dedup_source_matrix", "dedup_keep_list",
-      "dedup_cluster_keep", "dedup_cluster_stats", "corpus_dedup_savings",
-      "corpus_split_leakage", "corpus_split_leakfree")
-    val ordered = names.filterNot(pairFamily.contains) ++
-      pairFamily.filter(names.contains)
+    // one release closes the family. Every other query is a fresh-plan
+    // end-to-end run followed by a release of the operator-internal
+    // persists, so the next query starts cold.
+    val ordered = names.filterNot(Bench.pairFamily.contains) ++
+      Bench.pairFamily.filter(names.contains)
     val results = ordered.map { n =>
-      // fresh-plan end-to-end run, then (unless --shared or inside the
-      // pair family) release operator-internal persists so the next
-      // operator starts cold (scoped release, not the old blanket
-      // clearCache which also evicted caller-owned caches)
-      val t = timeIt(noop(graft.SparkEntry.queries(n)(spark, dir)))
-      if (!shared && !pairFamily.contains(n)) graft.Caches.release(spark)
+      val t = Bench.runOnce(spark, dir, n)
+      if (!Bench.pairFamily.contains(n)) Caches.release(spark)
       n -> t
     }
-    graft.Caches.release(spark)
-    def jmap(xs: Seq[(String, Double)]) =
-      xs.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString("{", ",", "}")
-    println(s"""{"rows":$rows,"llm_end_to_end":${jmap(results)}}""")
-    spark.stop()
-  }
-}
-
-/** Scale proof for the Z-order layout pass: synthesizes N rows with two
-  * independent uniform keys, rewrites them plain (round-robin) and
-  * Morton-clustered ([[graft.sources.Layout.writeZOrdered]]) at the
-  * same file count, and measures (a) the rewrite cost of each and
-  * (b) files touched by a quarter×quarter 2-D window — the pruning
-  * payoff the clustering buys. At a real lake's scale the rewrite is
-  * the once-per-compaction-window price; the files-touched ratio is
-  * what every subsequent 2-D query saves.
-  *
-  * Emits one JSON line; results are recorded in BIGBENCH.md.
-  */
-/** TPC-H Q1 at reference scale: synthesizes a 10M-row lineitem-shaped
-  * table (hash-derived, deterministic — same technique as the other
-  * BigBench tiers) and times the registered `tpch_q1_pricing` query
-  * END-TO-END from parquet and warm (median of 3). Q1 is the
-  * scan-aggregate yardstick: one pushed date filter, a 6-group hash
-  * aggregate with 8 aggregates — scan-bound by construction, so the
-  * number is effectively "how fast does the engine read and fold
-  * 10M × 7 columns". Emits one JSON line for BIGBENCH.md. */
-object TpchQ1Bench {
-  def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val dir = s"target/bigbench/tpch_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-
-    if (!new java.io.File(s"$dir/lineitem.parquet/_SUCCESS").exists()) {
-      val baseUs = 788918400000000L // 1995-01-01 UTC
-      val spanUs = 6L * 365 * 86400 * 1000000 // ~6 years, like the testdata
-      spark.range(0, rows, 1, 32).select(
-        col("id").as("l_orderkey"),
-        element_at(array(lit("A"), lit("N"), lit("R")),
-          (pmod(xxhash64(col("id")), lit(3)) + 1).cast("int")).as("l_returnflag"),
-        element_at(array(lit("F"), lit("O")),
-          (pmod(xxhash64(col("id"), lit(1)), lit(2)) + 1).cast("int")).as("l_linestatus"),
-        (pmod(xxhash64(col("id"), lit(2)), lit(50)) + 1).cast("double").as("l_quantity"),
-        (pmod(xxhash64(col("id"), lit(3)), lit(10000000)) / lit(100.0)).as("l_extendedprice"),
-        (pmod(xxhash64(col("id"), lit(4)), lit(11)) / lit(100.0)).as("l_discount"),
-        (pmod(xxhash64(col("id"), lit(5)), lit(9)) / lit(100.0)).as("l_tax"),
-        timestamp_micros(lit(baseUs) + pmod(xxhash64(col("id"), lit(6)), lit(spanUs)))
-          .as("l_shipdate"))
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    }
-
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def q(): org.apache.spark.sql.DataFrame =
-      graft.SparkEntry.queries("tpch_q1_pricing")(spark, dir)
-
-    val e2e = timeIt(noop(q()))
-    val warm = { timeIt(noop(q())); Seq.fill(3)(timeIt(noop(q()))).sorted.apply(1) }
-    println(s"""{"rows":$rows,"tpch_q1_end_to_end_s":${f"$e2e%.3f"},"tpch_q1_warm_s":${f"$warm%.3f"}}""")
-    spark.stop()
-  }
-}
-
-/** Physical-layout proof for the one data-linear events query:
-  * `events_sessionize` at 100M rows is sort-bound — the full-table
-  * Exchange on user_id before the Window is the scale cost. Writing
-  * the events bucketed by user_id pays that shuffle ONCE at layout
-  * time; every subsequent sessionize (and funnel, paths, ewma — any
-  * user_id-windowed query) plans with NO Exchange, because the
-  * bucketed scan's HashPartitioning(user_id) already satisfies the
-  * Window's required distribution. This main synthesizes the same
-  * events as BigBenchEvents (shared dir — reuses its parquet),
-  * measures sessionize over (a) plain parquet and (b) the bucketed
-  * table, asserts the bucketed executed plan is Exchange-free, and
-  * emits one JSON line for BIGBENCH.md. */
-object SessionizeBucketBench {
-  def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val dir = s"target/bigbench/events_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-
-    if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists()) {
-      val users = math.max(rows / 67, 1L)
-      val baseUs = 1704067200000000L
-      val spanUs = 30L * 86400 * 1000000
-      spark.range(0, rows, 1, 32).select(
-        col("id").as("event_id"),
-        timestamp_micros(lit(baseUs) + pmod(xxhash64(col("id")), lit(spanUs))).as("ts"),
-        pmod(xxhash64(col("id"), lit(1)), lit(users)).as("user_id"),
-        element_at(
-          array(lit("view"), lit("click"), lit("purchase"), lit("signup"), lit("error")),
-          (pmod(xxhash64(col("id"), lit(2)), lit(5)) + 1).cast("int")).as("event_type"),
-        (pmod(xxhash64(col("id"), lit(3)), lit(10000)) / lit(100.0)).as("value"),
-        concat(lit("{\"k\": "),
-          pmod(xxhash64(col("id"), lit(4)), lit(100)).cast("string"),
-          lit("}")).as("props"))
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    }
-
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    val events = spark.read.parquet(s"$dir/events.parquet")
-    val table = s"events_bucketed_$rows"
-    val tLayout = timeIt(
-      graft.sources.Layout.writeBucketed(events, table, "user_id", 32))
-
-    val plain = graft.operators.Relational.sessionizeFrame(events)
-    val bucketed = graft.operators.Relational.sessionizeFrame(spark.table(table))
-    // count HASH exchanges only: the final orderBy's rangepartitioning
-    // exchange (tiny — post-aggregate rows) is present in both plans;
-    // the full-table hashpartitioning(user_id) shuffle before the
-    // Window is the one bucketing deletes
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange hashpartitioning".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
-    // warm-up once each (JIT), then median of 3
-    def median3(df: => org.apache.spark.sql.DataFrame): Double = {
-      timeIt(noop(df)); Seq.fill(3)(timeIt(noop(df))).sorted.apply(1)
-    }
-    val tPlain = median3(plain)
-    val tBucketed = median3(bucketed)
-    val (xP, xB) = (exchanges(plain), exchanges(bucketed))
-    assert(xB == 0, s"bucketed sessionize still has $xB Exchange(s)")
-    println(s"""{"rows":$rows,"layout_write_s":${f"$tLayout%.3f"},"sessionize_plain_s":${f"$tPlain%.3f"},"sessionize_bucketed_s":${f"$tBucketed%.3f"},"exchanges_plain":$xP,"exchanges_bucketed":$xB}""")
-    spark.stop()
-  }
-}
-
-/** Closes BIGBENCH.md's "every user_id-windowed query rides the same
-  * layout for free" claim with MEASURED rows: the whole family —
-  * sessionize, funnel, paths, ewma, dedup-window — over (a) plain
-  * parquet and (b) the ONE user_id-bucketed table that
-  * SessionizeBucketBench's layout pays for. For each query it counts
-  * hash exchanges in the executed plan and asserts the bucketed count
-  * matches the expected floor: 0 for the pure-window queries
-  * (HashPartitioning(user_id) satisfies every window's and funnel's
-  * final groupBy's clustered distribution by the subset rule — this
-  * includes the multi-key windows, e.g. dedup-window's
-  * (user_id, event_type, hour)), and 1 for paths, whose residual
-  * exchange is the post-window 125-row path-triple groupBy, not a
-  * data-linear shuffle. Emits one JSON line for BIGBENCH.md. */
-object UserWindowBucketBench {
-  def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val dir = s"target/bigbench/events_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    require(new java.io.File(s"$dir/events.parquet/_SUCCESS").exists(),
-      s"run BigBenchEvents $rows first to synthesize $dir")
-
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    val events = spark.read.parquet(s"$dir/events.parquet")
-    val table = s"events_bucketed_$rows"
-    val layoutS =
-      if (spark.catalog.tableExists(table)) 0.0
-      else timeIt(graft.sources.Layout.writeBucketed(events, table, "user_id", 32))
-
-    import org.apache.spark.sql.DataFrame
-    val family: Seq[(String, DataFrame => DataFrame, Int)] = Seq(
-      ("sessionize", graft.operators.Relational.sessionizeFrame _, 0),
-      ("funnel", graft.operators.Relational.eventsFunnelFrame _, 0),
-      ("ewma", graft.operators.Relational.eventsEwmaFrame _, 0),
-      ("dedup_window", graft.operators.Relational.eventsDedupWindowFrame _, 0),
-      ("paths", graft.operators.Relational.eventsPathsFrame _, 1))
-
-    def exchanges(df: DataFrame): Int =
-      "Exchange hashpartitioning".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
-    def median3(df: => DataFrame): Double = {
-      timeIt(noop(df)); Seq.fill(3)(timeIt(noop(df))).sorted.apply(1)
-    }
-
-    val parts = family.map { case (name, q, expectBucketed) =>
-      val plain = q(events)
-      val bucketed = q(spark.table(table))
-      val tP = median3(plain)
-      val tB = median3(bucketed)
-      val (xP, xB) = (exchanges(plain), exchanges(bucketed))
-      assert(xB == expectBucketed,
-        s"$name: bucketed plan has $xB hash exchange(s), expected $expectBucketed")
-      s""""$name":{"plain_s":${f"$tP%.3f"},"bucketed_s":${f"$tB%.3f"},"exchanges_plain":$xP,"exchanges_bucketed":$xB}"""
-    }
-    println(s"""{"rows":$rows,"layout_write_s":${f"$layoutS%.3f"},${parts.mkString(",")}}""")
-    spark.stop()
-  }
-}
-
-object ZOrderBench {
-  def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(4000000L)
-    val nFiles = args.lift(1).map(_.toInt).getOrElse(64)
-    val dir = s"target/bigbench/zorder_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-
-    val src = spark.range(0, rows, 1, 32).select(col("id"),
-      pmod(xxhash64(col("id")), lit(1000000L)).as("k1"),
-      pmod(xxhash64(col("id"), lit(1)), lit(1000000L)).as("k2"))
-
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val plainDir = s"$dir/plain"; val zDir = s"$dir/zorder"
-    val tPlain = timeIt(src.repartition(nFiles)
-      .write.mode("overwrite").parquet(plainDir))
-    val tZ = timeIt(graft.sources.Layout.writeZOrdered(src, zDir, "k1", "k2", nFiles))
-
-    def touched(d: String): Long = spark.read.parquet(d)
-      .filter(col("k1").between(250000L, 500000L) && col("k2").between(250000L, 500000L))
-      .select(input_file_name()).distinct().count()
-    val (fPlain, fZ) = (touched(plainDir), touched(zDir))
-    println(s"""{"rows":$rows,"n_files":$nFiles,"write_plain_s":${f"$tPlain%.3f"},"write_zorder_s":${f"$tZ%.3f"},"files_touched_plain":$fPlain,"files_touched_zorder":$fZ}""")
+    Caches.release(spark)
+    println(s"""{"rows":$rows,"llm_end_to_end":${BigBench.jmap(results)}}""")
     spark.stop()
   }
 }

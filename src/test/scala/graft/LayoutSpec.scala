@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Relational
 import graft.sources.Layout
 
 /** The co-location contract: a join of two same-bucketed tables must
@@ -48,6 +50,36 @@ class LayoutSpec extends SparkSuite {
       .contains("Exchange hashpartitioning"),
       "differing bucket counts cannot co-locate")
   } }
+
+  /** One user_id-bucketed events table serves the whole user_id-window
+    * family: the bucketed scan's HashPartitioning(user_id) satisfies
+    * every window's (and funnel's final groupBy's) clustered
+    * distribution by the subset rule, multi-key windows such as
+    * dedup-window's (user_id, event_type, hour) included. Paths keeps
+    * one exchange: its post-window path-triple groupBy, not a
+    * data-linear shuffle. Only hash exchanges count — a final orderBy's
+    * range exchange is in both plans. */
+  test("a user_id-bucketed events table plans the window family with no hash exchange") {
+    val events = Tables.load(spark, SparkSpec.sfTiny, "events")
+    Layout.writeBucketed(events, "events_by_user", "user_id", buckets = 8)
+    val bucketed = spark.table("events_by_user")
+    def exchanges(df: DataFrame): Int =
+      "Exchange hashpartitioning".r.findAllIn(df.queryExecution.executedPlan.toString).length
+    val family: Seq[(String, DataFrame => DataFrame, Int)] = Seq(
+      ("sessionize", Relational.sessionizeFrame, 0),
+      ("funnel", Relational.eventsFunnelFrame, 0),
+      ("ewma", Relational.eventsEwmaFrame, 0),
+      ("dedup_window", Relational.eventsDedupWindowFrame, 0),
+      ("paths", Relational.eventsPathsFrame, 1))
+    family.foreach { case (name, q, expected) =>
+      val (plain, onBuckets) = (q(events), q(bucketed))
+      val (xPlain, xBucketed) = (exchanges(plain), exchanges(onBuckets))
+      assert(xBucketed === expected, s"$name: bucketed plan has $xBucketed hash exchange(s)")
+      assert(xPlain > xBucketed, s"$name: plain $xPlain vs bucketed $xBucketed")
+      assert(onBuckets.collect().map(_.toString).sorted === plain.collect().map(_.toString).sorted,
+        s"$name: bucketed rows differ from plain")
+    }
+  }
 
   test("compaction rewrites a many-small-files directory without shuffling") {
     val docs = Tables.load(spark, SparkSpec.sfTiny, "documents")

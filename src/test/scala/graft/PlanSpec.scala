@@ -31,6 +31,17 @@ class PlanSpec extends SparkSuite {
       case _ => false
     }
 
+  test("PLANS.md covers the whole registry: one DumpPlans pick per registered query") {
+    val names = graft.tools.DumpPlans.picks.map(_._1)
+    val registered = SparkEntry.queries.keySet
+    val missing = (registered -- names).toSeq.sorted
+    val extra = (names.toSet -- registered).toSeq.sorted
+    val duplicated = names.diff(names.distinct).distinct
+    assert(missing.isEmpty && extra.isEmpty && duplicated.isEmpty,
+      s"missing: ${missing.mkString(", ")}; not registered: ${extra.mkString(", ")}; " +
+        s"duplicated: ${duplicated.mkString(", ")}")
+  }
+
   test("runtime bloom-filter join pruning engages once scan thresholds allow") {
     // Spark's row-level runtime filtering is ON in GraftSession but
     // gated by a 10 GiB application-side scan threshold — invisible at
