@@ -1,8 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
@@ -32,25 +35,49 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
   * anti join. Exactness is preserved: the filter only prunes the
   * join's input, never decides membership.
   *
+  * ONE PASS PER BATCH: a steady batch runs three SQL executions — the
+  * batch pass, the corpus write and the ledger append. The batch pass
+  * is one aggregate over the persisted, probe-flagged batch: it
+  * materializes the cache, counts the probable hits and builds the
+  * batch's filter over EVERY batch hash. Building over all hashes
+  * rather than only the novel ones sets no extra bit: a hash the anti
+  * join drops is already in the ledger, hence (superset invariant)
+  * already in the standing filter, so the merged filter is exactly
+  * the filter of the ledger's hashes.
+  *
   * The filter is MAINTAINED INCREMENTALLY, not rebuilt: it lives at
   * `<ledger>/_bloom/filter.bf` (underscore-hidden, so the parquet
-  * reader never sees it), each batch merges a filter over its novel
-  * hashes into it (`mergeInPlace` — merging requires identical
-  * geometry), so per-batch filter cost is O(batch), independent of
-  * ledger size. The GEOMETRY GROWS with the ledger: `bloomCapacity`
-  * only seeds the first filter; once the ledger's row count exceeds
-  * the effective capacity (tracked in a `_bloom/capacity` sidecar),
-  * the filter rebuilds at max(4× previous, 2× ledger) — without this
-  * a standing guard's fpp drifts toward 1 as the corpus outgrows a
-  * fixed capacity and the pre-gate silently stops pruning. Rebuild
-  * cost is amortized O(ledger) over the ledger's lifetime (vector-
-  * growth argument). WRITE ORDER IS LOAD-BEARING:
-  * corpus → filter → ledger, so a crash anywhere leaves the filter a
-  * SUPERSET of the ledger — supersets cost false positives (safe);
-  * a subset would hand out false "definitely novel" verdicts and
-  * admit duplicates. A missing filter file (first batch after an
-  * upgrade, manual deletion) falls back to one rebuild scan of the
-  * ledger — same geometry, so later merges stay compatible.
+  * reader never sees it), each batch merges its filter into it
+  * (`mergeInPlace` — merging requires identical geometry), so
+  * per-batch filter cost is O(batch), independent of ledger size.
+  *
+  * The GEOMETRY GROWS with the ledger. `bloomCapacity` only seeds the
+  * first filter, and the default seed is small (2^16 entries, 77 KiB
+  * at fpp 0.01): every batch reads, broadcasts, merges and rewrites
+  * the whole filter, so an oversized seed is paid on every batch. The
+  * effective capacity lives in a `_bloom/capacity` sidecar. SATURATION
+  * is read off the standing filter itself — its expected fpp (from
+  * the share of set bits) above the target `bloomFpp` — so a steady
+  * batch never scans the ledger for a count. A saturated filter
+  * rebuilds from the ledger at max(4× capacity, 2× ledger rows), the
+  * only time the ledger is counted; rebuild cost is amortized
+  * O(ledger) over the ledger's lifetime (vector-growth argument).
+  * Without regrowth a standing guard's fpp drifts toward 1 as the
+  * corpus outgrows a fixed capacity and the pre-gate silently stops
+  * pruning. Spark's aggregate clamps the bits at
+  * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`; once a
+  * filter holds that many bits a rebuild cannot grow it, so a
+  * saturated filter at the clamp stays incremental (it prunes less,
+  * the anti join keeps the answer exact) instead of rescanning the
+  * ledger every batch.
+  *
+  * WRITE ORDER IS LOAD-BEARING: corpus → filter → capacity → ledger,
+  * so a crash anywhere leaves the filter a SUPERSET of the ledger —
+  * supersets cost false positives (safe); a subset would hand out
+  * false "definitely novel" verdicts and admit duplicates. A missing
+  * filter file (first batch after an upgrade, manual deletion) falls
+  * back to one rebuild scan of the ledger — same geometry, so later
+  * merges stay compatible.
   *
   * Failure honesty: a MISSING ledger directory is the expected first
   * batch (empty ledger); any OTHER read failure (IO error, corrupt
@@ -78,51 +105,56 @@ object CorpusIngest {
   val lastProbedRows = new AtomicLong(-1L)
 
   /** How the last batch obtained its pre-gate filter: "first-batch"
-    * (no ledger), "incremental" (persisted filter file), or "rebuilt"
-    * (fallback ledger scan). */
+    * (no ledger), "incremental" (persisted filter file), "rebuilt"
+    * (fallback ledger scan) or "regrown" (saturated filter, or a
+    * geometry mismatch healed, rebuilt from the ledger). */
   val lastFilterSource = new AtomicReference[String]("unset")
 
   private def bloomPath(ledgerDir: String) = new Path(s"$ledgerDir/_bloom/filter.bf")
 
+  /** The ledger's one column; reading it with the schema given skips
+    * the footer-reading schema job on every batch. */
+  private val ledgerSchema = "h STRING"
+
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val jobDescriptionKey = "spark.job.description"
+
   def ingestWithLedger(docs: DataFrame, ledgerDir: String, outDir: String,
                        checkpointDir: String, bloomFpp: Double = 0.01,
-                       bloomCapacity: Long = 1L << 22): StreamingQuery =
+                       bloomCapacity: Long = 1L << 16): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        val sc = spark.sparkContext
         val hashed = batch
           .withColumn("h", md5(col("text").cast("binary")))
           .dropDuplicates("h")
         val ledgerPath = new Path(ledgerDir)
         val fs = ledgerPath.getFileSystem(spark.sessionState.newHadoopConf())
-        // lives until the corpus/ledger writes complete: `novel` is
-        // derived from it, and novel must be CONSISTENT between its two
-        // reads (recomputation against a just-updated ledger would see
-        // its own writes)
+        def readLedger(): DataFrame = spark.read.schema(ledgerSchema).parquet(ledgerDir)
+        // each step's jobs carry its name; the caller's description
+        // comes back afterwards
+        def step[T](description: String)(body: => T): T = {
+          val previous = sc.getLocalProperty(jobDescriptionKey)
+          sc.setJobDescription(description)
+          try body finally sc.setLocalProperty(jobDescriptionKey, previous)
+        }
         // ONE filter-construction path (the distributed aggregate) with
         // ONE explicit geometry: Spark's aggregate clamps numBits at
-        // spark.sql.optimizer.runtime.bloomFilter.maxNumBits and derives
-        // its hash count differently from BloomFilter.create, so mixing
-        // paths (or letting fpp size the bits implicitly) produces
-        // filters mergeInPlace refuses. A filter file written under a
-        // DIFFERENT conf clamp fails the merge; the self-heal below
-        // rebuilds instead of wedging the batch.
-        //
-        // GEOMETRY GROWS WITH THE LEDGER: a standing ingest guard's
-        // corpus is unbounded, and a fixed capacity means fpp → 1 as
-        // the ledger outgrows it — the pre-gate silently stops pruning
-        // (never wrong, just useless). The effective capacity lives in
-        // a `_bloom/capacity` sidecar; when the ledger's (metadata-only)
-        // row count exceeds it, the filter REBUILDS from the ledger at
-        // max(4× previous, 2× ledger) — amortized O(ledger) total over
-        // the ledger's lifetime, like vector growth. The saturation
-        // check reads the PERSISTENT ledger count, not the sidecar, so
-        // a crash that leaves a stale sidecar re-routes to the same
-        // rebuild and self-heals.
+        // maxNumBits and derives its hash count differently from
+        // BloomFilter.create, so mixing paths (or letting fpp size the
+        // bits implicitly) produces filters mergeInPlace refuses. A
+        // filter file written under a DIFFERENT conf clamp fails the
+        // merge; the self-heal below rebuilds instead of wedging the
+        // batch.
+        val maxNumBits =
+          spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong
         def numBitsFor(cap: Long): Long = math.min(
           math.ceil(-cap * math.log(bloomFpp) / (math.log(2) * math.log(2))).toLong,
-          spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong)
+          maxNumBits)
+        def ledgerFilter(ledgerH: DataFrame, cap: Long): BloomFilter =
+          ledgerH.stat.bloomFilter("h", cap, numBitsFor(cap))
         val capPath = new Path(s"$ledgerDir/_bloom/capacity")
         def readCapacity(): Long =
           if (!fs.exists(capPath)) bloomCapacity
@@ -134,68 +166,94 @@ object CorpusIngest {
           }
         var effCapacity = bloomCapacity
         val toRelease = scala.collection.mutable.ListBuffer.empty[DataFrame]
+        // the batch pass: persist the batch frame and run ONE aggregate
+        // over it — it materializes the cache, counts the probable hits
+        // and builds the batch filter over every batch hash (the same
+        // aggregate stat.bloomFilter runs, so the filters merge). Null
+        // filter bytes mean the batch held no hash.
+        def batchPass(frame: DataFrame, probable: Column): (Long, Option[BloomFilter]) = {
+          frame.persist(); toRelease += frame
+          val bloomAgg = new BloomFilterAggregate(ColumnBridge.expression(col("h")),
+            Literal(effCapacity), Literal(numBitsFor(effCapacity)))
+          val row = step("ledger: batch pass") {
+            frame.agg(count_if(probable),
+              ColumnBridge.column(bloomAgg.toAggregateExpression())).head()
+          }
+          (row.getLong(0), Option(row.getAs[Array[Byte]](1)).map(BloomFilter.readFrom))
+        }
         try {
-          val (novel, standing) =
+          // `novel` lives until the corpus/ledger writes complete: it
+          // must be CONSISTENT between its two reads (recomputation
+          // against a just-updated ledger would see its own writes)
+          val (novel, standing, batchFilter) =
             if (!fs.exists(ledgerPath)) { // first batch: no ledger yet
-              lastProbedRows.set(0L)
               lastFilterSource.set("first-batch")
-              (hashed, None: Option[BloomFilter])
+              val (probed, filter) = batchPass(hashed, lit(false))
+              lastProbedRows.set(probed)
+              (hashed, None: Option[BloomFilter], filter)
             } else {
-              val ledger = spark.read.parquet(ledgerDir).select("h")
+              val ledger = readLedger()
               val bp = bloomPath(ledgerDir)
               effCapacity = readCapacity()
-              // parquet footer row count — metadata-only, no data scan
-              val ledgerRows = ledger.count()
-              val filter =
-                if (ledgerRows > effCapacity) {
-                  effCapacity = math.max(effCapacity * 4, ledgerRows * 2)
-                  lastFilterSource.set("regrown")
-                  ledger.stat.bloomFilter("h", effCapacity, numBitsFor(effCapacity))
-                } else if (fs.exists(bp)) {
+              val loaded =
+                if (fs.exists(bp)) {
                   val in = fs.open(bp)
                   try { lastFilterSource.set("incremental"); BloomFilter.readFrom(in) }
                   finally in.close()
                 } else {
                   lastFilterSource.set("rebuilt")
-                  ledger.stat.bloomFilter("h", effCapacity, numBitsFor(effCapacity))
+                  step("filter rebuild")(ledgerFilter(ledger, effCapacity))
                 }
-              val bloomBc = spark.sparkContext.broadcast(filter)
+              // saturation is read off the filter, not a ledger count;
+              // at the maxNumBits clamp no rebuild adds bits, so the
+              // filter stays incremental rather than rescan every batch.
+              // A stale (smaller) sidecar after a crash between the
+              // filter and capacity writes shows up as a geometry
+              // mismatch at the merge, which the heal below rebuilds.
+              val filter =
+                if (loaded.expectedFpp() > bloomFpp && loaded.bitSize() < maxNumBits)
+                  step("filter regrow") {
+                    effCapacity = math.max(effCapacity * 4, ledger.count() * 2)
+                    lastFilterSource.set("regrown")
+                    ledgerFilter(ledger, effCapacity)
+                  }
+                else loaded
+              val bloomBc = sc.broadcast(filter)
               val mightContain = udf((h: String) => bloomBc.value.mightContain(h))
               val flagged = hashed.withColumn("probable", mightContain(col("h")))
-              flagged.persist(); toRelease += flagged
+              val (probed, batchFilter) = batchPass(flagged, col("probable"))
+              lastProbedRows.set(probed)
               val probable = flagged.filter(col("probable")).drop("probable")
-              lastProbedRows.set(probable.count())
-              (flagged.filter(!col("probable")).drop("probable")
-                .unionByName(probable.join(ledger, Seq("h"), "left_anti")),
-                Some(filter))
+              val novel = flagged.filter(!col("probable")).drop("probable")
+                .unionByName(probable.join(ledger, Seq("h"), "left_anti"))
+              novel.persist(); toRelease += novel
+              (novel, Some(filter), batchFilter)
             }
-          novel.persist(); toRelease += novel
-          ReplaySafeSink.writeBatch(novel.drop("h"), outDir,
-            RunToken.of(spark, checkpointDir), batchId)
-          // merge the batch's novel hashes into the standing filter and
-          // persist it BEFORE the ledger append (superset invariant)
-          val batchFilter =
-            novel.stat.bloomFilter("h", effCapacity, numBitsFor(effCapacity))
+          step("corpus write") {
+            ReplaySafeSink.writeBatch(novel.drop("h"), outDir,
+              RunToken.of(spark, checkpointDir), batchId)
+          }
+          // merge the batch filter into the standing filter and persist
+          // it BEFORE the ledger append (superset invariant)
           val merged =
-            try { standing.foreach(batchFilter.mergeInPlace); batchFilter }
+            try batchFilter.map { f => standing.foreach(f.mergeInPlace); f }.orElse(standing)
             catch { case _: Exception =>
               // geometry drift (conf clamp change, torn regrow): heal by
               // rebuilding from ledger ∪ novel at the effective geometry
               // — still a superset of the post-append ledger
               lastFilterSource.set("regrown")
-              val ledgerH =
-                if (fs.exists(ledgerPath))
-                  spark.read.parquet(ledgerDir).select("h")
-                    .unionByName(novel.select("h"))
-                else novel.select("h")
-              ledgerH.stat.bloomFilter("h", effCapacity, numBitsFor(effCapacity))
+              step("filter regrow") {
+                Some(ledgerFilter(readLedger().unionByName(novel.select("h")), effCapacity))
+              }
             }
-          writeFilter(fs, bloomPath(ledgerDir), merged)
+          merged.foreach(writeFilter(fs, bloomPath(ledgerDir), _))
           // capacity sidecar AFTER the filter: a crash between leaves a
-          // stale (smaller) capacity, which the persistent-ledger-count
-          // saturation check routes back to a rebuild — self-healing
+          // stale (smaller) capacity, whose geometry the next merge
+          // refuses and the heal rebuilds — self-healing
           writeCapacity(fs, capPath, effCapacity)
-          novel.select("h").write.mode(SaveMode.Append).parquet(ledgerDir)
+          step("ledger append") {
+            novel.select("h").write.mode(SaveMode.Append).parquet(ledgerDir)
+          }
         } finally toRelease.foreach(_.unpersist())
         // ledger hygiene on the standing-index cadence: every batch
         // appends part files, and file count alone degraded the probe

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.util.sketch.BloomFilter
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.{col, split}
 import graft.operators.Documents
 import graft.operators.Multimodal
@@ -150,6 +155,145 @@ class CorpusIngestSpec extends SparkSuite {
     assert(CorpusIngest.lastFilterSource.get() === "incremental")
     val after = spark.read.parquet(out).select("text").as[String].collect()
     assert(after.length === 151 && after.count(_ == "fresh") === 1)
+  }
+
+  /** Records the names of the SQL executions that run inside
+    * `during`. A streaming query runs its batches on a clone of the
+    * session taken at start, and the clone copies the listeners
+    * registered by then, so register this before starting the query. */
+  private class ExecutionNames extends QueryExecutionListener {
+    @volatile private var recording = false
+    private val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (recording) seen.add(funcName)
+    def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+      if (recording) seen.add(s"failed: $funcName")
+    def during(body: => Unit): Seq[String] = {
+      ListenerBusDrain(spark.sparkContext)
+      seen.clear(); recording = true
+      try { body; ListenerBusDrain(spark.sparkContext) } finally recording = false
+      seen.asScala.toSeq
+    }
+  }
+
+  private def readFilter(ledger: String): BloomFilter = {
+    val in = new java.io.FileInputStream(s"$ledger/_bloom/filter.bf")
+    try BloomFilter.readFrom(in) finally in.close()
+  }
+
+  private def readCapacity(ledger: String): Long = new String(java.nio.file.Files.readAllBytes(
+    java.nio.file.Paths.get(s"$ledger/_bloom/capacity"))).trim.toLong
+
+  test("a steady ledger batch runs three SQL executions and never counts the ledger") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = new java.io.File("target/corpus-ingest-executions")
+    rm(base)
+    val (ledger, out) = (s"$base/ledger", s"$base/corpus")
+    val stream = MemoryStream[(Long, String)]
+    val names = new ExecutionNames
+    spark.listenerManager.register(names)
+    val steady = try {
+      val q = CorpusIngest.ingestWithLedger(
+        stream.toDF().toDF("doc_id", "text"), ledger, out, s"$base/ckpt")
+      try {
+        stream.addData(Seq((1L, "alpha"), (2L, "beta")))
+        q.processAllAvailable()
+        names.during {
+          stream.addData(Seq((3L, "alpha"), (4L, "gamma"), (5L, "delta"), (6L, "gamma")))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally spark.listenerManager.unregister(names)
+    assert(CorpusIngest.lastFilterSource.get() === "incremental")
+    assert(CorpusIngest.lastProbedRows.get() === 1L) // alpha only
+    // the batch pass, the corpus write and the ledger append — no
+    // probable-hit count, no filter pass over the novel rows, and no
+    // ledger count for the saturation check
+    assert(steady === Seq("head", "command", "command"),
+      s"steady batch ran ${steady.size} executions: $steady")
+    val texts = spark.read.parquet(out).select("text").as[String].collect().sorted
+    assert(texts === Array("alpha", "beta", "delta", "gamma"))
+  }
+
+  test("the persisted filter is bit-identical to a filter built from the ledger alone") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = new java.io.File("target/corpus-ingest-bits")
+    rm(base)
+    val (ledger, out) = (s"$base/ledger", s"$base/corpus")
+    val stream = MemoryStream[(Long, String)]
+    val q = CorpusIngest.ingestWithLedger(
+      stream.toDF().toDF("doc_id", "text"), ledger, out, s"$base/ckpt",
+      bloomCapacity = 1024L)
+    try {
+      stream.addData((0L until 40L).map(i => (i, s"doc-$i")))
+      q.processAllAvailable()
+      // 20 true duplicates of the ledger, an in-batch duplicate, 20 new
+      stream.addData((20L until 60L).map(i => (i + 100, s"doc-$i")) :+ ((200L, "doc-59")))
+      q.processAllAvailable()
+      assert(CorpusIngest.lastFilterSource.get() === "incremental")
+      assert(CorpusIngest.lastProbedRows.get() >= 20L)
+    } finally q.stop()
+    // the batch filter covered every batch hash, the duplicates among
+    // them included; those were already in the standing filter, so
+    // the merge set no bit a ledger-only filter lacks
+    val cap = readCapacity(ledger)
+    val numBits = math.ceil(-cap * math.log(0.01) / (math.log(2) * math.log(2))).toLong
+    val fromLedger = spark.read.parquet(ledger).stat.bloomFilter("h", cap, numBits)
+    assert(spark.read.parquet(ledger).count() === 60L)
+    assert(readFilter(ledger) == fromLedger,
+      "persisted filter must equal the ledger's own filter at the sidecar geometry")
+  }
+
+  test("a saturated filter at the maxNumBits clamp stays incremental; dedup stays exact") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = new java.io.File("target/corpus-ingest-clamp")
+    rm(base)
+    val (ledger, out) = (s"$base/ledger", s"$base/corpus")
+    // the stream runs on a clone of the session taken at start, so the
+    // clamp is set before the query starts
+    val key = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val previous = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    val stream = MemoryStream[(Long, String)]
+    val sources = scala.collection.mutable.ArrayBuffer.empty[String]
+    val names = new ExecutionNames
+    spark.listenerManager.register(names)
+    val clamped = try {
+      // seed capacity 64 (614 bits); one regrow reaches the 1024-bit
+      // clamp, and the filter saturates again after it
+      val q = CorpusIngest.ingestWithLedger(
+        stream.toDF().toDF("doc_id", "text"), ledger, out, s"$base/ckpt",
+        bloomCapacity = 64L)
+      try {
+        def batch(lo: Long, hi: Long, dups: Seq[Long]): Unit = {
+          stream.addData((lo until hi).map(i => (i, s"doc-$i")) ++
+            dups.map(i => (i + 10000L, s"doc-$i")))
+          q.processAllAvailable()
+          sources += CorpusIngest.lastFilterSource.get()
+        }
+        batch(0L, 50L, Nil)
+        batch(50L, 100L, 0L until 50L)
+        batch(100L, 150L, Seq(3L, 77L))
+        batch(150L, 200L, Seq(5L, 120L))
+        names.during(batch(200L, 250L, Seq(7L, 170L)))
+      } finally q.stop()
+    } finally {
+      spark.listenerManager.unregister(names)
+      previous match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+    assert(sources.toSeq === Seq("first-batch", "incremental", "regrown",
+      "incremental", "incremental"))
+    val filter = readFilter(ledger)
+    assert(filter.bitSize() === 1024L)
+    assert(filter.expectedFpp() > 0.01, s"filter should be saturated, fpp ${filter.expectedFpp()}")
+    assert(readCapacity(ledger) === 256L, "the clamped filter must not regrow again")
+    assert(clamped === Seq("head", "command", "command"),
+      s"a clamped saturated batch must not count the ledger: $clamped")
+    val texts = spark.read.parquet(out).select("text").as[String].collect()
+    assert(texts.length === 250 && texts.distinct.length === 250)
   }
 
   test("streaming near-dedup drops a planted near-dup within the watermark, admits beyond it") {
