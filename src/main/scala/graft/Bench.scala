@@ -39,13 +39,20 @@ object Bench {
   /** The scale-factor directory the runners read when none is given. */
   def envSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** The runners' shared session: `local[SPARK_GRAFT_CPUS]` with every
-    * table but the corpus preloaded. Returns it with the preload
-    * seconds (the bench's `load_s`). */
-  def session(sfDir: String): (SparkSession, Double) = {
+  /** `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle
+    * partitions, logging at WARN. */
+  def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The runners' shared session: [[localSession]] with every table but
+    * the corpus preloaded. Returns it with the preload seconds (the
+    * bench's `load_s`). */
+  def session(sfDir: String): (SparkSession, Double) = {
+    val spark = localSession()
     val t0 = System.nanoTime()
     Tables.preload(spark, sfDir)
     (spark, (System.nanoTime() - t0) / 1e9)

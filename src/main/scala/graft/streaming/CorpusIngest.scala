@@ -10,6 +10,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
+import ReplaySafeBatch.step
+
 /** Corpus-lake ingest with a persistent exact-dedup LEDGER, via
   * `foreachBatch` — the third dedup horizon:
   *
@@ -116,9 +118,6 @@ object CorpusIngest {
     * the footer-reading schema job on every batch. */
   private val ledgerSchema = "h STRING"
 
-  /** The local property `SparkContext.setJobDescription` sets. */
-  private val jobDescriptionKey = "spark.job.description"
-
   def ingestWithLedger(docs: DataFrame, ledgerDir: String, outDir: String,
                        checkpointDir: String, bloomFpp: Double = 0.01,
                        bloomCapacity: Long = 1L << 16): StreamingQuery =
@@ -133,13 +132,6 @@ object CorpusIngest {
         val ledgerPath = new Path(ledgerDir)
         val fs = ledgerPath.getFileSystem(spark.sessionState.newHadoopConf())
         def readLedger(): DataFrame = spark.read.schema(ledgerSchema).parquet(ledgerDir)
-        // each step's jobs carry its name; the caller's description
-        // comes back afterwards
-        def step[T](description: String)(body: => T): T = {
-          val previous = sc.getLocalProperty(jobDescriptionKey)
-          sc.setJobDescription(description)
-          try body finally sc.setLocalProperty(jobDescriptionKey, previous)
-        }
         // ONE filter-construction path (the distributed aggregate) with
         // ONE explicit geometry: Spark's aggregate clamps numBits at
         // maxNumBits and derives its hash count differently from
@@ -175,7 +167,7 @@ object CorpusIngest {
           frame.persist(); toRelease += frame
           val bloomAgg = new BloomFilterAggregate(ColumnBridge.expression(col("h")),
             Literal(effCapacity), Literal(numBitsFor(effCapacity)))
-          val row = step("ledger: batch pass") {
+          val row = step(spark, "ledger: batch pass") {
             frame.agg(count_if(probable),
               ColumnBridge.column(bloomAgg.toAggregateExpression())).head()
           }
@@ -202,7 +194,7 @@ object CorpusIngest {
                   finally in.close()
                 } else {
                   lastFilterSource.set("rebuilt")
-                  step("filter rebuild")(ledgerFilter(ledger, effCapacity))
+                  step(spark, "filter rebuild")(ledgerFilter(ledger, effCapacity))
                 }
               // saturation is read off the filter, not a ledger count;
               // at the maxNumBits clamp no rebuild adds bits, so the
@@ -212,7 +204,7 @@ object CorpusIngest {
               // mismatch at the merge, which the heal below rebuilds.
               val filter =
                 if (loaded.expectedFpp() > bloomFpp && loaded.bitSize() < maxNumBits)
-                  step("filter regrow") {
+                  step(spark, "filter regrow") {
                     effCapacity = math.max(effCapacity * 4, ledger.count() * 2)
                     lastFilterSource.set("regrown")
                     ledgerFilter(ledger, effCapacity)
@@ -229,7 +221,7 @@ object CorpusIngest {
               novel.persist(); toRelease += novel
               (novel, Some(filter), batchFilter)
             }
-          step("corpus write") {
+          step(spark, "corpus write") {
             ReplaySafeSink.writeBatch(novel.drop("h"), outDir,
               RunToken.of(spark, checkpointDir), batchId)
           }
@@ -242,7 +234,7 @@ object CorpusIngest {
               // rebuilding from ledger ∪ novel at the effective geometry
               // — still a superset of the post-append ledger
               lastFilterSource.set("regrown")
-              step("filter regrow") {
+              step(spark, "filter regrow") {
                 Some(ledgerFilter(readLedger().unionByName(novel.select("h")), effCapacity))
               }
             }
@@ -251,7 +243,7 @@ object CorpusIngest {
           // stale (smaller) capacity, whose geometry the next merge
           // refuses and the heal rebuilds — self-healing
           writeCapacity(fs, capPath, effCapacity)
-          step("ledger append") {
+          step(spark, "ledger append") {
             novel.select("h").write.mode(SaveMode.Append).parquet(ledgerDir)
           }
         } finally toRelease.foreach(_.unpersist())

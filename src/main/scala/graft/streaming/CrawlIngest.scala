@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Crawl, Documents}
 
@@ -42,13 +43,9 @@ object CrawlIngest {
     // measured-broadcast decision then memoizes over this same
     // persisted plan, so executors see a broadcast only while it fits.
     val rules = graft.Caches.persist(Crawl.robotsRules(robots))
-    blobs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId,
-          RunToken.of(batch.sparkSession, checkpointDir), rules, ledgerDir, outDir)
-      }
-      .start()
+    ReplaySafeBatch.start(blobs, checkpointDir) { (batch, batchId, token) =>
+      processBatch(batch, batchId, token, rules, ledgerDir, outDir)
+    }
   }
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long, token: String,
@@ -79,8 +76,10 @@ object CrawlIngest {
         struct(col("url"), col("text"))).as("w"))
       .select(col("canonical_url"), col("w.url").as("url"), col("w.text").as("text"))
     // standing-ledger gate: set-exclusion read, so a retry sees exactly
-    // the pre-batch fetch history (never its own first attempt)
-    val novel = ReplaySafeSink.standingRows(spark, ledgerDir, token, batchId) match {
+    // the pre-batch fetch history (never its own first attempt); the
+    // ledger's schema is given, so no inference job per batch
+    val novel = ReplaySafeSink.standingRows(spark, ledgerDir, token, batchId,
+        Some(StructType.fromDDL("canonical_url STRING"))) match {
       case Some(led) =>
         inBatch.join(led.select("canonical_url"), Seq("canonical_url"), "left_anti")
       case None => inBatch

@@ -19,8 +19,7 @@ import graft.functions.VectorExpressions
   * gate → exact-verify funnel, so a stream arrival and a batch
   * backfill can never disagree on whether two vectors are near-dups.
   *
-  * Shape per micro-batch (`foreachBatch` — the body reads the
-  * standing index):
+  * Per micro-batch, on the [[ReplaySafeBatch]] skeleton:
   *
   *  1. signature — the codegen'd [[VectorExpressions.SignSketch]]
   *     over the embedding, plus the vector's norm and post-prefix
@@ -39,21 +38,17 @@ import graft.functions.VectorExpressions
   *  3. in-batch — the same funnel over the batch alone, greedy
   *     keep-the-smaller-id (the [[NearDupIngest]] convention);
   *  4. write — survivors to the corpus; their (signature, embedding,
-  *     norms) to the index, date-partitioned so watermark pruning and
-  *     [[NearDupIngest.expireIndex]] retention work unchanged.
+  *     norms) to the date-partitioned index.
   *
   * The index stores the embedding alongside the signature: the exact
   * verify needs the vector, and shipping it with the signature keeps
   * the probe one join instead of a read back into the corpus sink
   * (which holds arbitrary payload columns, not a probe-shaped frame).
   *
-  * Replay safety is the [[ReplaySafeSink]] recipe verbatim: both
-  * sinks partitioned by ([[RunToken]], batch_id), dynamic partition
-  * overwrite, probe excludes exactly the current (token, batchId)
-  * pair. Empty micro-batches are skipped; a vector arriving beyond
-  * the watermark horizon is admitted (bounded state is the streaming
-  * contract — run the batch operator over the lake for the unbounded
-  * answer). */
+  * The watermark, replay, retention and compaction contracts are the
+  * [[ReplaySafeBatch]] skeleton's: a vector arriving beyond the
+  * horizon is admitted — run the batch operator over the lake for the
+  * unbounded answer. */
 object EmbedIngest {
 
   private val Prefix = 16 // gated-dot prefix, matches semanticDupPairs
@@ -68,14 +63,10 @@ object EmbedIngest {
                        checkpointDir: String, simThreshold: Double = 0.95,
                        bandBits: Int = 16,
                        watermarkMs: Long = 2L * 3600 * 1000): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId,
-          RunToken.of(batch.sparkSession, checkpointDir),
-          indexDir, outDir, simThreshold, bandBits, watermarkMs)
-      }
-      .start()
+    ReplaySafeBatch.start(vecs, checkpointDir) { (batch, batchId, token) =>
+      processBatch(batch, batchId, token, indexDir, outDir, simThreshold, bandBits,
+        watermarkMs)
+    }
 
   /** The per-micro-batch body, callable directly so specs can REPLAY a
     * committed batchId (the [[LeakageIngest.processBatch]] pattern). */
@@ -83,58 +74,31 @@ object EmbedIngest {
                                   indexDir: String, outDir: String,
                                   simThreshold: Double, bandBits: Int,
                                   watermarkMs: Long): Unit = {
-    val spark = batch.sparkSession
     val nBits = sigBits(bandBits)
     val tail = slice(col("embedding"), lit(Prefix + 1),
       greatest(size(col("embedding")) - lit(Prefix), lit(0)))
     // one row per doc_id (the PhashIngest lesson: equal ids never pair
     // under the strict in-batch ordering, so a double delivery would
     // survive twice); norms once per vector, not once per pair
-    val sims = batch.select(col("doc_id"), col("ts"), col("embedding"))
+    val signed = batch.select(col("doc_id"), col("ts"), col("embedding"))
       .dropDuplicates("doc_id")
       .select(col("doc_id"), col("ts"), col("embedding"),
         Embeddings.signatureCol(nBits).as("sig"),
         Embeddings.normCol("embedding").as("nrm"),
         sqrt(VectorExpressions.vecDot(tail, tail)).as("tnrm"))
-    sims.persist()
-    try if (!sims.isEmpty) {
-      val afterProbe =
-        ReplaySafeSink.standingRows(spark, indexDir, runToken, batchId) match {
-          case None => sims // no index (yet, or fully expired)
-          case Some(standing) =>
-            val maxTs = sims.agg(max(col("ts"))).head().getTimestamp(0)
-            val cutoff = new java.sql.Timestamp(maxTs.getTime - watermarkMs)
-            // ts >= cutoff prunes expired date partitions at planning
-            // time; retry self-exclusion lives in ReplaySafeSink
-            val index = standing.filter(col("ts") >= lit(cutoff))
-              .select("doc_id", "sig", "embedding", "nrm", "tnrm")
-            val dup = cosinePairs(sims, index, self = false,
-              simThreshold, bandBits)
-              .select(col("id_a").as("doc_id")).distinct()
-            sims.join(dup, Seq("doc_id"), "left_anti")
-        }
+    ReplaySafeBatch.process(signed, batchId, runToken, indexDir, outDir, watermarkMs,
+      Seq("doc_id", "sig", "embedding", "nrm", "tnrm", "ts")) { (sims, horizon) =>
+      val afterProbe = horizon.fold(sims) { index =>
+        val dup = cosinePairs(sims, index, self = false, simThreshold, bandBits)
+          .select(col("id_a").as("doc_id")).distinct()
+        sims.join(dup, Seq("doc_id"), "left_anti")
+      }
       val inBatchDrop = cosinePairs(afterProbe, afterProbe, self = true,
         simThreshold, bandBits)
         .select(col("id_b").as("doc_id")).distinct()
       val survivors = afterProbe.join(inBatchDrop, Seq("doc_id"), "left_anti")
-      survivors.persist()
-      try {
-        ReplaySafeSink.writeBatch(
-          survivors.select(col("doc_id"), col("ts"), col("embedding")),
-          outDir, runToken, batchId)
-        // `d` stays LEADING so expireIndex's directory retention and
-        // the cutoff filter's partition pruning are unchanged
-        ReplaySafeSink.writeBatch(
-          survivors.select(col("doc_id"), col("sig"), col("embedding"),
-            col("nrm"), col("tnrm"), col("ts"), to_date(col("ts")).as("d")),
-          indexDir, runToken, batchId, leading = Seq("d"))
-      } finally survivors.unpersist()
-    } finally sims.unpersist()
-    // standing-index hygiene on the crawl ledger's cadence — same
-    // replay-safety argument as [[CrawlIngest]] (only this batch can
-    // retry; its partition stays live), same `d`-leading preservation
-    // as the probe's partition pruning requires.
-    IndexMaintenance.autoCompact(spark, indexDir, runToken, batchId)
+      (survivors.select(col("doc_id"), col("ts"), col("embedding")), survivors)
+    }
   }
 
   /** Signature width for a band layout: 4 bands of `bandBits`, packed

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Maintenance operations for the [[ReplaySafeSink]] standing stores
   * (indexes, corpora, ledgers): one-time LAYOUT MIGRATION from the
-  * pre-RunToken era, and ongoing small-file COMPACTION.
+  * pre-RunToken era, ongoing small-file COMPACTION, and date-partition
+  * EXPIRY for the `d`-leading indexes.
   *
   * Why compaction is needed at all: every micro-batch writes its own
   * `(ingest_run, batch_id)` partition — the partition IS the replay
@@ -152,7 +153,7 @@ object IndexMaintenance {
     * live run's partitions — the only ones a retry overwrites or
     * self-excludes — are untouched. Leading partition levels (e.g. the
     * `d` date that retention prunes on) are preserved, so
-    * [[NearDupIngest.expireIndex]] and watermark partition pruning are
+    * [[expireIndex]] and watermark partition pruning are
     * unchanged. Returns the number of (run, batch) partitions
     * consolidated away (0 ⇔ nothing to do — fewer than two retired
     * partitions is churn, not compaction). */
@@ -225,6 +226,24 @@ object IndexMaintenance {
     if (batchId > 0 && batchId % everyBatches == 0)
       compactPlainLedger(spark, dir, minFiles)
     else 0
+
+  /** Drop the `d`-leading date partitions of an index entirely BEFORE
+    * `cutoff` — the retention pass the date-partitioned layout exists
+    * for: expiry is a directory delete, no rewrite, no scan. Safe at any
+    * time relative to the probe: [[ReplaySafeBatch]] reads only the
+    * watermark horizon, so partitions at least a full horizon older
+    * than the live stream can never be probed again. Returns the number
+    * of partitions dropped. */
+  def expireIndex(spark: SparkSession, indexDir: String,
+                  cutoff: java.time.LocalDate): Int = {
+    val (fs, p) = fsOf(spark, indexDir)
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith("d="))
+      .filter(d => java.time.LocalDate.parse(d.getName.stripPrefix("d="))
+        .isBefore(cutoff))
+      .count { d => fs.delete(d, true); true }
+  }
 
   private def compactWhere(spark: SparkSession, dir: String,
                            live: ((String, String)) => Boolean): Int = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,38 +24,18 @@ import graft.operators.Documents
   * reported as the arriving side, matching the greedy streaming-order
   * convention of the dedup twin).
   *
-  * Index shape, watermark-pruned probe, date-partitioned retention
-  * (reuse [[NearDupIngest.expireIndex]]) and first-batch/failure
-  * semantics are identical to [[NearDupIngest]]: a missing or fully
-  * expired index is the expected cold start; any other read failure
-  * fails the micro-batch so the checkpoint retries it. A near-dup
-  * arriving beyond the horizon is NOT alerted — bounded state is the
-  * streaming contract; run the batch audit over the lake for the
-  * unbounded answer.
-  *
-  * Replay safety ([[ReplaySafeSink]]): both sinks are partitioned by
-  * ([[RunToken]], batch_id) and written with dynamic partition
-  * OVERWRITE, and the standing-index probe excludes exactly the
-  * current (token, batchId) pair — so a checkpoint retry of batch N at
-  * ANY crash point replaces exactly its own first-attempt partitions
-  * against exactly the pre-batch index state, and a fresh-checkpoint
-  * incarnation (batchId back at 0) can neither clobber history nor
-  * lose the standing index from its probes. Empty micro-batches are
-  * skipped outright (Kafka rebalances deliver them routinely); the
-  * previous max(ts)-of-nothing would have NPE'd the batch forever. */
+  * The watermark, replay, retention and compaction contracts are the
+  * [[ReplaySafeBatch]] skeleton's: a near-dup arriving beyond the
+  * horizon is NOT alerted — bounded state is the streaming contract;
+  * run the batch audit over the lake for the unbounded answer. */
 object LeakageIngest {
 
   def ingestLeakageAudit(docs: DataFrame, indexDir: String, alertDir: String,
                          checkpointDir: String, maxHamming: Int = 3,
                          watermarkMs: Long = 2L * 3600 * 1000): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId,
-          RunToken.of(batch.sparkSession, checkpointDir),
-          indexDir, alertDir, maxHamming, watermarkMs)
-      }
-      .start()
+    ReplaySafeBatch.start(docs, checkpointDir) { (batch, batchId, token) =>
+      processBatch(batch, batchId, token, indexDir, alertDir, maxHamming, watermarkMs)
+    }
 
   /** The per-micro-batch body, callable directly so specs can REPLAY a
     * committed batchId — the checkpoint-retry path a MemoryStream test
@@ -63,58 +43,33 @@ object LeakageIngest {
     * probe's self-exclusion to this checkpoint (see [[RunToken]]). */
   private[graft] def processBatch(batch: DataFrame, batchId: Long, runToken: String,
                                   indexDir: String, alertDir: String,
-                                  maxHamming: Int, watermarkMs: Long): Unit = {
-        val spark = batch.sparkSession
-        val sims = batch
-          .withColumn("simhash",
-            graft.functions.VectorExpressions.simhash64(split(col("text"), " ")))
-          .withColumn("split", Documents.splitExpr())
-          .select("doc_id", "ts", "simhash", "split")
-        sims.persist()
-        try if (!sims.isEmpty) {
-          val standingAlerts =
-            ReplaySafeSink.standingRows(spark, indexDir, runToken, batchId).map { standing =>
-              val maxTs = sims.agg(max(col("ts"))).head().getTimestamp(0)
-              val cutoff = new java.sql.Timestamp(maxTs.getTime - watermarkMs)
-              // ts >= cutoff prunes expired date partitions at planning
-              // time — the index read is the horizon, not the history.
-              // The retry self-exclusion (why a retry of batch N must
-              // not see its own first-attempt rows, and why that is
-              // set-exclusion rather than batch_id ordering) lives in
-              // ReplaySafeSink.standingRows.
-              val index = standing.filter(col("ts") >= lit(cutoff))
-                .select(col("doc_id"), col("simhash"), col("split"))
-              (Documents.simhashProbePairs(
-                  sims.select("doc_id", "simhash"),
-                  index.select("doc_id", "simhash"), maxHamming)
-                .join(sims.select(col("doc_id"), col("ts"),
-                  col("split").as("split_new")), "doc_id")
-                .join(index.select(col("doc_id").as("matched_id"),
-                  col("split").as("split_old")), "matched_id")
-                .filter(col("split_new") =!= col("split_old"))
-                .select("doc_id", "matched_id", "split_new", "split_old", "ts"))
-            }
-          // in-batch straddles: the pair pass over this batch alone —
-          // d1 < d2, so d2 is reported as the arriving side
-          val inBatchAlerts = Documents
-            .simhashPairs(sims.select("doc_id", "simhash"), maxHamming)
-            .select(col("d2").as("doc_id"), col("d1").as("matched_id"))
-            .join(sims.select(col("doc_id"), col("ts"),
-              col("split").as("split_new")), "doc_id")
-            .join(sims.select(col("doc_id").as("matched_id"),
-              col("split").as("split_old")), "matched_id")
-            .filter(col("split_new") =!= col("split_old"))
-            .select("doc_id", "matched_id", "split_new", "split_old", "ts")
-          val alerts = standingAlerts
-            .map(_.unionByName(inBatchAlerts)).getOrElse(inBatchAlerts)
-          ReplaySafeSink.writeBatch(alerts, alertDir, runToken, batchId)
-          // admit EVERYTHING — the audit never drops. `d` stays the
-          // LEADING partition so expireIndex's date-directory retention
-          // and the cutoff filter's partition pruning are unchanged.
-          ReplaySafeSink.writeBatch(
-            sims.select(col("doc_id"), col("simhash"), col("split"), col("ts"),
-              to_date(col("ts")).as("d")),
-            indexDir, runToken, batchId, leading = Seq("d"))
-        } finally sims.unpersist()
-  }
+                                  maxHamming: Int, watermarkMs: Long): Unit =
+    ReplaySafeBatch.process(
+      batch
+        .withColumn("simhash",
+          graft.functions.VectorExpressions.simhash64(split(col("text"), " ")))
+        .withColumn("split", Documents.splitExpr())
+        .select("doc_id", "ts", "simhash", "split"),
+      batchId, runToken, indexDir, alertDir, watermarkMs,
+      Seq("doc_id", "simhash", "split", "ts")) { (sims, horizon) =>
+      // (doc_id, matched_id) pairs → alerts where the two splits differ
+      def straddles(pairs: DataFrame, matched: DataFrame): DataFrame = pairs
+        .join(sims.select(col("doc_id"), col("ts"), col("split").as("split_new")), "doc_id")
+        .join(matched.select(col("doc_id").as("matched_id"), col("split").as("split_old")),
+          "matched_id")
+        .filter(col("split_new") =!= col("split_old"))
+        .select("doc_id", "matched_id", "split_new", "split_old", "ts")
+      val standingAlerts = horizon.map { index =>
+        straddles(Documents.simhashProbePairs(sims.select("doc_id", "simhash"),
+          index.select("doc_id", "simhash"), maxHamming), index)
+      }
+      // in-batch straddles: the pair pass over this batch alone —
+      // d1 < d2, so d2 is reported as the arriving side
+      val inBatchAlerts = straddles(
+        Documents.simhashPairs(sims.select("doc_id", "simhash"), maxHamming)
+          .select(col("d2").as("doc_id"), col("d1").as("matched_id")),
+        sims)
+      // admit EVERYTHING — the audit never drops
+      (standingAlerts.fold(inBatchAlerts)(_.unionByName(inBatchAlerts)), sims)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,43 +11,21 @@ import graft.operators.Documents
   * within `maxHamming` of anything already admitted inside the
   * lateness horizon is dropped before it reaches the corpus.
   *
-  * Shape per micro-batch (`foreachBatch`, because the body needs the
-  * standing index read):
+  * Per micro-batch, on the [[ReplaySafeBatch]] skeleton (which owns
+  * the watermark and replay contracts):
   *
   *  1. signature — the codegen'd SimHash64 over the token stream, a
   *     stateless map (the streaming-safe part of the batch operator);
   *  2. probe — [[Documents.simhashProbe]] band-joins the batch
-  *     signatures against the STANDING index, so each batch costs
-  *     O(|batch| + band collisions), never a corpus self-join;
+  *     signatures against the STANDING index horizon, so each batch
+  *     costs O(|batch| + band collisions), never a corpus self-join;
   *  3. in-batch — [[Documents.simhashPairs]] over what survived the
   *     probe, greedy keep-the-smaller-id (duplicates of a rejected doc
   *     are re-admitted, by design: the KEPT corpus is what must hold no
   *     near-pairs — chain-shaped clusters therefore resolve greedily,
   *     like every streaming-order dedup);
-  *  4. append — survivors to the corpus; their (doc_id, simhash, ts)
-  *     to the index, Hive-partitioned by DATE so the watermark bound
-  *     below is a planning-time directory prune and retention (drop
-  *     directories older than the horizon) is an `rm`, not a rewrite.
-  *
-  * The WATERMARK bound mirrors `dropDuplicatesWithinWatermark`
-  * semantics at the index read: only signatures within `watermarkMs`
-  * of the batch's max event time are probed, so state per probe is
-  * bounded by the horizon (a near-dup arriving beyond it is admitted —
-  * the contract that makes unbounded-stream dedup feasible; run the
-  * batch near-dedup over the lake for the unbounded horizon).
-  *
-  * Failure honesty (same contract as [[CorpusIngest]]): a missing
-  * index directory is the expected first batch; any other read failure
-  * fails the micro-batch so the checkpoint retries it.
-  *
-  * Replay safety (round 12, the [[LeakageIngest]] recipe): both sinks
-  * are partitioned by ([[RunToken]], batch_id) and written with
-  * dynamic partition OVERWRITE, and the probe excludes exactly the
-  * current (token, batchId) pair — the prior plain appends were
-  * idempotent only by accident in the after-both-writes window (a
-  * retried batch self-matched its own index rows and appended nothing)
-  * and DOUBLE-appended the corpus when the crash fell between the
-  * corpus and index writes. */
+  *  4. write — survivors to the corpus; their (doc_id, simhash, ts)
+  *     to the date-partitioned index. */
 object NearDupIngest {
 
   /** `maxHamming` defaults to the strict 64-bit bar (3 → 4×16-bit
@@ -57,87 +35,36 @@ object NearDupIngest {
   def ingestNearDedup(docs: DataFrame, indexDir: String, outDir: String,
                       checkpointDir: String, maxHamming: Int = 3,
                       watermarkMs: Long = 2L * 3600 * 1000): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId,
-          RunToken.of(batch.sparkSession, checkpointDir),
-          indexDir, outDir, maxHamming, watermarkMs)
-      }
-      .start()
+    ReplaySafeBatch.start(docs, checkpointDir) { (batch, batchId, token) =>
+      processBatch(batch, batchId, token, indexDir, outDir, maxHamming, watermarkMs)
+    }
 
   /** The per-micro-batch body, callable directly so specs can REPLAY a
     * committed batchId (the [[LeakageIngest.processBatch]] pattern). */
   private[graft] def processBatch(batch: DataFrame, batchId: Long, runToken: String,
                                   indexDir: String, outDir: String,
-                                  maxHamming: Int, watermarkMs: Long): Unit = {
-        val spark = batch.sparkSession
-        val sims = batch.withColumn("simhash",
-          graft.functions.VectorExpressions.simhash64(split(col("text"), " ")))
-        sims.persist()
-        // empty micro-batches are routine (Kafka rebalances) and must
-        // be a no-op — the max(ts)-of-nothing below would NPE forever
-        // (the LeakageIngest r11 lesson)
-        try if (!sims.isEmpty) {
-          val afterProbe =
-            ReplaySafeSink.standingRows(spark, indexDir, runToken, batchId) match {
-              case None => sims // no index (yet, or fully expired)
-              case Some(standing) =>
-                val maxTs = sims.agg(max(col("ts"))).head().getTimestamp(0)
-                val cutoff = new java.sql.Timestamp(maxTs.getTime - watermarkMs)
-                // ts >= cutoff prunes expired date partitions at
-                // planning time — the index read is the horizon, not
-                // the history; the retry self-exclusion lives in
-                // ReplaySafeSink.standingRows
-                val index = standing.filter(col("ts") >= lit(cutoff))
-                  .select(col("doc_id"), col("simhash"))
-                val dup = Documents.simhashProbe(
-                  sims.select("doc_id", "simhash"), index, maxHamming)
-                sims.join(dup, Seq("doc_id"), "left_anti")
-            }
-          val inBatchDrop = Documents
-            .simhashPairs(afterProbe.select("doc_id", "simhash"), maxHamming)
-            .select(col("d2").as("doc_id")).distinct()
-          val survivors = afterProbe.join(inBatchDrop, Seq("doc_id"), "left_anti")
-          survivors.persist()
-          try {
-            ReplaySafeSink.writeBatch(survivors.drop("simhash"),
-              outDir, runToken, batchId)
-            // `d` stays LEADING so expireIndex's directory retention
-            // and the cutoff filter's partition pruning are unchanged
-            ReplaySafeSink.writeBatch(
-              survivors.select(col("doc_id"), col("simhash"), col("ts"),
-                to_date(col("ts")).as("d")),
-              indexDir, runToken, batchId, leading = Seq("d"))
-          } finally survivors.unpersist()
-        } finally sims.unpersist()
-    // standing-index hygiene on the crawl ledger's cadence (r14
-    // measured the manual-only curve degrading ~15× on file count at
-    // 100M arrivals). Synchronous AFTER this batch's writes; keeps
-    // exactly this (token, batchId) partition live, so the only
-    // possible retry stays replay-safe (IndexMaintenance
-    // .compactIndexLive). The `d` leading level survives compaction,
-    // so expireIndex's directory retention and the probe's partition
-    // pruning are unchanged.
-    IndexMaintenance.autoCompact(spark, indexDir, runToken, batchId)
-  }
+                                  maxHamming: Int, watermarkMs: Long): Unit =
+    ReplaySafeBatch.process(
+      batch.withColumn("simhash",
+        graft.functions.VectorExpressions.simhash64(split(col("text"), " "))),
+      batchId, runToken, indexDir, outDir, watermarkMs,
+      Seq("doc_id", "simhash", "ts")) { (sims, horizon) =>
+      val survivors = simhashSurvivors(sims, horizon, maxHamming)
+      (survivors.drop("simhash"), survivors)
+    }
 
-  /** Drop index date-partitions entirely BEFORE `cutoff` — the
-    * retention pass the date-partitioned layout exists for: expiry is
-    * a directory delete, no rewrite, no scan. Runs against any Hadoop
-    * filesystem. Safe at any time relative to the probe: the probe
-    * filters `ts >= maxTs - watermark`, so partitions at least a full
-    * horizon older than the live stream can never be probed again.
-    * Returns the number of partitions dropped. */
-  def expireIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                  cutoff: java.time.LocalDate): Int = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("d="))
-      .filter(d => java.time.LocalDate.parse(d.getName.stripPrefix("d="))
-        .isBefore(cutoff))
-      .count { d => fs.delete(d, true); true }
+  /** The rows of `sims` (doc_id, simhash, …) with no neighbor within
+    * `maxHamming` in the `horizon` index, minus the larger id of every
+    * in-batch near pair among them. */
+  private[streaming] def simhashSurvivors(sims: DataFrame, horizon: Option[DataFrame],
+                                          maxHamming: Int): DataFrame = {
+    val afterProbe = horizon.fold(sims) { index =>
+      sims.join(Documents.simhashProbe(sims.select("doc_id", "simhash"),
+        index.select("doc_id", "simhash"), maxHamming), Seq("doc_id"), "left_anti")
+    }
+    val inBatchDrop = Documents
+      .simhashPairs(afterProbe.select("doc_id", "simhash"), maxHamming)
+      .select(col("d2").as("doc_id")).distinct()
+    afterProbe.join(inBatchDrop, Seq("doc_id"), "left_anti")
   }
 }

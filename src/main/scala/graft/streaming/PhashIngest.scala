@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Documents, Multimodal}
+import graft.operators.Multimodal
 
 /** Streaming PERCEPTUAL media dedup — the multimodal twin of
   * [[NearDupIngest]], covering both images ([[ingestImageDedup]],
@@ -20,33 +20,19 @@ import graft.operators.{Documents, Multimodal}
   * unchanged — the image stream inherits the text stream's
   * O(|batch| + band collisions) economics, never a corpus self-join.
   *
-  * Shape per micro-batch: decode+hash (the partition-batched media
-  * seam — per-row imperative byte work with no Catalyst equivalent),
-  * probe the standing index, greedy in-batch pair drop (keep the
-  * smaller doc_id, the [[NearDupIngest]] convention), then write
-  * survivors to the corpus and their signatures to the index.
-  * UNDECODABLE payloads are admitted to the corpus but not indexed:
-  * an ingest must never lose data it cannot read, and a signature it
-  * cannot compute can't be probed — route such rows to a quarantine
-  * audit downstream if the pipeline needs one.
-  *
-  * Replay safety follows the [[LeakageIngest]] recipe: both sinks are
-  * partitioned by ([[RunToken]], batch_id) and written with dynamic
-  * partition OVERWRITE, and the standing-index probe excludes exactly
-  * the current (token, batchId) pair, so a checkpoint retry of batch N
-  * — before, between, or after its two writes — reproduces exactly the
-  * first attempt's partitions against exactly the pre-batch index
-  * state, and a fresh-checkpoint incarnation (batchId back at 0) can
-  * neither clobber history nor lose the standing index from its
-  * probes. Empty micro-batches are skipped.
-  *
-  * The watermark bound, date-partitioned index layout and retention
-  * (reuse [[NearDupIngest.expireIndex]]) are identical to the text
-  * ingest: only signatures within `watermarkMs` of the batch's max
-  * event time are probed, so per-batch state is horizon-bounded; a
-  * near-duplicate image arriving beyond the horizon is admitted —
-  * run the batch [[Multimodal.multimodalDedupPhash]] over the lake
-  * for the unbounded answer. */
+  * Per micro-batch, on the [[ReplaySafeBatch]] skeleton (which owns
+  * the watermark, replay, retention and compaction contracts):
+  * decode+hash (the partition-batched media seam — per-row imperative
+  * byte work with no Catalyst equivalent), probe the standing index
+  * horizon, greedy in-batch pair drop (keep the smaller doc_id, the
+  * [[NearDupIngest]] convention), then write survivors to the corpus
+  * and their signatures to the index. UNDECODABLE payloads are
+  * admitted to the corpus but not indexed: an ingest must never lose
+  * data it cannot read, and a signature it cannot compute can't be
+  * probed — route such rows to a quarantine audit downstream if the
+  * pipeline needs one. A near-duplicate arriving beyond the horizon is
+  * admitted — run the batch [[Multimodal.multimodalDedupPhash]] over
+  * the lake for the unbounded answer. */
 object PhashIngest {
 
   /** The perceptual signature per media mode — both are 64-bit
@@ -103,14 +89,9 @@ object PhashIngest {
   private def ingest(media: DataFrame, mode: String, indexDir: String,
                      outDir: String, checkpointDir: String, maxHamming: Int,
                      watermarkMs: Long): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId,
-          RunToken.of(batch.sparkSession, checkpointDir),
-          mode, indexDir, outDir, maxHamming, watermarkMs)
-      }
-      .start()
+    ReplaySafeBatch.start(media, checkpointDir) { (batch, batchId, token) =>
+      processBatch(batch, batchId, token, mode, indexDir, outDir, maxHamming, watermarkMs)
+    }
 
   /** The per-micro-batch body, callable directly so specs can REPLAY a
     * committed batchId (the [[LeakageIngest.processBatch]] pattern). */
@@ -130,46 +111,18 @@ object PhashIngest {
         it.map { case (id, ts, bytes) => (id, ts, sigOf(mode, bytes)) }
       }
       .toDF("doc_id", "ts", "simhash") // simhash null ⇔ undecodable
-    sigs.persist()
-    try if (!sigs.isEmpty) {
-      val hashed = sigs.filter(col("simhash").isNotNull)
-      val afterProbe =
-        ReplaySafeSink.standingRows(spark, indexDir, runToken, batchId) match {
-          case None => hashed // no index (yet, or fully expired)
-          case Some(standing) =>
-            val maxTs = sigs.agg(max(col("ts"))).head().getTimestamp(0)
-            val cutoff = new java.sql.Timestamp(maxTs.getTime - watermarkMs)
-            // ts >= cutoff prunes expired date partitions at planning
-            // time; the retry self-exclusion lives in
-            // ReplaySafeSink.standingRows
-            val index = standing.filter(col("ts") >= lit(cutoff))
-              .select(col("doc_id"), col("simhash"))
-            val dup = Documents.simhashProbe(
-              hashed.select("doc_id", "simhash"), index, maxHamming)
-            hashed.join(dup, Seq("doc_id"), "left_anti")
-        }
-      val inBatchDrop = Documents
-        .simhashPairs(afterProbe.select("doc_id", "simhash"), maxHamming)
-        .select(col("d2").as("doc_id")).distinct()
-      val surviving = afterProbe.join(inBatchDrop, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("ts"), col("simhash"))
-        .unionByName(sigs.filter(col("simhash").isNull)) // admit, don't index
-      // corpus keeps the original payload: join survivor ids back to
-      // the (deduplicated) batch rather than carrying media bytes
-      // through the joins
-      ReplaySafeSink.writeBatch(
-        uniq.join(surviving.select("doc_id"), Seq("doc_id")),
-        outDir, runToken, batchId)
-      ReplaySafeSink.writeBatch(
-        surviving.filter(col("simhash").isNotNull)
-          .select(col("doc_id"), col("simhash"), col("ts"),
-            to_date(col("ts")).as("d")),
-        indexDir, runToken, batchId, leading = Seq("d"))
-    } finally sigs.unpersist()
-    // standing-index hygiene on the crawl ledger's cadence — same
-    // replay-safety argument as [[CrawlIngest]] (only this batch can
-    // retry; its partition stays live), same `d`-leading preservation
-    // as the probe's partition pruning requires.
-    IndexMaintenance.autoCompact(spark, indexDir, runToken, batchId)
+    ReplaySafeBatch.process(sigs, batchId, runToken, indexDir, outDir, watermarkMs,
+      Seq("doc_id", "simhash", "ts")) { (_, horizon) =>
+      val kept = NearDupIngest.simhashSurvivors(
+        sigs.filter(col("simhash").isNotNull), horizon, maxHamming)
+      // corpus keeps the original payload: join survivor ids (plus the
+      // undecodable ones — admit, don't index) back to the
+      // deduplicated batch rather than carrying media bytes through
+      // the joins
+      val admitted = kept.select("doc_id")
+        .unionByName(sigs.filter(col("simhash").isNull).select("doc_id"))
+      (uniq.join(admitted, Seq("doc_id")), kept)
+    }
   }
+
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Incremental RELEASE DIFF — the streaming twin of
   * [[graft.operators.Documents.releaseDiff]] (the batch operator
@@ -61,24 +62,25 @@ object ReleaseDiffIngest {
     * per-doc classifications to the ledger. */
   def ingestReleaseDiff(cur: DataFrame, indexDir: String, ledgerDir: String,
                         checkpointDir: String): StreamingQuery =
-    cur.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val index = spark.read.parquet(indexDir)
-          val classified = batch.select(col("doc_id"), col("source"),
-              md5(col("text").cast("binary")).as("h_c"))
-            .join(graft.operators.Ops.broadcastIfFits(index), Seq("doc_id"), "left_outer")
-            .select(col("doc_id"), col("source"),
-              when(col("h_p").isNull, "added")
-                .when(col("h_c") =!= col("h_p"), "changed")
-                .otherwise("unchanged").as("status"))
-          ReplaySafeSink.writeBatch(classified, ledgerDir,
-            RunToken.of(spark, checkpointDir), batchId)
-        }
+    ReplaySafeBatch.start(cur, checkpointDir) { (batch, batchId, token) =>
+      if (!batch.isEmpty) {
+        // the index row indexRelease writes, typed off the batch (both
+        // releases share the doc_id and source columns), so no
+        // inference job per batch
+        val index = batch.sparkSession.read.schema(StructType(Seq(
+            batch.schema("doc_id"), batch.schema("source").copy(name = "src_p"),
+            StructField("h_p", StringType))))
+          .parquet(indexDir)
+        val classified = batch.select(col("doc_id"), col("source"),
+            md5(col("text").cast("binary")).as("h_c"))
+          .join(graft.operators.Ops.broadcastIfFits(index), Seq("doc_id"), "left_outer")
+          .select(col("doc_id"), col("source"),
+            when(col("h_p").isNull, "added")
+              .when(col("h_c") =!= col("h_p"), "changed")
+              .otherwise("unchanged").as("status"))
+        ReplaySafeSink.writeBatch(classified, ledgerDir, token, batchId)
       }
-      .start()
+    }
 
   /** The running diff: ledger counts plus prev-index docs the stream
     * has not seen (→ removed). Equals the batch

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** The shared REPLAY-SAFE SINK recipe behind every foreachBatch ingest
   * here ([[NearDupIngest]], [[LeakageIngest]], [[PhashIngest]],
@@ -71,24 +73,26 @@ object ReplaySafeSink {
     * N` ordering: a fresh-checkpoint incarnation restarts batchId at 0
     * and an ordering filter would exclude the whole standing index
     * (see [[RunToken]]). None ⇔ no data yet (the expected cold
-    * start). Callers layer their own horizon filter on top. */
-  def standingRows(spark: SparkSession, dir: String,
-                   token: String, batchId: Long): Option[org.apache.spark.sql.DataFrame] =
+    * start). Callers layer their own horizon filter on top. `schema`
+    * is the store's row schema without the run/batch levels; given, the
+    * read skips parquet schema inference, a job on every call. */
+  def standingRows(spark: SparkSession, dir: String, token: String, batchId: Long,
+                   schema: Option[StructType] = None): Option[DataFrame] =
     if (!hasParquetData(spark, dir)) None
-    else { requireRunTokenLayout(spark, dir); Some(spark.read.parquet(dir)
-      .filter(!(org.apache.spark.sql.functions.col("ingest_run") ===
-          org.apache.spark.sql.functions.lit(token) &&
-        org.apache.spark.sql.functions.col("batch_id") ===
-          org.apache.spark.sql.functions.lit(batchId)))) }
+    else {
+      requireRunTokenLayout(spark, dir)
+      val reader = schema.fold(spark.read)(s => spark.read.schema(
+        s.add("ingest_run", StringType).add("batch_id", LongType)))
+      Some(reader.parquet(dir).filter(
+        !(col("ingest_run") === lit(token) && col("batch_id") === lit(batchId))))
+    }
 
   /** Write `df` as the (token, batchId) partition of `dir` via dynamic
     * partition overwrite — a retry replaces exactly its own first
     * attempt. `leading` prepends partition columns that must stay
     * OUTERMOST (e.g. the date column retention prunes on). */
-  def writeBatch(df: org.apache.spark.sql.DataFrame, dir: String,
-                 token: String, batchId: Long,
+  def writeBatch(df: DataFrame, dir: String, token: String, batchId: Long,
                  leading: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.lit
     df.withColumn("ingest_run", lit(token))
       .withColumn("batch_id", lit(batchId))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)

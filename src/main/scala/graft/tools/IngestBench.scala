@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.Bench
 import graft.streaming.{CorpusIngest, CrawlIngest, EmbedIngest, NearDupIngest}
 
 /** Streaming-tier throughput at scale: drive the BigBenchLlm document
@@ -40,8 +40,7 @@ object IngestBench {
     require(mode == "crawlledger" || new java.io.File(srcDir).exists(),
       s"run BigBenchLlm $rows first ($srcDir)")
     val base = s"target/ingestbench/${mode}_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     // fresh run each invocation: ledger/index state is the measurement
     val basePath = new org.apache.hadoop.fs.Path(base)
     val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())

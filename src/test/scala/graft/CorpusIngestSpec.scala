@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.util.sketch.BloomFilter
@@ -9,7 +12,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.{col, split}
 import graft.operators.Documents
 import graft.operators.Multimodal
-import graft.streaming.{CorpusIngest, LeakageIngest, NearDupIngest, PhashIngest, ReleaseDiffIngest}
+import graft.streaming.{CorpusIngest, EmbedIngest, LeakageIngest, NearDupIngest, PhashIngest,
+  ReleaseDiffIngest, ReplaySafeSink}
 
 /** The unbounded-horizon dedup ledger: duplicates are dropped across
   * micro-batches AND across query restarts, because the seen set lives
@@ -164,13 +168,15 @@ class CorpusIngestSpec extends SparkSuite {
   private class ExecutionNames extends QueryExecutionListener {
     @volatile private var recording = false
     private val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    /** The executed plans of the last `during`'s successful executions. */
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      if (recording) seen.add(funcName)
+      if (recording) { seen.add(funcName); plans.add(qe.executedPlan) }
     def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
       if (recording) seen.add(s"failed: $funcName")
     def during(body: => Unit): Seq[String] = {
       ListenerBusDrain(spark.sparkContext)
-      seen.clear(); recording = true
+      seen.clear(); plans.clear(); recording = true
       try { body; ListenerBusDrain(spark.sparkContext) } finally recording = false
       seen.asScala.toSeq
     }
@@ -351,7 +357,7 @@ class CorpusIngestSpec extends SparkSuite {
       // retention is a DIRECTORY DROP on the date-partitioned index —
       // and a fully-expired (empty) index must read as "no standing
       // signatures", not break the next batch
-      val dropped = NearDupIngest.expireIndex(spark, s"$base/index",
+      val dropped = graft.streaming.IndexMaintenance.expireIndex(spark, s"$base/index",
         java.time.LocalDate.parse("2024-01-02"))
       assert(dropped === 1, s"dropped $dropped partitions")
       stream.addData(Seq((8L, ts("2024-01-01 15:00:00"), nearDup(b))))
@@ -828,7 +834,7 @@ class CorpusIngestSpec extends SparkSuite {
       assert(q.exception.isEmpty, s"empty batch must not fail: ${q.exception}")
     } finally q.stop()
     // retention stays a directory drop (same date-partitioned layout)
-    assert(NearDupIngest.expireIndex(spark, s"$base/index",
+    assert(graft.streaming.IndexMaintenance.expireIndex(spark, s"$base/index",
       java.time.LocalDate.parse("2024-01-02")) === 1)
   }
 
@@ -1072,5 +1078,204 @@ class CorpusIngestSpec extends SparkSuite {
       "the Bloom sidecar under _bloom must be untouched")
     // cadence wrapper: off-cadence is a free no-op
     assert(IndexMaintenance.autoCompactPlain(spark, dir, batchId = 33L) === 0)
+  }
+
+  /** Seeded 60-token texts over disjoint per-prefix vocabularies (a
+    * shared small vocabulary would make every simhash near-equal), their
+    * near-dup variants, and the content-hash split rule of
+    * [[Documents.splitExpr]], computed locally. */
+  private class Texts(private var seed: Long) {
+    private def nextInt(n: Int): Int = {
+      seed = seed * 6364136223846793005L + 1442695040888963407L
+      (((seed >>> 33) % n).toInt + n) % n
+    }
+    def fresh(prefix: String): String =
+      (0 until 60).map(_ => s"$prefix${nextInt(100000)}").mkString(" ")
+    def variant(t: String, i: Int): String = {
+      val toks = t.split(" "); toks(7) = s"zulu$i"; toks(31) = s"yankee$i"
+      toks.mkString(" ")
+    }
+    def splitOf(t: String): String = {
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(2)
+      if (h < "cc") "train" else if (h < "e6") "val" else "test"
+    }
+  }
+
+  private def instant(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+
+  private def textBatch(rows: (Long, java.sql.Timestamp, String)*) =
+    spark.createDataFrame(rows).toDF("doc_id", "ts", "text")
+
+  private def parquetFileCount(dir: String): Int = {
+    def walk(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    walk(new java.io.File(dir))
+  }
+
+  test("a steady near-dup, leakage, embed and phash batch each run three SQL executions") {
+    val base = new java.io.File("target/index-ingest-executions")
+    rm(base)
+    val texts = new Texts(5L)
+    val (a, b, c) = (texts.fresh("apple"), texts.fresh("berry"), texts.fresh("cedar"))
+    def vec(id: Long): Array[Float] = Array.tabulate(64) { j =>
+      val m = Multimodal.MediaTransform.mix64(id * 1315423911L + j)
+      ((m & 0xffff).toFloat / 32768f) - 1f
+    }
+    def img(id: Long): Array[Byte] = Multimodal.MediaTransform.bmpTexture(12, 12, id)
+    val hour = 3600L * 1000
+    // batch 0 builds the standing index; batch 1 is the steady batch:
+    // a probe hit against the index plus a fresh row
+    val ingests: Seq[(String, Long => Unit)] = Seq(
+      "near-dup" -> { id =>
+        val rows = if (id == 0) Seq((1L, instant("2024-01-01T10:00:00Z"), a))
+          else Seq((2L, instant("2024-01-01T10:30:00Z"), texts.variant(a, 0)),
+            (3L, instant("2024-01-01T10:30:01Z"), b))
+        NearDupIngest.processBatch(textBatch(rows: _*), id, "specrun",
+          s"$base/neardup/index", s"$base/neardup/corpus", 12, 2 * hour)
+      },
+      "leakage" -> { id =>
+        val rows = if (id == 0) Seq((1L, instant("2024-01-01T10:00:00Z"), a))
+          else Seq((2L, instant("2024-01-01T10:30:00Z"), texts.variant(a, 0)),
+            (3L, instant("2024-01-01T10:30:01Z"), c))
+        LeakageIngest.processBatch(textBatch(rows: _*), id, "specrun",
+          s"$base/leakage/index", s"$base/leakage/alerts", 12, 2 * hour)
+      },
+      "embed" -> { id =>
+        val rows = if (id == 0) Seq((1L, instant("2024-01-01T10:00:00Z"), vec(1L)))
+          else Seq((2L, instant("2024-01-01T10:30:00Z"), vec(1L).map(_ * 0.5f)),
+            (3L, instant("2024-01-01T10:30:01Z"), vec(3L)))
+        EmbedIngest.processBatch(spark.createDataFrame(rows).toDF("doc_id", "ts", "embedding"),
+          id, "specrun", s"$base/embed/index", s"$base/embed/corpus", 0.95, 16, 2 * hour)
+      },
+      "phash" -> { id =>
+        val rows = if (id == 0) Seq((1L, instant("2024-01-01T10:00:00Z"), img(1L)))
+          else Seq((2L, instant("2024-01-01T10:30:00Z"), img(1L)),
+            (3L, instant("2024-01-01T10:30:01Z"), img(3L)))
+        PhashIngest.processBatch(spark.createDataFrame(rows).toDF("doc_id", "ts", "media"),
+          id, "specrun", "image", s"$base/phash/index", s"$base/phash/corpus", 4, 2 * hour)
+      })
+    val names = new ExecutionNames
+    spark.listenerManager.register(names)
+    val steady = try ingests.map { case (name, run) =>
+      run(0L)
+      name -> names.during(run(1L))
+    } finally spark.listenerManager.unregister(names)
+    // one aggregate (empty guard and watermark cutoff), the output
+    // write and the index write — no isEmpty job of its own
+    assert(steady.toMap === ingests.map(_._1 -> Seq("head", "command", "command")).toMap,
+      s"steady batches ran: $steady")
+    def ids(dir: String) = spark.read.parquet(dir).select("doc_id").as[Long].collect().sorted
+    assert(ids(s"$base/neardup/corpus") === Array(1L, 3L))
+    assert(ids(s"$base/leakage/index") === Array(1L, 2L, 3L))
+    assert(ids(s"$base/embed/corpus") === Array(1L, 3L))
+    assert(ids(s"$base/phash/corpus") === Array(1L, 3L))
+  }
+
+  test("standingRows with the store's schema given launches no job") {
+    val base = new java.io.File("target/standing-rows-jobs")
+    rm(base)
+    val dir = s"$base/index"
+    for (b <- 0L to 2L)
+      ReplaySafeSink.writeBatch(Seq((b, s"u$b")).toDF("doc_id", "url"), dir, "tok", b)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsDuring(body: => Unit): Int = {
+      ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      body
+      ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val inferred = jobsDuring(ReplaySafeSink.standingRows(spark, dir, "tok", 2L))
+      assert(inferred > 0, "without a schema the read infers it with a job")
+      var rows: Option[org.apache.spark.sql.DataFrame] = None
+      val withSchema = jobsDuring {
+        rows = ReplaySafeSink.standingRows(spark, dir, "tok", 2L,
+          Some(org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, url STRING")))
+      }
+      assert(withSchema === 0, s"the schema-given read launched $withSchema jobs")
+      assert(rows.get.select("url").as[String].collect().sorted === Array("u0", "u1"))
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("the horizon read prunes index date partitions, with a day of slack across time zones") {
+    val base = new java.io.File("target/horizon-prune-spec")
+    rm(base)
+    val texts = new Texts(9L)
+    val (a, b) = (texts.fresh("apple"), texts.fresh("berry"))
+    def run(id: Long, rows: (Long, java.sql.Timestamp, String)*): Unit =
+      NearDupIngest.processBatch(textBatch(rows: _*), id, "specrun",
+        s"$base/index", s"$base/corpus", maxHamming = 12, watermarkMs = 2L * 3600 * 1000)
+    val key = "spark.sql.session.timeZone"
+    val previous = spark.conf.get(key)
+    val names = new ExecutionNames
+    spark.listenerManager.register(names)
+    try {
+      // 22:30 on Jan 1 in Los Angeles, 06:30 on Jan 2 in UTC: the index
+      // row lands under d=2024-01-01
+      spark.conf.set(key, "America/Los_Angeles")
+      run(0L, (1L, instant("2024-01-02T06:30:00Z"), a))
+      spark.conf.set(key, "UTC")
+      // half an hour later, probed under UTC: the cutoff (05:00Z Jan 2)
+      // falls on Jan 2, so a prune without the day of slack would skip
+      // the d=2024-01-01 partition and admit the near-dup
+      names.during(run(1L, (2L, instant("2024-01-02T07:00:00Z"), texts.variant(a, 0)),
+        (3L, instant("2024-01-02T07:00:01Z"), b)))
+    } finally {
+      spark.listenerManager.unregister(names)
+      spark.conf.set(key, previous)
+    }
+    assert(new java.io.File(s"$base/index/d=2024-01-01").isDirectory)
+    assert(spark.read.parquet(s"$base/corpus").select("doc_id").as[Long]
+      .collect().sorted === Array(1L, 3L), "the near-dup across midnight must be dropped")
+    // the probe runs inside the persisted survivors, which the writes
+    // read through the cache
+    object Walk extends AdaptiveSparkPlanHelper {
+      def scans(p: SparkPlan): Seq[FileSourceScanExec] = flatMap(p) {
+        case s: FileSourceScanExec => Seq(s)
+        case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+        case _ => Nil
+      }
+    }
+    val indexScans = names.plans.asScala.toSeq.flatMap(Walk.scans)
+      .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/index")))
+    assert(indexScans.nonEmpty, "the steady batch must scan the standing index")
+    assert(indexScans.forall(_.partitionFilters.exists(_.references.exists(_.name == "d"))),
+      s"every index scan must prune on d: ${indexScans.map(_.partitionFilters)}")
+  }
+
+  test("the leakage index compacts on the cadence; a later straddle alerts as before") {
+    val base = new java.io.File("target/leakage-compact-spec")
+    rm(base)
+    val texts = new Texts(11L)
+    val a = texts.fresh("apple")
+    val straddle = (0 until 400).map(texts.variant(a, _))
+      .find(v => texts.splitOf(v) != texts.splitOf(a)).get
+    def at(minute: Long) = instant("2024-01-01T10:00:00Z").toInstant.plusSeconds(60 * minute)
+    def run(id: Long, text: String): Unit =
+      LeakageIngest.processBatch(
+        textBatch((id + 1, java.sql.Timestamp.from(at(id)), text)), id, "specrun",
+        s"$base/index", s"$base/alerts", maxHamming = 12, watermarkMs = 2L * 3600 * 1000)
+    run(0L, a)
+    for (id <- 1L to 31L) run(id, texts.fresh(s"t$id"))
+    val before = parquetFileCount(s"$base/index")
+    assert(before >= 32, s"one index partition per batch, got $before files")
+    run(32L, texts.fresh("t32")) // batch 32 is on the default cadence
+    val after = parquetFileCount(s"$base/index")
+    assert(after < before, s"compaction must shrink the index: $before -> $after files")
+    assert(spark.read.parquet(s"$base/index").select("doc_id").as[Long].collect().sorted ===
+      (1L to 33L).toArray, "compaction must keep every indexed arrival")
+    run(33L, straddle)
+    val alerts = spark.read.parquet(s"$base/alerts")
+      .select("doc_id", "matched_id", "split_new", "split_old")
+      .as[(Long, Long, String, String)].collect().toSeq
+    assert(alerts === Seq((34L, 1L, texts.splitOf(straddle), texts.splitOf(a))),
+      s"got $alerts")
   }
 }
