@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-/** Session-scoped registry of operator-internal persisted frames.
+/** The one owner of session-keyed state: each live session has one
+  * `Scope` holding the blocks operators persisted, the checkpoint
+  * RDDs they registered, and every memo keyed by that session.
   *
   * Several operators persist() a small intermediate (sign sketches,
   * simhash signatures, candidate pair lists) because the frame is read
@@ -13,29 +16,71 @@ import java.util.concurrent.ConcurrentHashMap
   * runs — so without a registry those blocks accumulate for the life
   * of the session (the old workaround was a blanket
   * `cacheManager.clearCache()`, which also evicts caches the caller
-  * owns, e.g. the bench's preloaded tables).
+  * owns, e.g. the bench's preloaded tables). Operators route persists
+  * through [[persist]]; a long-lived session calls [[release]] between
+  * pipelines to drop exactly the blocks this module created and nothing
+  * else.
   *
-  * Operators route persists through [[persist]]; a long-lived session
-  * calls [[release]] between pipelines to drop exactly the blocks this
-  * module created and nothing else. Registration is deduplicated by the
-  * analyzed plan's semantic hash, so re-running the same query persists
-  * (and later unpersists) each distinct plan once instead of warning
-  * "already cached" per rerun. Entries whose session has stopped are
-  * swept on every call, so a dead session's registrations (and the
-  * session object itself) never pin memory.
-  */
+  * Two lifetimes:
+  *  - per release: persisted frames, checkpoint RDDs and the memos of a
+  *    `perRelease` [[Kind]] ([[memoFrame]], [[decideOnce]]) are dropped
+  *    by [[release]], so a fresh pipeline re-measures and rebuilds
+  *    against the data as it is then;
+  *  - per session: the other kinds ([[Tables.preload]]'s frames and the
+  *    learned embedding indexes: k-means quantizers, PQ codebooks, PCA
+  *    fits, posting tables) live until the session stops. Data
+  *    rewritten under an identical plan needs a new session or an
+  *    explicit [[forget]] of the kind.
+  *
+  * One build rule: a memo builds each key at most once, OUTSIDE the map
+  * lock (builds launch Spark jobs). Each key gets a holder whose lazy
+  * value runs the build; callers of the same key wait for that one
+  * build, and a build may memoize other keys of the same session. A
+  * build that throws is not memoized — the next caller builds again.
+  *
+  * One sweep: every call that reaches a scope first drops the scopes of
+  * stopped sessions, so a dead session's registrations (and the session
+  * object itself) never pin memory. */
 object Caches {
-  private val held =
-    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[Int, DataFrame]]()
+  /** A memo kind. Memos of a `perRelease` kind are dropped by
+    * [[release]]; the others live until the session stops. */
+  private[graft] final class Kind(name: String, val perRelease: Boolean = false) {
+    override def toString: String = name
+  }
 
-  /** Evict entries of `map` whose session (per `sessionOf`) has
-    * stopped — shared by this registry, [[Tables]]' preload cache and
-    * the IVF quantizer memo, so the sweep semantics can't drift apart
-    * across the three session-keyed maps. */
-  private[graft] def sweepStopped[K](map: ConcurrentHashMap[K, _])(
-      sessionOf: K => SparkSession): Unit = {
-    val it = map.keySet().iterator()
-    while (it.hasNext) if (sessionOf(it.next()).sparkContext.isStopped) it.remove()
+  private val Frame = new Kind("frame", perRelease = true)
+  private val Decision = new Kind("decision", perRelease = true)
+
+  /** Builds its value at most once, on first read. */
+  private final class Memo(private var build: () => Any) {
+    @volatile private var done = false
+    lazy val value: Any = { val v = build(); build = null; done = true; v }
+    def built: Option[Any] = if (done) Some(value) else None
+  }
+
+  private final class Scope {
+    val persisted = new ConcurrentHashMap[Int, DataFrame]()
+    val rdds = new ConcurrentLinkedQueue[RDD[_]]()
+    val memos = new ConcurrentHashMap[(Kind, Any), Memo]()
+
+    /** Drop the memos whose kind matches; returns the built values. */
+    def drop(kind: Kind => Boolean): Seq[Any] = {
+      val out = Seq.newBuilder[Any]
+      val it = memos.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (kind(e.getKey._1)) { it.remove(); e.getValue.built.foreach(out += _) }
+      }
+      out.result()
+    }
+  }
+
+  private val scopes = new ConcurrentHashMap[SparkSession, Scope]()
+
+  private def scope(spark: SparkSession): Scope = {
+    val it = scopes.keySet().iterator()
+    while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
+    scopes.computeIfAbsent(spark, _ => new Scope)
   }
 
   /** persist() + register for later [[release]]. Returns `df`. A frame
@@ -43,30 +88,36 @@ object Caches {
     * registered for this session is NOT persisted again — the cache
     * manager would resolve it to the existing InMemoryRelation anyway. */
   def persist(df: DataFrame): DataFrame = {
-    sweepStopped(held)(identity)
-    val perSession =
-      held.computeIfAbsent(df.sparkSession, _ => new ConcurrentHashMap[Int, DataFrame]())
-    perSession.computeIfAbsent(
+    scope(df.sparkSession).persisted.computeIfAbsent(
       df.queryExecution.analyzed.semanticHash(),
       _ => { df.persist(); df })
     df
   }
 
-  private val heldRdds =
-    new ConcurrentHashMap[SparkSession, java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]]()
-
   /** Register a directly-persisted RDD (e.g. a `localCheckpoint`'s
     * backing RDD) for release. DataFrame.unpersist only reaches the
     * cache manager, so checkpoint blocks need their own ledger. */
-  def registerRdd(spark: SparkSession, rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    sweepStopped(heldRdds)(identity)
-    heldRdds
-      .computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentLinkedQueue())
-      .add(rdd)
+  def registerRdd(spark: SparkSession, rdd: RDD[_]): Unit =
+    scope(spark).rdds.add(rdd)
+
+  /** The memo of `key` under `kind` for `spark`, built by `build` on
+    * first use (see the build rule above). */
+  private[graft] def memo[T](spark: SparkSession, kind: Kind, key: Any)(build: => T): T =
+    scope(spark).memos.computeIfAbsent((kind, key), _ => new Memo(() => build))
+      .value.asInstanceOf[T]
+
+  /** The memo of `key` under `kind` if it is already built; never
+    * builds and never waits for a build in flight. */
+  private[graft] def built[T](spark: SparkSession, kind: Kind, key: Any): Option[T] = {
+    val s = scopes.get(spark)
+    val m = if (s == null) null else s.memos.get((kind, key))
+    if (m == null) None else m.built.map(_.asInstanceOf[T])
   }
 
-  private val frames =
-    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[Any, DataFrame]]()
+  /** Drop every memo of `kind` for `spark`; returns the built values
+    * (for kinds whose values own something outside the JVM). */
+  private[graft] def forget(spark: SparkSession, kind: Kind): Seq[Any] =
+    scope(spark).drop(_ eq kind)
 
   /** Memoize an EAGERLY-BUILT frame by an input-derived key. The
     * semantic-hash dedup in [[persist]] keys on the OUTPUT plan, which
@@ -74,84 +125,46 @@ object Caches {
     * (localCheckpoint lineages contain fresh LogicalRDDs, so every
     * build hashes differently): without this, each invocation of the
     * staged pair sweep would re-run all its waves and strand another
-    * persisted frame. Key on what went IN (source plan hash + the
-    * knobs); lifetime is the same release() cycle as every other
-    * registration here. Build runs OUTSIDE the map lock (it launches
-    * Spark jobs); a racing duplicate build is wasted work, not a leak
-    * — the loser's persist is released with the session's ledger. */
-  def memoFrame(spark: SparkSession, key: Any)(build: => DataFrame): DataFrame = {
-    sweepStopped(frames)(identity)
-    val perSession =
-      frames.computeIfAbsent(spark, _ => new ConcurrentHashMap[Any, DataFrame]())
-    val cached = perSession.get(key)
-    if (cached != null) cached
-    else {
-      val built = build
-      val prior = perSession.putIfAbsent(key, built)
-      if (prior != null) prior else built
-    }
-  }
+    * persisted frame. Key on what went IN (source plan + the knobs). */
+  def memoFrame(spark: SparkSession, key: Any)(build: => DataFrame): DataFrame =
+    memo(spark, Frame, key)(build)
 
   /** Drop ONLY the [[memoFrame]] entries for `spark` (bench hook). The
-    * persisted inputs and the checkpoint-RDD ledger stay registered, so
-    * the next identical build re-pays exactly the memoized pass (e.g.
-    * connected components) against the still-standing inputs — the
-    * shared-floor contract graft.Bench charges its pair family under.
-    * Superseded checkpoint blocks are released with the family's normal
-    * [[release]]. */
-  def clearMemoFrames(spark: SparkSession): Unit = { frames.remove(spark); () }
-
-  private val decisions =
-    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[(Int, Long), java.lang.Boolean]]()
+    * persisted inputs, the checkpoint-RDD ledger and the decisions
+    * stay, so the next identical build re-pays exactly the memoized
+    * pass (e.g. connected components) against the still-standing
+    * inputs — the shared-floor contract graft.Bench charges its pair
+    * family under. Superseded checkpoint blocks are released with the
+    * family's normal [[release]]. */
+  def clearMemoFrames(spark: SparkSession): Unit = forget(spark, Frame)
 
   /** Memoize a measured boolean decision (e.g. "does this frame fit
-    * the broadcast budget") per (analyzed-plan semantic hash, budget),
-    * scoped to the SAME lifetime as this registry's persists: a plan
-    * measured once is not re-counted on every rebuild of the same
-    * query (graft.Bench's repeat runs were paying one count() job per
-    * plan construction), but [[release]] clears the memo together with
-    * the cached frames — so a long-lived session that releases between
-    * pipelines re-measures against the data as it is THEN, keeping the
+    * the broadcast budget") per (analyzed-plan semantic hash, budget):
+    * a plan measured once is not re-counted on every rebuild of the
+    * same query (graft.Bench's repeat runs were paying one count() job
+    * per plan construction), while [[release]] keeps the
     * measured-broadcast doctrine honest for growing corpora. */
   def decideOnce(spark: SparkSession, planKey: Int, budget: Long)(
-      measure: => Boolean): Boolean = {
-    sweepStopped(decisions)(identity)
-    val perSession = decisions
-      .computeIfAbsent(spark, _ => new ConcurrentHashMap[(Int, Long), java.lang.Boolean]())
-    val key = (planKey, budget)
-    // Measure OUTSIDE the map's bin lock: the closure runs a Spark
-    // count() job that can take seconds (and could re-enter decideOnce,
-    // which computeIfAbsent forbids). A rare duplicate measurement under
-    // a race is harmless — putIfAbsent keeps the first answer.
-    val cached = perSession.get(key)
-    if (cached != null) cached.booleanValue()
-    else {
-      val measured: java.lang.Boolean = measure
-      val prior = perSession.putIfAbsent(key, measured)
-      (if (prior != null) prior else measured).booleanValue()
-    }
-  }
+      measure: => Boolean): Boolean =
+    memo(spark, Decision, (planKey, budget))(measure)
 
-  /** Unpersist every frame and RDD registered for `spark`
-    * (blocking=false: the executors drop blocks asynchronously;
-    * subsequent queries just recompute — except checkpoint RDDs, whose
-    * consumers must re-run the producing operator). Safe to call when
-    * nothing is registered. */
+  /** Unpersist every frame and RDD registered for `spark` and drop its
+    * per-release memos (blocking=false: the executors drop blocks
+    * asynchronously; subsequent queries just recompute — except
+    * checkpoint RDDs, whose consumers must re-run the producing
+    * operator). Safe to call when nothing is registered. */
   def release(spark: SparkSession): Unit = {
-    val perSession = held.remove(spark)
-    if (perSession != null) perSession.values().forEach(_.unpersist())
-    val rdds = heldRdds.remove(spark)
-    if (rdds != null) rdds.forEach(_.unpersist(blocking = false))
-    decisions.remove(spark)
-    frames.remove(spark)
-    sweepStopped(held)(identity)
+    val s = scope(spark)
+    val frames = s.persisted.values().iterator()
+    while (frames.hasNext) { val df = frames.next(); frames.remove(); df.unpersist() }
+    var rdd = s.rdds.poll()
+    while (rdd != null) { rdd.unpersist(blocking = false); rdd = s.rdds.poll() }
+    s.drop(_.perRelease)
   }
 
   /** Number of live registrations for `spark` (spec hook). */
   def registered(spark: SparkSession): Int = {
-    val perSession = held.get(spark)
-    val n = if (perSession == null) 0 else perSession.size()
-    val rdds = heldRdds.get(spark)
-    n + (if (rdds == null) 0 else rdds.size())
+    val s = scopes.get(spark)
+    if (s == null) 0 else s.persisted.size() + s.rdds.size()
   }
 }

@@ -20,26 +20,17 @@ object Tables {
     * (region=5, nation=25 rows in TPC-H regardless of SF). */
   val broadcastable: Set[String] = Set("region", "nation")
 
-  /** Per-(session,dir,name) cache of preloaded (possibly `.cache()`d)
-    * tables — populated by [[preload]] so the bench can measure compute
-    * without re-reading parquet per query. Keyed by session identity so
-    * a preload in one session can never hand a stale DataFrame to
-    * another; query code always goes through [[load]], so correctness
-    * runs (no preload) read straight from disk. Entries whose session
-    * has stopped are swept on every preload/clear (a stopped session's
-    * cached blocks are gone anyway; holding the key would pin the
-    * session and its plans against GC for the JVM's life). */
-  private val cached =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  /** [[preload]]'s frames: a session memo in [[Caches]] keyed by
+    * (dir, name), so a preload in one session can never hand a stale
+    * DataFrame to another. Query code always goes through [[load]], so
+    * correctness runs (no preload) read straight from disk. */
+  private val Preloaded = new Caches.Kind("preloaded table")
 
-  private def sweepStopped(): Unit = Caches.sweepStopped(cached)(_._1)
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val hit = cached.get((spark, dir, name))
-    if (hit != null) hit
-    else if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Caches.built[DataFrame](spark, Preloaded, (dir, name)).getOrElse {
+      if (name == "events") loadEvents(spark, dir)
+      else spark.read.parquet(s"$dir/$name.parquet")
+    }
 
   /** The physical type of `events.ts` is environment-owned and has
     * changed underneath the repo once already (TIMESTAMP(NANOS) →
@@ -109,9 +100,8 @@ object Tables {
     * inputs" — BIGBENCH.md). */
   def preload(spark: SparkSession, dir: String,
               except: Set[String] = Set("documents", "embeddings")): Unit = {
-    sweepStopped()
     all.filterNot(except).foreach { n =>
-      try {
+      try Caches.memo(spark, Preloaded, (dir, n)) {
         // Parquet split planning gives a compact file a handful of
         // scan partitions (measured: lineitem at sf0.1 cached as 3),
         // and the InMemoryRelation inherits them — so every partial
@@ -128,7 +118,7 @@ object Tables {
         val df = (if (big) raw.repartition(spark.sparkContext.defaultParallelism)
                   else raw).cache()
         df.count() // force materialization
-        cached.put((spark, dir, n), df)
+        df
       } catch { case NonFatal(e) =>
         System.err.println(s"[tables] preload skipped $n: ${e.getMessage}")
       }
@@ -145,9 +135,5 @@ object Tables {
 
   /** Drop this session's preloaded entries (returns [[load]] to its
     * side-effect-free read-from-disk behavior). */
-  def clearPreload(spark: SparkSession): Unit = {
-    sweepStopped()
-    val it = cached.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
+  def clearPreload(spark: SparkSession): Unit = Caches.forget(spark, Preloaded)
 }

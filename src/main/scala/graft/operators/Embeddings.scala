@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Caches, Tables}
 import graft.functions.VectorExpressions
 
 /** Similarity search over the `embeddings` table
@@ -382,6 +382,30 @@ object Embeddings {
     VectorExpressions.nearestCentroids(col("embedding"), unit, n)
   }
 
+  /** The learned indexes — k-means quantizers, PQ codebooks, PCA fits
+    * and posting tables — are session memos in [[graft.Caches]], keyed
+    * by the corpus plan's semantic hash + the fit's params: an index is
+    * built once and probed many times; without the memo every probe
+    * query re-runs `iters` full corpus passes. */
+  private val Quantizer = new Caches.Kind("k-means quantizer")
+  private val Codebook = new Caches.Kind("PQ codebook")
+  private val PcaFit = new Caches.Kind("PCA fit")
+  private val PostingTable = new Caches.Kind("posting table")
+
+  /** The coarse quantizer fit on `train` (whose plan hash is `planKey`). */
+  private def quantizer(train: DataFrame, planKey: Int, k: Int, iters: Int): Seq[Seq[Double]] =
+    Caches.memo(train.sparkSession, Quantizer, (planKey, k, iters))(fitKmeans(train, k, iters))
+
+  /** Forget this session's learned indexes and drop its posting tables
+    * (index rebuild after a data rewrite under an identical plan). */
+  def clearIndexes(spark: SparkSession): Unit = {
+    Seq(Quantizer, Codebook, PcaFit).foreach(Caches.forget(spark, _))
+    Caches.forget(spark, PostingTable).foreach { t =>
+      try spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      catch { case scala.util.control.NonFatal(_) => }
+    }
+  }
+
   /** IVF (inverted-file) ANN — the centroid-partitioned scale path:
     * 1. coarse quantizer: deterministic k-means (Lloyd) — init from
     *    nCentroids hash-ordered corpus rows, `iters` rounds of
@@ -401,29 +425,7 @@ object Embeddings {
     * vs brute force is a stable spec assertion. Complements
     * [[annSketch]]: IVF wins when the corpus clusters; the sketch
     * path when it doesn't. */
-  /** Session-scoped memo of trained coarse quantizers, keyed by the
-    * corpus plan's semantic hash + k-means params. An IVF index is
-    * built once and probed many times; without the memo every probe
-    * query re-runs `iters` full corpus passes. Same staleness caveat
-    * as any index: data rewritten under an identical plan needs a new
-    * session (or an explicit [[clearQuantizers]]). */
-  private val quantizers = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, Int, Int), Seq[Seq[Double]]]()
-
-  /** Evict entries whose session has stopped (a memoized quantizer is
-    * just k×d doubles, but the session key would otherwise pin the
-    * whole stopped session against GC). Called on every memo access. */
-  private def sweepQuantizers(): Unit = graft.Caches.sweepStopped(quantizers)(_._1)
-
-  def clearQuantizers(spark: SparkSession): Unit = {
-    sweepQuantizers()
-    val it = quantizers.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
-
-  /** Build-once names of cid-bucketed posting-list TABLES, keyed like
-    * [[quantizers]] (corpus plan's semantic hash + index params). The
-    * posting lists ARE the index, and an index at lake scale is a
+  /** The posting lists ARE the index, and an index at lake scale is a
     * persisted bucketed TABLE, not a session cache: the old
     * `persist(rows.repartition(col("cid")))` build needed the full
     * shuffle's files AND the cache blocks on disk CONCURRENTLY
@@ -435,12 +437,9 @@ object Embeddings {
     * cells arrive as an `IN` literal list on the bucket column, so
     * the scan reads only matching buckets (`SelectedBucketsCount` in
     * the plan) instead of streaming the whole corpus through a
-    * broadcast-join filter. Same staleness caveat as the quantizer
-    * memo: data rewritten under an identical plan needs a new session. */
-  private val postingTables = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, String), String]()
-
-  /** Cid-bucketed posting table for `rows` (must carry an int `cid`
+    * broadcast-join filter.
+    *
+    * Cid-bucketed posting table for `rows` (must carry an int `cid`
     * column), built at most once per (session, corpus-plan, tag).
     * `nRows` sizes the bucket count: ~2M posting rows per bucket,
     * clamped to [8, 256] — at 100M vectors that is 50 buckets × 50
@@ -448,29 +447,13 @@ object Embeddings {
     * reads ≤5 buckets (~10% of the bytes) instead of 100%. */
   private def postingTable(sp: SparkSession, planKey: Int, tag: String,
                            nRows: Long)(rows: => DataFrame): DataFrame = {
-    graft.Caches.sweepStopped(postingTables)(_._1)
-    val name = postingTables.computeIfAbsent((sp, planKey, tag), _ => {
+    val name = Caches.memo(sp, PostingTable, (planKey, tag)) {
       val buckets = math.min(256L, math.max(8L, nRows / 2000000L)).toInt
       val tbl = f"graft_posting_${tag}_${planKey & 0xffffffffL}%08x"
       graft.sources.Layout.writeBucketed(rows.coalesce(buckets), tbl, "cid", buckets)
       tbl
-    })
-    sp.table(name)
-  }
-
-  /** Drop this session's posting tables (index rebuild after a data
-    * rewrite under an identical plan). */
-  def clearPostingTables(spark: SparkSession): Unit = {
-    graft.Caches.sweepStopped(postingTables)(_._1)
-    val it = postingTables.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        try spark.sql(s"DROP TABLE IF EXISTS `${e.getValue}`")
-        catch { case scala.util.control.NonFatal(_) => }
-        it.remove()
-      }
     }
+    sp.table(name)
   }
 
   /** Literal probed-cell ids for bucket pruning: the probe side is
@@ -556,10 +539,7 @@ object Embeddings {
         4L * math.round(math.sqrt(n.toDouble)))).toInt
     val probes = if (nProbe > 0) nProbe else math.max(3, nLists / 16)
     val planKey = emb.queryExecution.analyzed.semanticHash()
-    sweepQuantizers()
-    val cents = quantizers.computeIfAbsent(
-      (sp, planKey, nLists, iters),
-      _ => fitKmeans(emb, nLists, iters))
+    val cents = quantizer(emb, planKey, nLists, iters)
     // The posting lists ARE the index — a one-time cid-bucketed TABLE
     // (see [[postingTable]]): the build streams the assignment pass
     // into bucketed parquet with no shuffle and no standing cache, and
@@ -702,10 +682,7 @@ object Embeddings {
       if (n <= fitCap) emb
       else emb.filter(pmod(xxhash64(col("vec_id")), lit(n / fitCap + 1)) === 0)
     val planKey = train.queryExecution.analyzed.semanticHash()
-    sweepQuantizers()
-    val cents = quantizers.computeIfAbsent(
-      (sp, planKey, nLists, iters),
-      _ => fitKmeans(train, nLists, iters))
+    val cents = quantizer(train, planKey, nLists, iters)
     val cap = 16384L
     val sample =
       if (n <= cap) emb
@@ -1000,6 +977,18 @@ object Embeddings {
         books(s))): _*).as("codes"))
   }
 
+  /** Total [[fitPq]] invocations (spec hook: asserts the memo makes
+    * repeated [[annPq]] calls fit-free). */
+  private[graft] val pqFitCount = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The PQ codebooks fit on `emb` (whose plan hash is `planKey`): fit
+    * once per corpus and reused by every encode/probe — without the
+    * memo each [[annPq]] call re-runs `iters` collect jobs. */
+  private def codebook(emb: DataFrame, planKey: Int, m: Int,
+                       codebookSize: Int): Seq[Seq[Seq[Double]]] =
+    Caches.memo(emb.sparkSession, Codebook, (planKey, m, codebookSize, 4))(
+      fitPq(emb, m, codebookSize))
+
   /** PQ top-k, two-stage (the IVFPQ-with-rerank pattern): exact query
     * embeddings scored against PQ-RECONSTRUCTED corpus vectors
     * (asymmetric comparison — queries stay exact, the corpus scan pays
@@ -1011,32 +1000,10 @@ object Embeddings {
     * cannot preserve a 0.25-over-σ ranking margin); routing only the
     * FINAL ranking through exact vectors restores recall while the
     * full-corpus pass still runs on codes. */
-  /** Session-scoped memo of trained PQ codebooks, keyed like
-    * [[quantizers]] (corpus plan's semantic hash + PQ params): a
-    * codebook is fit once per corpus and reused by every encode/probe —
-    * without the memo each [[annPq]] call re-runs `iters` collect jobs.
-    * Same staleness caveat as the quantizer memo. */
-  private val codebooks = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, Int, Int, Int), Seq[Seq[Seq[Double]]]]()
-
-  /** Total [[fitPq]] invocations (spec hook: asserts the memo makes
-    * repeated [[annPq]] calls fit-free). */
-  private[graft] val pqFitCount = new java.util.concurrent.atomic.AtomicLong()
-
-  def clearCodebooks(spark: SparkSession): Unit = {
-    graft.Caches.sweepStopped(codebooks)(_._1)
-    val it = codebooks.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
-
   def annPq(corpus: DataFrame, queryIds: Column, k: Int,
             m: Int = 8, codebookSize: Int = 16, candFactor: Int = 15): DataFrame = {
-    val sp = corpus.sparkSession
     val emb = corpus.select(col("vec_id"), col("embedding"))
-    graft.Caches.sweepStopped(codebooks)(_._1)
-    val books = codebooks.computeIfAbsent(
-      (sp, emb.queryExecution.analyzed.semanticHash(), m, codebookSize, 4),
-      _ => fitPq(emb, m, codebookSize))
+    val books = codebook(emb, emb.queryExecution.analyzed.semanticHash(), m, codebookSize)
     val booksLit = typedlit(books)
     val recon = pqEncode(emb, books)
       .select(col("vec_id"),
@@ -1107,7 +1074,7 @@ object Embeddings {
     * only for k·candFactor survivors per query.
     *
     * Both learned stages reuse the session memos (coarse quantizer ←
-    * [[quantizers]], codebooks ← [[codebooks]], keyed by the corpus
+    * [[quantizer]], codebooks ← [[codebook]], keyed by the corpus
     * plan), and the posting list is a one-time cid-bucketed TABLE like
     * [[annIvf]]'s (see [[postingTable]]) that probes bucket-prune. */
   def annIvfPq(corpus: DataFrame, queryIds: Column, k: Int,
@@ -1123,14 +1090,8 @@ object Embeddings {
         4L * math.round(math.sqrt(n.toDouble)))).toInt
     val probes = if (nProbe > 0) nProbe else math.max(3, nLists / 16)
     val planKey = emb.queryExecution.analyzed.semanticHash()
-    sweepQuantizers()
-    val cents = quantizers.computeIfAbsent(
-      (sp, planKey, nLists, iters),
-      _ => fitKmeans(emb, nLists, iters))
-    graft.Caches.sweepStopped(codebooks)(_._1)
-    val books = codebooks.computeIfAbsent(
-      (sp, planKey, m, codebookSize, 4),
-      _ => fitPq(emb, m, codebookSize))
+    val cents = quantizer(emb, planKey, nLists, iters)
+    val books = codebook(emb, planKey, m, codebookSize)
     val sub = books.head.head.length
     // ‖codeword‖² lookup, flattened like the query LUT — PqAdc over it
     // with a vector's own codes yields ‖recon‖² (subspaces are
@@ -1194,16 +1155,6 @@ object Embeddings {
       .orderBy("q_id", "rnk")
   }
 
-  /** Registered query (rows-only: both stages are learned): IVF-PQ
-    * top-10 for the first 10 vectors at the same 16/5/3 coarse
-    * geometry as [[embedAnnIvf]]. Measured recall@10 on the driver
-    * corpus: 0.88 vs brute force (the composite pays both the IVF cell
-    * miss — 0.93 alone — and the PQ prerank miss; spec floor 0.8).
-    * [[embedAnnIvfPqPlanted]] is the hard-oracle twin. */
-  def embedAnnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    annIvfPq(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10,
-      nCentroids = 16, nProbe = 5, nAssign = 3)
-
   /** Registered query (HARD oracle, planted-structure recipe): the
     * composite index verified end-to-end. The clone's codes are
     * IDENTICAL to the query's (deterministic encode of an identical
@@ -1257,10 +1208,7 @@ object Embeddings {
       if (nCentroids > 0) nCentroids
       else math.min(4096L, math.max(16L, vecs.count() / 1024L)).toInt
     val planKey = vecs.queryExecution.analyzed.semanticHash()
-    sweepQuantizers()
-    val cents = quantizers.computeIfAbsent(
-      (vecs.sparkSession, planKey, k, iters),
-      _ => fitKmeans(vecs, k, iters))
+    val cents = quantizer(vecs, planKey, k, iters)
     // norm computed ONCE per vector, not twice per pair: each vector
     // participates in ~cell-size pairs, so folding the norm into the
     // cached frame removes 2·|pairs|·dim multiply-adds from the
@@ -1410,12 +1358,11 @@ object Embeddings {
 
   // ---- PCA-reduced retrieval ----
 
-  /** Session-scoped memo of fitted PCA bases (same lifecycle rules as
-    * the IVF quantizer and PQ codebook memos): the sufficient-stats
-    * aggregate is one corpus pass — paid once per (corpus, d), probed
-    * many times. */
-  private val pcaBases = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int, Int), (Array[Double], Array[Array[Double]])]()
+  /** A fitted PCA: the mean, the top-d basis and the full
+    * sorted-descending eigen-spectrum (the spectrum lets the specs pin
+    * "top-d variance captured" without a second corpus pass). */
+  private final case class Pca(mean: Array[Double], basis: Array[Array[Double]],
+                               spectrum: Array[Double])
 
   /** Cyclic Jacobi eigensolver for a small symmetric matrix (the
     * covariance here is dim×dim = 64×64 — microseconds on the driver;
@@ -1490,6 +1437,11 @@ object Embeddings {
     * built from it — is deterministic. */
   def fitPca(emb: DataFrame, d: Int, dim: Int = 64)
       : (Array[Double], Array[Array[Double]]) = {
+    val fit = pca(emb, d, dim)
+    (fit.mean, fit.basis)
+  }
+
+  private def pca(emb: DataFrame, d: Int, dim: Int): Pca = {
     import org.apache.spark.sql.graftshim.ColumnBridge
     val flat = emb.agg(ColumnBridge.column(
         graft.functions.GramMatrix(
@@ -1508,35 +1460,22 @@ object Embeddings {
       val pivot = comp.indices.maxBy(i => math.abs(comp(i)))
       if (comp(pivot) < 0) comp.map(x => -x) else comp
     }
-    pcaSpectra.put(
-      (emb.sparkSession, emb.queryExecution.analyzed.semanticHash()),
-      order.map(_._1).toArray)
-    (mean, basis.toArray)
+    Pca(mean, basis.toArray, order.map(_._1).toArray)
   }
-
-  /** Sorted-descending eigen-spectrum of the last [[fitPca]] per
-    * corpus — lets the specs pin "top-d variance captured" without a
-    * second corpus pass. */
-  private val pcaSpectra = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Int), Array[Double]]()
 
   /** Fraction of total variance the top-d components capture
     * (Σ top-d eigenvalues / trace). Fits through the memo if needed. */
   def pcaVarianceCaptured(emb: DataFrame, d: Int, dim: Int = 64): Double = {
-    memoFit(emb, d, dim)
-    val spectrum = pcaSpectra.get(
-      (emb.sparkSession, emb.queryExecution.analyzed.semanticHash()))
+    val spectrum = memoFit(emb, d, dim).spectrum
     spectrum.take(d).sum / spectrum.sum
   }
 
-  private def memoFit(emb: DataFrame, d: Int, dim: Int)
-      : (Array[Double], Array[Array[Double]]) = {
-    graft.Caches.sweepStopped(pcaBases)(_._1)
-    graft.Caches.sweepStopped(pcaSpectra)(_._1)
-    pcaBases.computeIfAbsent(
-      (emb.sparkSession, emb.queryExecution.analyzed.semanticHash(), d),
-      _ => fitPca(emb, d, dim))
-  }
+  /** The PCA fit of `emb`, a session memo: the sufficient-stats
+    * aggregate is one corpus pass — paid once per (corpus, d), probed
+    * many times. */
+  private def memoFit(emb: DataFrame, d: Int, dim: Int): Pca =
+    Caches.memo(emb.sparkSession, PcaFit, (emb.queryExecution.analyzed.semanticHash(), d))(
+      pca(emb, d, dim))
 
   /** Project each embedding onto the top-d PCA components:
     * proj_k = ⟨x, e_k⟩ − ⟨mean, e_k⟩, the mean-dot a driver-side
@@ -1562,7 +1501,7 @@ object Embeddings {
     * SemDeDup). */
   def embedPca(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (mean, basis) = memoFit(emb, d, 64)
+    val Pca(mean, basis, _) = memoFit(emb, d, 64)
     val proj = pcaProject(emb, mean, basis)
     val queries = proj.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1581,7 +1520,7 @@ object Embeddings {
     val clones = emb0.filter(col("vec_id") < 10)
       .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
     val emb = emb0.union(clones)
-    val (mean, basis) = memoFit(emb, d, 64)
+    val Pca(mean, basis, _) = memoFit(emb, d, 64)
     val proj = pcaProject(emb, mean, basis)
     val queries = proj.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1701,7 +1640,7 @@ object Embeddings {
     * and the `embed_pca_planted` clone row instead. */
   def embedPcaGate(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (mean, basis) = memoFit(emb, d, 64)
+    val Pca(mean, basis, _) = memoFit(emb, d, 64)
     val orthoErr = (for (i <- basis.indices; j <- i until basis.length) yield
       math.abs(basis(i).zip(basis(j)).map { case (x, y) => x * y }.sum -
         (if (i == j) 1.0 else 0.0))).max

@@ -1353,6 +1353,9 @@ object Relational {
       buckets: Int = 2048): Seq[(String, Seq[Option[Double]])] = {
     val spark = df.sparkSession
     import spark.implicits._
+    val keyType = df.schema(key).dataType
+    require(keyType == org.apache.spark.sql.types.StringType,
+      s"groupedExactPercentiles: group key `$key` must be a string, got $keyType")
     val stats = df.groupBy(col(key).as("k"))
       .agg(count(col(value)).as("n"),
         min(col(value)).cast("double").as("mn"),

@@ -165,13 +165,4 @@ object TypedCsv {
       }
     } finally w.close()
   }
-
-  /** Distributed CSV sink (plain header, directory of part files) —
-    * the form that scales; DESC ordering is real ordering, not the
-    * reference's reversed-write trick (`table.cpp:271-285`). */
-  def saveDistributed(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite")
-      .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .csv(dir)
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.{Bench, Caches, GraftSession}
+import graft.{Bench, Caches}
 
 /** Same-scale comparison against BASELINE.md: the reference's published
   * numbers are at 10M rows (README.md:44-62); the driver's sf0.1 data
@@ -18,8 +18,7 @@ object BigBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
     val dir = s"target/bigbench/rows_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
 
     // deterministic synthesis: hash-derived columns, 32 partitions
     if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
@@ -104,8 +103,7 @@ object BigBenchEvents {
     val names = BigBench.selected(args, allNames)
     val rows = args.headOption.map(_.toLong).getOrElse(10000000L)
     val dir = s"target/bigbench/events_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
 
     if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists()) {
       val users = math.max(rows / 67, 1L) // ~67 events/user, like sf0.01
@@ -188,8 +186,7 @@ object BigBenchLlm {
     val names = BigBench.selected(args, allNames)
     val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
     val dir = s"target/bigbench/llm_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
 
     // embed-tier queries read only embeddings.parquet; an embed-only
     // subset must not pay (or re-create — the 100M release run

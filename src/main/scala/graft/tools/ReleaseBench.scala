@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.Bench
 import graft.operators.{Crawl, Documents}
 
 /** The composed 100M RELEASE run — every stage of the production
@@ -63,8 +63,7 @@ object BigBenchRelease {
     val srcDir = s"target/bigbench/llm_$rows/documents.parquet"
     require(new java.io.File(srcDir).exists(), s"run BigBenchLlm $rows first ($srcDir)")
     val base = s"target/bigbench/release_$rows"
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     import spark.implicits._
 
     // zstd stage checkpoints (default snappy): ~30% smaller outputs,

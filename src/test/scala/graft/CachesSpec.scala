@@ -1,10 +1,13 @@
 package graft
 
-import graft.operators.Documents
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.functions.col
+import graft.operators.{Documents, Embeddings}
 
-/** The operator-internal persist registry: frames are registered when
-  * an operator persists an intermediate and dropped — and ONLY those
-  * frames — by a scoped release. */
+/** The session scope: frames are registered when an operator persists
+  * an intermediate and dropped — and ONLY those frames — by a scoped
+  * release; memos build each key once and live per release or per
+  * session by kind. */
 class CachesSpec extends SparkSuite {
 
   test("operator persists register with Caches and release unpersists them") {
@@ -76,5 +79,69 @@ class CachesSpec extends SparkSuite {
     assert(owned.storageLevel.useMemory,
       "scoped release must not evict caches it did not create")
     owned.unpersist()
+  }
+
+  test("scope lifetimes: release rebuilds per-release memos, session memos survive it") {
+    Caches.release(spark)
+    var frames = 0
+    var decisions = 0
+    def frame() = Caches.memoFrame(spark, ("spec-lifetime", 1)) {
+      frames += 1; spark.range(1).toDF("x")
+    }
+    def decide() = Caches.decideOnce(spark, planKey = 7, budget = 1L) { decisions += 1; true }
+    frame(); decide(); frame(); decide()
+    assert((frames, decisions) === ((1, 1)))
+    Caches.release(spark)
+    frame(); decide()
+    assert((frames, decisions) === ((2, 2)), "release must drop both per-release memos")
+    // the PQ codebooks are a session memo: a release between two probes
+    // of the same corpus must not refit them
+    val emb = Tables.load(spark, SparkSpec.sfTiny, "embeddings").select("vec_id", "embedding")
+    Embeddings.annPq(emb, col("vec_id") < 3, k = 5).count()
+    val fits = Embeddings.pqFitCount.get()
+    Caches.release(spark)
+    Embeddings.annPq(emb, col("vec_id") < 3, k = 5).count()
+    assert(Embeddings.pqFitCount.get() === fits, "a session memo must survive release")
+    Caches.release(spark)
+  }
+
+  test("a memo build may memoize another key of the same session; each builds once") {
+    Caches.release(spark)
+    var outer = 0
+    var inner = 0
+    def get() = Caches.memoFrame(spark, ("spec-outer", 1)) {
+      outer += 1
+      val fits = Caches.decideOnce(spark, planKey = 11, budget = 2L) { inner += 1; true }
+      Caches.memoFrame(spark, ("spec-inner", 1)) {
+        inner += 1; spark.range(if (fits) 2 else 0).toDF("x")
+      }
+    }
+    assert(get().count() === 2)
+    assert(get().count() === 2)
+    assert((outer, inner) === ((1, 2)))
+    Caches.release(spark)
+  }
+
+  test("concurrent callers of one key share one build") {
+    Caches.release(spark)
+    val builds = new AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 4).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        Caches.memoFrame(spark, ("spec-race", 1)) {
+          builds.incrementAndGet()
+          Thread.sleep(200)
+          spark.range(1).toDF("x")
+        }
+        ()
+      })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(builds.get() === 1, "racing callers must wait for the one build")
+    Caches.release(spark)
   }
 }

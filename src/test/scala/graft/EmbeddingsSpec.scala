@@ -416,7 +416,7 @@ class EmbeddingsSpec extends SparkSuite {
   }
 
   test("annPq memoizes PQ codebooks — a repeated probe is fit-free") {
-    Embeddings.clearCodebooks(spark)
+    Embeddings.clearIndexes(spark)
     val before = Embeddings.pqFitCount.get()
     Embeddings.annPq(emb, col("vec_id") < 3, k = 5).count()
     assert(Embeddings.pqFitCount.get() === before + 1)
@@ -428,8 +428,7 @@ class EmbeddingsSpec extends SparkSuite {
 
   test("annIvf builds the posting lists as a cid-bucketed TABLE once; probes bucket-prune it") {
     Caches.release(spark)
-    Embeddings.clearQuantizers(spark)
-    Embeddings.clearPostingTables(spark)
+    Embeddings.clearIndexes(spark)
     Embeddings.annIvf(emb, col("vec_id") < 3, k = 5).count()
     val tables = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_posting_ivf_"))
@@ -448,7 +447,7 @@ class EmbeddingsSpec extends SparkSuite {
       "second probe must scan the bucketed posting table:\n" + p.take(2000))
     assert(p.contains("SelectedBucketsCount"),
       "posting scan must bucket-prune on the probed cells:\n" + p.take(2000))
-    Embeddings.clearPostingTables(spark)
+    Embeddings.clearIndexes(spark)
     Caches.release(spark)
   }
 

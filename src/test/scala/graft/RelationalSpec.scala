@@ -163,6 +163,15 @@ class RelationalSpec extends SparkSuite {
     }
   }
 
+  test("groupedExactPercentiles: a non-string group key fails by name, before any job") {
+    import spark.implicits._
+    val df = Seq((1, 2.0), (2, 3.0)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException] {
+      Relational.groupedExactPercentiles(df, "k", "v", Seq(0.5))
+    }
+    assert(e.getMessage.contains("`k`") && e.getMessage.contains("IntegerType"), e.getMessage)
+  }
+
   test("group_percentile (bracketed) matches per-p aggregates") {
     val got = Relational.groupPercentile(spark, dir).collect().toSeq
     val want = Tables.load(spark, dir, "events")
