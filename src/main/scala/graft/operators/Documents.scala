@@ -648,19 +648,6 @@ object Documents {
     * handful of bits. */
   def simhashCol: Column = graft.functions.VectorExpressions.simhash64(col("t"))
 
-  private def withSimhash(docs: DataFrame): DataFrame =
-    graft.Caches.persist(docs
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .select(col("doc_id"), simhashCol.as("simhash")))
-      // persist (via the releasable Caches registry), not repartition:
-      // an Exchange is only reused when the planner emits
-      // ReusedExchange, and under AQE + cached inputs the two sides of
-      // the band self-join each recompiled the interpreted simhash
-      // aggregate (measured: 262 s warm vs 6.4 s cold at 5k docs). The
-      // 16-byte cached rows are trivially small at any scale, and the
-      // InMemoryRelation is a boundary no predicate rewrite can push
-      // below.
-
   /** Engine-portable 60-bit SimHash signature: each token hashes to the
     * first 15 hex chars of its md5 (60 bits — fits a signed long in
     * BOTH engines with no sign games), tokens vote ±1 per bit, the
@@ -674,7 +661,14 @@ object Documents {
     * interpreted HOF fold, whose 60·|tokens| lambda dispatches per row
     * would tank the 1M-doc bench); the xxhash64 path ([[simhashCol]])
     * stays available where oracle portability isn't needed and the
-    * md5 cost matters. */
+    * md5 cost matters.
+    *
+    * Persisted (through the releasable [[graft.Caches]] registry), not
+    * repartitioned: an Exchange is only reused when the planner emits
+    * ReusedExchange, and under AQE + cached inputs the two sides of the
+    * band self-join each recompiled the signature (measured with the
+    * interpreted aggregate: 262 s warm vs 6.4 s cold at 5k docs). The
+    * 16-byte cached rows are trivially small at any scale. */
   def simhashPortableSigs(docs: DataFrame): DataFrame =
     graft.Caches.persist(docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
@@ -694,141 +688,35 @@ object Documents {
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
     simhashPairs(simhashPortableSigs(Tables.load(spark, dir, "documents")), maxHamming = 3)
 
-  /** Widest supported band (8/16/32 bits) whose 64/b bands still
-    * pigeonhole-GUARANTEE recall at `maxHamming` (needs bands ≥
-    * maxHamming + 1); 8-bit bands (probabilistic recall, like the
-    * MinHash bands) when even 8 bands can't guarantee. Wider is always
-    * better for cost — random pairs collide per band at 2⁻ᵇ — so auto
-    * picks the widest width the recall bar permits: maxHamming ≤ 1 →
-    * 32, ≤ 3 → 16 (the classic 4-band configuration), ≤ 7 → 8. Unlike
-    * [[Embeddings.autoCosineBandBits]] the width canNOT grow with
-    * log₂(corpus): a document's SimHash is semantically 64 bits, so
-    * past the scale where 16-bit bands' n²·2⁻¹⁶ random-collision term
-    * rivals linear work (~2M docs at maxHamming 3) the lever is a
-    * wider simhash (128-bit expression + proportionally wider bands),
-    * not a narrower recall guarantee. */
-  def autoSimhashBandBits(maxHamming: Int): Int =
-    Seq(32, 16, 8).find(w => 64 / w >= maxHamming + 1).getOrElse(8)
+  /** Band width for a 64-bit SimHash at `maxHamming`: the pigeonhole
+    * rule of [[Lsh.pigeonholeBits]] (whose scaladoc carries the
+    * rationale) — maxHamming ≤ 1 → 32, ≤ 3 → 16, else 8. */
+  def autoSimhashBandBits(maxHamming: Int): Int = Lsh.pigeonholeBits(64, maxHamming)
 
-  /** Band-join candidate generation + exact Hamming verify, reusable
-    * over any (doc_id, simhash) frame.
-    *
-    * `bandBits` is the scale knob: wider bands collide on random pairs
-    * at 2^-bandBits per band (so the quadratic false-candidate term
-    * shrinks exponentially as corpora grow), while 64/bandBits bands
-    * pigeonhole-guarantee recall only up to Hamming 64/bandBits − 1.
-    * The default (0 = auto) resolves via [[autoSimhashBandBits]] to
-    * the widest width the `maxHamming` bar permits. */
-  def simhashPairs(sims: DataFrame, maxHamming: Int, bandBits: Int = 0): DataFrame = {
-    require(Set(0, 8, 16, 32).contains(bandBits),
-      s"bandBits must be 0 (auto) or 8/16/32, got $bandBits")
-    val bw = if (bandBits == 0) autoSimhashBandBits(maxHamming) else bandBits
-    val bands = 64 / bw
-    val mask = (1L << bw) - 1
-    val banded = sims.select(col("doc_id"), col("simhash"),
-      explode(expr(
-        s"""transform(sequence(0, ${bands - 1}),
-           |          b -> struct(b AS band, shiftright(simhash, b * $bw) & $mask AS v))""".stripMargin)).as("bv"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.bv") === col("b.bv") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      // Hamming gate BEFORE distinct: at 1M docs the 16-bit bands admit
-      // ~30M random candidates, and distinct-ing them cost more than the
-      // whole rest of the query; the filter drops them map-side first.
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .orderBy("d1", "d2")
-  }
-
-  /** Cross-frame SimHash probe: which `newSigs` docs (doc_id, simhash)
-    * have a neighbor within `maxHamming` among `indexSigs`? The
-    * incremental twin of [[simhashPairs]] — same banding, but new docs
-    * band-join a STANDING index instead of the corpus self-joining, so
-    * an ingest batch costs O(|batch| + collisions), never re-pairing
-    * the corpus. Returns the matched new doc_ids (one row each).
-    * Feeds [[graft.streaming.NearDupIngest]]; also the batch shape for
-    * "which of these candidate docs near-duplicate the lake". */
-  def simhashProbe(newSigs: DataFrame, indexSigs: DataFrame,
-                   maxHamming: Int, bandBits: Int = 0): DataFrame =
-    simhashProbePairs(newSigs, indexSigs, maxHamming, bandBits)
-      .select(col("doc_id")).distinct()
-
-  /** [[simhashProbe]] keeping the matched PAIRS — (new `doc_id`,
-    * standing `matched_id`), distinct — instead of collapsing to the
-    * matched new ids: the AUDIT shape (who matched whom), which the
-    * streaming split-leakage monitor joins back to both sides'
-    * metadata. Same banding, same cost. */
-  def simhashProbePairs(newSigs: DataFrame, indexSigs: DataFrame,
-                        maxHamming: Int, bandBits: Int = 0): DataFrame = {
-    require(Set(0, 8, 16, 32).contains(bandBits),
-      s"bandBits must be 0 (auto) or 8/16/32, got $bandBits")
-    val bw = if (bandBits == 0) autoSimhashBandBits(maxHamming) else bandBits
-    val bands = 64 / bw
-    val mask = (1L << bw) - 1
-    def banded(df: DataFrame) = df.select(col("doc_id"), col("simhash"),
-      explode(expr(
-        s"""transform(sequence(0, ${bands - 1}),
-           |          b -> struct(b AS band, shiftright(simhash, b * $bw) & $mask AS v))""".stripMargin)).as("bv"))
-    banded(newSigs).as("a")
-      .join(banded(indexSigs).as("b"), col("a.bv") === col("b.bv"))
-      .filter(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= maxHamming)
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("matched_id"))
-      .distinct()
-  }
+  /** Near-dup pairs (d1 < d2, hamming ≤ `maxHamming`) over any
+    * (doc_id, simhash) frame: the [[Lsh]] bit-band self-join plus the
+    * exact Hamming gate. `bandBits` (8..32) trades the 2^-bandBits
+    * random-collision term against the pigeonhole recall bar; 0 (auto)
+    * takes [[autoSimhashBandBits]]. */
+  def simhashPairs(sims: DataFrame, maxHamming: Int, bandBits: Int = 0): DataFrame =
+    hammingPairs(sims, 1, maxHamming, bandBits)
 
   /** Near-dup pairs over a WIDE (words×64-bit) SimHash signature —
     * [[simhashPairs]] for `simhash: array<bigint>` columns built by
-    * [[graft.functions.VectorExpressions.SimHashWide]].
-    *
-    * What width buys, stated honestly: a Hamming bar is PER-BIT, so
-    * the bar equivalent to ham ≤ 3 on 64 bits is ham ≤ 6-7 on 128
-    * (E[ham] = nBits·p for match probability p) — pigeonhole then
-    * needs proportionally more bands and the guaranteed-recall
-    * configuration (8×16 on 128 bits for ham ≤ 7) carries ~2× the
-    * 64-bit random-collision term, not less. The width's real value
-    * is unlocking 32-BIT BANDS (`bandBits = 32`): 4 bands at
-    * 2⁻³² random collisions — the quadratic term is gone at any
-    * realistic corpus size — with recall that is pigeonhole-GUARANTEED
-    * to ham ≤ 3 and probabilistic above (strong for long documents
-    * with small edits, whose relative hamming is tiny; spec-measured
-    * on planted dups). Pick by regime:
-    *  - ham bar tight (≲ 3 over the wide signature): bandBits = 32 —
-    *    collision-free scale, guaranteed recall;
-    *  - ham bar loose (long-tail edits): stay on [[simhashPairs]] /
-    *    16-bit bands and pay the collision term, or verify with exact
-    *    Jaccard downstream.
-    * Auto (0) picks the widest 8/16/32 whose band count still
-    * pigeonhole-guarantees `maxHamming` over words×64 bits. */
+    * [[graft.functions.VectorExpressions.SimHashWide]]. What width buys
+    * is stated on [[Lsh]]: chiefly the 32-bit-band regime
+    * (`bandBits = 32`), collision-free at scale with recall guaranteed
+    * to ham ≤ 3. Auto (0) picks the widest 8/16/32 whose band count
+    * still pigeonhole-guarantees `maxHamming` over words×64 bits. */
   def simhashPairsWide(sims: DataFrame, maxHamming: Int, words: Int = 2,
-                       bandBits: Int = 0): DataFrame = {
-    require(Set(0, 8, 16, 32).contains(bandBits),
-      s"bandBits must be 0 (auto) or 8/16/32, got $bandBits")
-    val nBits = words * 64
-    val bw = if (bandBits == 0)
-      Seq(32, 16, 8).find(w => nBits / w >= maxHamming + 1).getOrElse(8)
-    else bandBits
-    val bands = nBits / bw
-    val mask = if (bw == 64) -1L else (1L << bw) - 1
-    // bw divides 64, so a band never straddles two signature words
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("simhash").getItem((b * bw) / 64), (b * bw) % 64)
-          .bitwiseAND(lit(mask)).as("v"))
-    }
-    def banded(df: DataFrame) = df.select(col("doc_id"), col("simhash"),
-      explode(array(bandCols: _*)).as("bv"))
-    val ham = (0 until words)
-      .map(w => bit_count(col("a.simhash").getItem(w)
-        .bitwiseXOR(col("b.simhash").getItem(w))))
-      .reduce(_ + _)
-    banded(sims).as("a")
-      .join(banded(sims).as("b"),
-        col("a.bv") === col("b.bv") && col("a.doc_id") < col("b.doc_id"))
-      .filter(ham <= maxHamming)
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"), ham.as("hamming"))
-      .distinct()
+                       bandBits: Int = 0): DataFrame =
+    hammingPairs(sims, words, maxHamming, bandBits)
+
+  private def hammingPairs(sims: DataFrame, words: Int, maxHamming: Int,
+                           bandBits: Int): DataFrame = {
+    val bits = if (bandBits == 0) Lsh.pigeonholeBits(words * 64, maxHamming) else bandBits
+    Lsh.candidates(sims, sims, Lsh.BitBands.over(words, bits), self = true, ("d1", "d2"),
+      sig = "simhash", maxHamming = Some(maxHamming))
       .orderBy("d1", "d2")
   }
 
@@ -857,67 +745,36 @@ object Documents {
     * 1. signature: nPerms=16 MinHash values per doc via the codegen'd
     *    [[graft.functions.VectorExpressions.MinHashSig]] (one loop,
     *    no Spark ML fit, no feature vectors).
-    * 2. candidates: 8 bands × 2 rows — a pair collides in a band with
-    *    P = J², so far pairs (J ≈ 0.05) survive a band at 0.25% while
-    *    J ≥ 0.6 pairs are caught by ≥1 of 8 bands with P ≈ 0.97. The
-    *    band join shuffles 24-byte (band, h1, h2, doc_id) rows — this
+    * 2. candidates: the [[Lsh]] self-join on 8 bands × 2 rows. The band
+    *    join shuffles 24-byte (band, h1, h2, doc_id) rows — this
     *    replaced `MinHashLSH.approxSimilarityJoin`, whose r=1
     *    OR-amplified buckets admit far pairs at P = J per table AND
     *    shuffle the full hashed-shingle vector 8× per doc (measured:
     *    25 GB spill and >30 min at 1M docs; this version: seconds).
-    * 3. verify: exact Jaccard on the candidates' shingle arrays —
-    *    precision 1.0 at `simThreshold`, so the estimator error never
-    *    reaches the output.
+    * 3. verify: [[Lsh.jaccardVerified]], exact Jaccard on the
+    *    candidates' shingle arrays.
     *
     * Not DuckDB-expressible (Spark-side hashing) → recall is asserted
     * against planted near-dups in the spec instead of an oracle row. */
-  def minhashPairs(docs: DataFrame, simThreshold: Double): DataFrame = {
-    val nPerms = 16
-    val bands = 8 // × 2 rows/band
-    // ONE streaming pass computes the 128-byte signatures; the fat
-    // shingle arrays are never persisted or shuffled (at 4M docs they
-    // are ~3.6 GB of string arrays — a persist that outgrows executor
-    // memory thrashes, and a sort-merge verify join over them on both
-    // d1 and d2 cost 10× the whole query).
-    val sigs = shingleArray(docs).select("doc_id", "sh")
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"),
-        graft.functions.VectorExpressions.minhashSig(col("sh"), nPerms).as("sig"))
-    bandedVerifiedPairs(docs, sigs, bands, simThreshold)
-  }
+  def minhashPairs(docs: DataFrame, simThreshold: Double): DataFrame =
+    minhashBanded(docs, graft.functions.VectorExpressions.minhashSig, simThreshold)
 
-  /** Shared tail of both MinHash variants: band a `(doc_id, sig)` frame
-    * (2 signature values per band), self-join per band for candidates,
-    * then exact-Jaccard-verify ONLY the candidate docs (precision 1.0 —
-    * estimator error never reaches the output). The band join shuffles
-    * narrow (band, h1, h2, doc_id) rows; the fat shingle arrays are
-    * recomputed for just the candidate subset and broadcast. */
-  private def bandedVerifiedPairs(docs: DataFrame, sigs: DataFrame,
-                                  bands: Int, simThreshold: Double): DataFrame = {
-    val banded = sigs.select(col("doc_id"), explode(expr(
-      s"""transform(sequence(0, ${bands - 1}),
-         |          b -> struct(b AS band, sig[b * 2] AS h1, sig[b * 2 + 1] AS h2))""".stripMargin)).as("bv"))
-    val cands = graft.Caches.persist(banded.as("a")
-      .join(banded.as("b"),
-        col("a.bv") === col("b.bv") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()) // tiny (band-bounded), read three times below
-    // exact verify re-shingles ONLY the candidate docs: broadcast
-    // semi-join on doc_id first, so the tokenizer runs on the
-    // candidate subset, then everything small joins broadcast.
-    def candSh(side: String): DataFrame =
-      shingleArray(docs.join(
-        broadcast(cands.select(col(side).as("doc_id")).distinct()),
-        Seq("doc_id"), "left_semi"))
-        .select(col("doc_id").as(side), col("sh").as(s"sh_$side"))
-    cands
-      .join(broadcast(candSh("d1")), "d1")
-      .join(broadcast(candSh("d2")), "d2")
-      .select(col("d1"), col("d2"),
-        Ops.r4(size(array_intersect(col("sh_d1"), col("sh_d2"))).cast("double") /
-          size(array_union(col("sh_d1"), col("sh_d2")))).as("jaccard"))
-      .filter(col("jaccard") >= simThreshold)
-      .orderBy("d1", "d2")
+  /** (doc_id, sig): 16 MinHash values per doc with a non-empty shingle
+    * set, in ONE streaming pass — the fat shingle arrays are never
+    * persisted or shuffled. */
+  private def minhashSigs(docs: DataFrame, hash: (Column, Int) => Column): DataFrame =
+    shingleArray(docs).select("doc_id", "sh")
+      .filter(size(col("sh")) > 0)
+      .select(col("doc_id"), hash(col("sh"), 16).as("sig"))
+
+  private val MinhashBands = Lsh.RowBands(8)
+
+  private def minhashBanded(docs: DataFrame, hash: (Column, Int) => Column,
+                            simThreshold: Double): DataFrame = {
+    val sigs = minhashSigs(docs, hash)
+    Lsh.jaccardVerified(
+      Lsh.candidates(sigs, sigs, MinhashBands, self = true, ("d1", "d2")),
+      docs, docs, simThreshold)
   }
 
   /** Engine-portable MinHash-LSH — the same banded pipeline as
@@ -942,15 +799,8 @@ object Documents {
     * 16 perms is unchanged. [[minhashPairs]] (xxhash64 codegen loop)
     * remains the non-oracle scale alternative; measured at 1M docs
     * the two are within ~15% (BIGBENCH.md round 7). */
-  def minhashPairsPortable(docs: DataFrame, simThreshold: Double): DataFrame = {
-    val nPerms = 16
-    val bands = 8 // × 2 rows/band
-    val sigs = shingleArray(docs).select("doc_id", "sh")
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"),
-        graft.functions.VectorExpressions.minhashSigMd5(col("sh"), nPerms).as("sig"))
-    bandedVerifiedPairs(docs, sigs, bands, simThreshold)
-  }
+  def minhashPairsPortable(docs: DataFrame, simThreshold: Double): DataFrame =
+    minhashBanded(docs, graft.functions.VectorExpressions.minhashSigMd5, simThreshold)
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
     minhashPairsPortable(Tables.load(spark, dir, "documents"), simThreshold = 0.6)
@@ -2654,33 +2504,11 @@ object Documents {
     * verify value-for-value. */
   def fuzzyDecontaminate(docs: DataFrame, evalDocs: DataFrame,
                          simThreshold: Double = 0.5): DataFrame = {
-    val nPerms = 16
-    val bands = 8 // × 2 rows/band
-    def bandedSigs(d: DataFrame, name: String): DataFrame =
-      shingleArray(d).select(col("doc_id"), col("sh"))
-        .filter(size(col("sh")) > 0)
-        .select(col("doc_id").as(name),
-          graft.functions.VectorExpressions.minhashSigMd5(col("sh"), nPerms).as("sig"))
-        .select(col(name), explode(expr(
-          s"""transform(sequence(0, ${bands - 1}),
-             |          b -> struct(b AS band, sig[b * 2] AS h1, sig[b * 2 + 1] AS h2))""".stripMargin)).as("bv"))
-    val cands = graft.Caches.persist(
-      Ops.joinBroadcastIfFits(
-        bandedSigs(docs, "doc_id"), bandedSigs(evalDocs, "eval_id"), "bv")
-        .select(col("doc_id"), col("eval_id")).distinct())
-    def candSh(side: DataFrame, idCol: String, shCol: String): DataFrame =
-      shingleArray(side.join(
-        broadcast(cands.select(col(idCol).as("doc_id")).distinct()),
-        Seq("doc_id"), "left_semi"))
-        .select(col("doc_id").as(idCol), col("sh").as(shCol))
-    cands
-      .join(broadcast(candSh(docs, "doc_id", "sh_c")), "doc_id")
-      .join(broadcast(candSh(evalDocs, "eval_id", "sh_e")), "eval_id")
-      .select(col("doc_id"), col("eval_id"),
-        Ops.r4(size(array_intersect(col("sh_c"), col("sh_e"))).cast("double") /
-          size(array_union(col("sh_c"), col("sh_e")))).as("jaccard"))
-      .filter(col("jaccard") >= simThreshold)
-      .orderBy("doc_id", "eval_id")
+    val md5 = graft.functions.VectorExpressions.minhashSigMd5 _
+    Lsh.jaccardVerified(
+      Lsh.candidates(minhashSigs(docs, md5), minhashSigs(evalDocs, md5), MinhashBands,
+        self = false, ("doc_id", "eval_id"), measuredBroadcast = true),
+      docs, evalDocs, simThreshold)
   }
 
   /** Same held-out convention as [[docDecontaminate]] (doc_id % 100 ==

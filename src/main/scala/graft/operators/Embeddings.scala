@@ -250,16 +250,6 @@ object Embeddings {
   def embedAnnLsh(spark: SparkSession, dir: String): DataFrame =
     annSketch(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10)
 
-  /** Embedding-cosine near-dup pairs: sign-LSH band candidates + EXACT
-    * cosine verify at `simThreshold`. 4 bands of [[autoCosineBandBits]]
-    * bits each (corpus-scale-derived; 16 at small corpora) — a pair is
-    * a candidate iff some band matches, so candidate volume is governed
-    * by the angle (≈100% at cos ≥ 0.99, ~15% of random far pairs),
-    * never all-pairs; the exact filter then makes precision 1.0.
-    * Band-join candidate generation fits the near-dup task (high
-    * similarity ⇒ near-identical signatures); for moderate-similarity
-    * top-k retrieval use [[annSketch]], which ranks by full Hamming
-    * distance instead of requiring an exact band match. */
   /** Band width for the sign-LSH band join, derived from corpus scale:
     * a random far pair collides in a b-bit band at 2⁻ᵇ, so the random-
     * collision volume n²·bands·2⁻ᵇ stays ~linear only while b ≳ log₂ n
@@ -279,63 +269,41 @@ object Embeddings {
     math.min(32, math.max(16, ceilLog2 + 6))
   }
 
+  /** The sign-sketch band layout: 4 bands of `bits`, packed into as
+    * many 64-bit sketch words as the width needs — shared by the batch
+    * operator and [[graft.streaming.EmbedIngest]], so a stream arrival
+    * and a batch backfill band a vector identically. */
+  private[graft] def cosineBands(bits: Int): Lsh.BitBands = Lsh.BitBands(bits, 4)
+
+  /** Embedding-cosine near-dup pairs: sign-LSH band candidates + EXACT
+    * cosine verify at `simThreshold`, on [[Lsh]]. 4 bands of
+    * [[autoCosineBandBits]] bits each (corpus-scale-derived; 16 at
+    * small corpora; `bandBits` 8..32 fixes it) — a pair is a candidate
+    * iff some band matches, so candidate volume is governed by the
+    * angle (≈100% at cos ≥ 0.99, ~15% of random far pairs), never
+    * all-pairs; the [[Lsh.cosineMaxHamming]] gate and the gated exact
+    * cosine ([[Lsh.cosineVerified]]) then make precision 1.0.
+    * Band-join candidate generation fits the near-dup task (high
+    * similarity ⇒ near-identical signatures); for moderate-similarity
+    * top-k retrieval use [[annSketch]], which ranks by full Hamming
+    * distance instead of requiring an exact band match. */
   def embedCosinePairs(corpus: DataFrame, simThreshold: Double,
                        bandBits: Int = 0, corpusSizeHint: Option[Long] = None): DataFrame = {
-    require(bandBits == 0 || (bandBits >= 8 && bandBits <= 32),
-      s"bandBits must be 0 (auto) or 8..32, got $bandBits")
     // 0 = auto: size the band from the measured (or caller-hinted)
     // corpus scale. The count on a parquet/cached corpus is a
     // metadata-cheap job; pipelines that know their scale pass the hint.
-    val b =
+    val layout = cosineBands(
       if (bandBits != 0) bandBits
-      else autoCosineBandBits(corpusSizeHint.getOrElse(corpus.count()))
-    val nBands = 4
-    val perWord = 64 / b              // bands packed per sketch word
-    val words = (nBands + perWord - 1) / perWord
-    val nBits = words * 64
-    val mask = (1L << b) - 1
+      else autoCosineBandBits(corpusSizeHint.getOrElse(corpus.count())))
+    val nBits = layout.words * 64
     val sigs = graft.Caches.persist(corpus
       .select(col("vec_id"), signatureCol(nBits).as("sig")))
-    val bandCols = (0 until nBands).map { i =>
-      struct(lit(i).as("band"),
-        shiftright(col("sig").getItem(i / perWord), (i % perWord) * b)
-          .bitwiseAND(lit(mask)).as("v"))
-    }
-    // The band self-join is the one corpus×bands shuffle — keep its
-    // rows SLIM: (band-value, vec_id) only, ~20 B/row. Carrying the
-    // 2-word signature through the explode doubled the shuffle bytes,
-    // and at 100M vectors the two sides' shuffle files alone measured
-    // past this box's free disk (round 15, the embed-tier 100M run).
-    // The signatures re-attach to the CANDIDATE stream below — band-
-    // collision volume, orders below corpus×bands.
-    val banded = sigs.select(col("vec_id"),
-      explode(array(bandCols: _*)).as("bv"))
-    // Full-signature Hamming gate between the band match and the exact
-    // verify: at 16-bit bands a random far pair clears a band at
-    // P ≈ 6e-5 — at 1M vectors that's ~30M false candidates, and
-    // joining embeddings for them (measured: 838 s) IS the query cost.
-    // The gate keeps everything within E[ham] + 3σ of the threshold
-    // angle (E[ham] = nBits·θ/π) while a random pair (E[ham] = nBits/2)
-    // passes at P ≈ 1e-5 — candidates collapse before any embedding is
-    // shuffled.
-    val theta = math.acos(simThreshold)
-    val p = theta / math.Pi
-    val maxHam = math.ceil(nBits * p + 3 * math.sqrt(nBits * p * (1 - p))).toInt
-    val ham = (0 until words)
-      .map(w => bit_count(col("s1.sig").getItem(w).bitwiseXOR(col("s2.sig").getItem(w))))
-      .reduce(_ + _)
-    val cands = banded.as("a")
-      .join(banded.as("b"),
-        col("a.bv") === col("b.bv") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"))
-      .join(sigs.select(col("vec_id").as("d1"), col("sig")).as("s1"), "d1")
-      .join(sigs.select(col("vec_id").as("d2"), col("sig")).as("s2"), "d2")
-      .filter(ham <= maxHam)
-      .select(col("d1"), col("d2"))
-      .distinct()
-    // persisted: the pair frame feeds the id-set measurement AND the
+    // slim band rows: this self-join is the one corpus×bands shuffle.
+    // Persisted: the pair frame feeds the id-set measurement AND the
     // verify join — without the barrier the band self-join runs twice
-    val candsP = graft.Caches.persist(cands)
+    val candsP = graft.Caches.persist(Lsh.candidates(sigs, sigs, layout, self = true,
+      ("d1", "d2"), id = "vec_id",
+      maxHamming = Some(Lsh.cosineMaxHamming(nBits, simThreshold)), slim = true))
     // Exact verify fetches vectors for CANDIDATE ids only, through the
     // measured-broadcast semi-join: candidate ids are near-dup volume
     // (tiny 8-byte rows), so while they fit the budget the corpus is
@@ -349,13 +317,9 @@ object Embeddings {
     val gated = Ops.joinBroadcastIfFits(
       corpus.select(col("vec_id"), col("embedding")), candIds, "vec_id",
       joinType = "left_semi")
-    val e1 = gated.select(col("vec_id").as("d1"), col("embedding").as("emb1"))
-    val e2 = gated.select(col("vec_id").as("d2"), col("embedding").as("emb2"))
-    candsP.join(e1, "d1").join(e2, "d2")
-      .select(col("d1"), col("d2"),
-        round(dotCol("emb1", "emb2") / (normCol("emb1") * normCol("emb2")), 6)
-          .as("cos_sim"))
-      .filter(col("cos_sim") >= simThreshold)
+      .select(Seq(col("vec_id"), col("embedding")) ++ Lsh.norms: _*)
+    Lsh.cosineVerified(candsP, gated, gated, "vec_id", simThreshold)
+      .withColumnRenamed("sim", "cos_sim")
       .orderBy("d1", "d2")
   }
 
@@ -1215,39 +1179,19 @@ object Embeddings {
     // quadratic stage (the dominant FLOP term) for |corpus|·dim extra.
     // `tnrm` (norm of the elements AFTER the gate prefix) feeds the
     // Cauchy–Schwarz prune below — also once per vector.
-    val prefix = 16
-    val tail = slice(col("embedding"), lit(prefix + 1),
-      greatest(size(col("embedding")) - lit(prefix), lit(0)))
     val assigned = graft.Caches.persist(vecs
-      .select(col("vec_id"), col("embedding"),
-        element_at(nearestCids(cents, 1), 1).as("cid"),
-        normCol("embedding").as("nrm"),
-        sqrt(graft.functions.VectorExpressions.vecDot(tail, tail)).as("tnrm"))
+      .select(Seq(col("vec_id"), col("embedding"),
+        element_at(nearestCids(cents, 1), 1).as("cid")) ++ Lsh.norms: _*)
       .repartition(col("cid")))
-    val a = assigned.select(col("cid"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"), col("nrm").as("na"), col("tnrm").as("ta"))
-    val b = assigned.select(col("cid"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"), col("nrm").as("nb"), col("tnrm").as("tb"))
     // The within-cell pair volume is Σ(cell choose 2) rows and the
-    // full-dim dot was its dominant FLOP term; the gated dot prunes a
-    // pair after `prefix` madds unless the prefix dot PLUS the largest
-    // tail contribution Cauchy–Schwarz allows (ta·tb) could still
-    // reach the cut. Lossless by construction: the 1e-5 slack on τ
-    // strictly covers the 6-decimal round's half-ulp (5e-7) plus fp
-    // noise, and survivors return the SAME element-ascending dot as
-    // the ungated loop — identical sims, identical output rows. On
-    // this corpus the τ=0.95 cut rejects >99.9% of background pairs
+    // full-dim dot was its dominant FLOP term; [[Lsh.gatedCosine]]
+    // prunes a pair at the prefix unless it could still reach the cut.
+    // On this corpus the τ=0.95 cut rejects >99.9% of background pairs
     // at the prefix (measured: the pair stage drops ~2.5×).
-    a.join(b, Seq("cid"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("na"), col("nb"),
-        graft.functions.VectorExpressions.gatedVecDot(col("ea"), col("eb"),
-          lit(simThreshold - 1e-5) * col("na") * col("nb") -
-            col("ta") * col("tb"), prefix).as("dp"))
-      .filter(col("dp").isNotNull)
-      .select(col("id_a"), col("id_b"),
-        round(col("dp") / (col("na") * col("nb")), 6).as("sim"))
-      .filter(col("sim") >= simThreshold)
+    def side(s: String) = Lsh.cosineSide(assigned, "vec_id", s"id_$s", s, "cid")
+    Lsh.gatedCosine(
+      side("a").join(side("b"), Seq("cid")).filter(col("id_a") < col("id_b")),
+      "id_a", "id_b", simThreshold)
       .orderBy("id_a", "id_b")
   }
 

@@ -1201,10 +1201,11 @@ object Multimodal {
     * fixture is identical at every sf), so the ≤ 4 gate
     * cannot admit a false pair on any driver corpus.
     *
-    * Pair generation reuses [[Documents.simhashPairs]]' banded Hamming
-    * join unchanged — a dHash IS a 64-bit locality signature, so the
-    * image tier inherits the text tier's scale path: shuffle on
-    * (band, value), pigeonhole recall guarantee, never n². At 100 TB
+    * Pair generation is [[Documents.simhashPairs]] — the [[Lsh]]
+    * bit-band self-join and Hamming gate under every near-dup path; a
+    * dHash IS a 64-bit locality signature, so the image tier inherits
+    * the text tier's scale path: shuffle on (band, value), pigeonhole
+    * recall guarantee, never n². At 100 TB
     * the decode+hash stage is the embarrassingly-parallel map
     * ([[decodeStub]]'s partition-batched seam) and the join cost is
     * the text SimHash economics at 8 bytes/image. */

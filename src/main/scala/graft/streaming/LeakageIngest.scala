@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Documents
+import graft.operators.{Documents, Lsh}
 
 /** Streaming split-leakage AUDIT — the watermark-bounded twin of the
   * batch `corpus_split_leakage` query: every arriving document gets
@@ -60,8 +60,9 @@ object LeakageIngest {
         .filter(col("split_new") =!= col("split_old"))
         .select("doc_id", "matched_id", "split_new", "split_old", "ts")
       val standingAlerts = horizon.map { index =>
-        straddles(Documents.simhashProbePairs(sims.select("doc_id", "simhash"),
-          index.select("doc_id", "simhash"), maxHamming), index)
+        straddles(Lsh.candidates(sims, index, Lsh.BitBands.over(1,
+          Documents.autoSimhashBandBits(maxHamming)), self = false, ("doc_id", "matched_id"),
+          sig = "simhash", maxHamming = Some(maxHamming)), index)
       }
       // in-batch straddles: the pair pass over this batch alone —
       // d1 < d2, so d2 is reported as the arriving side

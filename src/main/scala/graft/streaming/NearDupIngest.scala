@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Documents
+import graft.operators.{Documents, Lsh}
 
 /** Streaming NEAR-dup ingest — the watermark-bounded fuzzy twin of
   * [[CorpusIngest]]'s exact ledger: a document whose SimHash sits
@@ -16,9 +16,10 @@ import graft.operators.Documents
   *
   *  1. signature — the codegen'd SimHash64 over the token stream, a
   *     stateless map (the streaming-safe part of the batch operator);
-  *  2. probe — [[Documents.simhashProbe]] band-joins the batch
-  *     signatures against the STANDING index horizon, so each batch
-  *     costs O(|batch| + band collisions), never a corpus self-join;
+  *  2. probe — [[Lsh.candidates]] band-joins the batch signatures
+  *     against the STANDING index horizon (the layout and Hamming gate
+  *     of [[Documents.simhashPairs]]), so each batch costs
+  *     O(|batch| + band collisions), never a corpus self-join;
   *  3. in-batch — [[Documents.simhashPairs]] over what survived the
   *     probe, greedy keep-the-smaller-id (duplicates of a rejected doc
   *     are re-admitted, by design: the KEPT corpus is what must hold no
@@ -59,8 +60,10 @@ object NearDupIngest {
   private[streaming] def simhashSurvivors(sims: DataFrame, horizon: Option[DataFrame],
                                           maxHamming: Int): DataFrame = {
     val afterProbe = horizon.fold(sims) { index =>
-      sims.join(Documents.simhashProbe(sims.select("doc_id", "simhash"),
-        index.select("doc_id", "simhash"), maxHamming), Seq("doc_id"), "left_anti")
+      val hits = Lsh.candidates(sims, index, Lsh.BitBands.over(1,
+        Documents.autoSimhashBandBits(maxHamming)), self = false, ("doc_id", "matched_id"),
+        sig = "simhash", maxHamming = Some(maxHamming))
+      sims.join(hits, Seq("doc_id"), "left_anti")
     }
     val inBatchDrop = Documents
       .simhashPairs(afterProbe.select("doc_id", "simhash"), maxHamming)

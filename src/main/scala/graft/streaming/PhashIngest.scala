@@ -16,8 +16,8 @@ import graft.operators.Multimodal
   * signature inside the lateness horizon is DROPPED before it reaches
   * the corpus. A dHash is a 64-bit locality signature, so the probe
   * and in-batch passes reuse the text tier's banded Hamming joins
-  * ([[Documents.simhashProbe]] / [[Documents.simhashPairs]])
-  * unchanged — the image stream inherits the text stream's
+  * ([[NearDupIngest]]'s probe and [[Documents.simhashPairs]], both on
+  * [[graft.operators.Lsh]]) unchanged — the image stream inherits the text stream's
   * O(|batch| + band collisions) economics, never a corpus self-join.
   *
   * Per micro-batch, on the [[ReplaySafeBatch]] skeleton (which owns

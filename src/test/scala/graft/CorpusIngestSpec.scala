@@ -874,6 +874,53 @@ class CorpusIngestSpec extends SparkSuite {
       "fresh incarnation must drop clones against the standing index")
   }
 
+  test("an embedding ingest batch against an empty index drops exactly the batch operator's d2 set") {
+    // the stream and the batch backfill share one sketch, one band
+    // layout and one verify, so a batch with no standing index must drop
+    // precisely the larger id of every pair the batch operator reports
+    val base = new java.io.File("target/embed-agreement-spec")
+    rm(base)
+    def vec(id: Long): Array[Float] = Array.tabulate(64) { j =>
+      val m = Multimodal.MediaTransform.mix64(id * 1315423911L + j)
+      ((m & 0xffff).toFloat / 32768f) - 1f
+    }
+    def nudged(v: Array[Float], j: Int) = {                   // cosine ≈ 0.9999
+      val out = v.clone(); out(j) = out(j) * 1.01f + 0.003f; out
+    }
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val vecs = (1L to 20L).map(i => i -> vec(i)) ++ Seq(
+      21L -> vec(1L).map(_ * 0.5f),              // exact clone of 1
+      22L -> nudged(vec(2L), 0),                 // near clone of 2
+      23L -> nudged(nudged(vec(2L), 0), 5),      // near clone of 2 and of 22
+      24L -> nudged(vec(20L), 3),                // near clone of a larger id's twin
+      25L -> vec(7L).map(_ * 3f))                // exact clone of 7
+    val df = spark.createDataFrame(vecs.map { case (i, v) => (i, ts, v) })
+      .toDF("doc_id", "ts", "embedding")
+    EmbedIngest.processBatch(df, 0L, "specrun", s"$base/index", s"$base/corpus",
+      simThreshold = 0.95, bandBits = 16, watermarkMs = 2L * 3600 * 1000)
+    val kept = spark.read.parquet(s"$base/corpus").select("doc_id").as[Long].collect().toSet
+    val dropped = vecs.map(_._1).toSet -- kept
+    val d2 = graft.operators.Embeddings
+      .embedCosinePairs(df.select(col("doc_id").as("vec_id"), col("embedding")),
+        simThreshold = 0.95, bandBits = 16)
+      .select("d2").as[Long].collect().toSet
+    assert(d2 === Set(21L, 22L, 23L, 24L, 25L))
+    assert(dropped === d2)
+  }
+
+  test("embedding dedup ingest rejects a band width outside 8..32 before the stream starts") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = new java.io.File("target/embed-bandbits-spec")
+    rm(base)
+    val stream = MemoryStream[(Long, java.sql.Timestamp, Array[Float])]
+    val e = intercept[IllegalArgumentException] {
+      EmbedIngest.ingestEmbedDedup(stream.toDF().toDF("doc_id", "ts", "embedding"),
+        s"$base/index", s"$base/corpus", s"$base/ckpt", bandBits = 0)
+    }
+    assert(e.getMessage.contains("bandBits"), e.getMessage)
+    assert(!new java.io.File(s"$base/ckpt").exists(), "no checkpoint for a rejected stream")
+  }
+
   test("streaming video dedup drops a 2x-fps re-encode via the standing tHash index") {
     implicit val sqlCtx = spark.sqlContext
     val base = new java.io.File("target/vhash-ingest-spec")
