@@ -91,14 +91,19 @@ object EmbedIngest {
         a, b, "doc_id", simThreshold)
     ReplaySafeBatch.process(signed, batchId, runToken, indexDir, outDir, watermarkMs,
       Seq("doc_id", "sig", "embedding", "nrm", "tnrm", "ts")) { (sims, horizon) =>
-      val afterProbe = horizon.fold(sims) { index =>
-        val dup = cosinePairs(sims, index, self = false)
-          .select(col("id_a").as("doc_id")).distinct()
-        sims.join(dup, Seq("doc_id"), "left_anti")
-      }
-      val inBatchDrop = cosinePairs(afterProbe, afterProbe, self = true)
-        .select(col("id_b").as("doc_id")).distinct()
-      val survivors = afterProbe.join(inBatchDrop, Seq("doc_id"), "left_anti")
+      // the in-batch pass runs over the whole cached batch, minus pairs
+      // whose smaller id is a probe hit: a pair's verdict reads only its
+      // two rows, so this is the pass over the batch minus its hits, and
+      // the probe funnel is planned once instead of once per read of a
+      // "batch minus hits" frame
+      val hits = horizon.map(index => cosinePairs(sims, index, self = false)
+        .select(col("id_a").as("doc_id")).distinct())
+      val inBatch = cosinePairs(sims, sims, self = true)
+      val inBatchDrop = hits.fold(inBatch)(h =>
+        inBatch.join(h.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_anti"))
+        .select(col("id_b").as("doc_id"))
+      val survivors = sims.join(hits.fold(inBatchDrop)(inBatchDrop.union), Seq("doc_id"),
+        "left_anti")
       (survivors.select(col("doc_id"), col("ts"), col("embedding")), survivors)
     }
   }

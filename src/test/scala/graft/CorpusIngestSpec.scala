@@ -908,6 +908,39 @@ class CorpusIngestSpec extends SparkSuite {
     assert(dropped === d2)
   }
 
+  test("embedding dedup ingest admits a vector whose only near twin was dropped by the probe") {
+    // greedy streaming order, as in the near-dup ingest: an arrival that
+    // matches the standing index is dropped, and a later arrival near
+    // ONLY that dropped one is admitted
+    val base = new java.io.File("target/embed-greedy-spec")
+    rm(base)
+    def unit(v: Array[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+    def raw(id: Long): Array[Double] = Array.tabulate(64) { j =>
+      ((Multimodal.MediaTransform.mix64(id * 1315423911L + j) & 0xffff).toDouble / 32768.0) - 1.0
+    }
+    val u = unit(raw(1L))
+    val v = { val w = raw(2L); val d = w.zip(u).map { case (x, y) => x * y }.sum
+      unit(w.zip(u).map { case (x, y) => x - d * y }) }     // orthonormal to u
+    def at(deg: Double): Array[Float] = u.zip(v).map { case (x, y) =>
+      (math.cos(math.toRadians(deg)) * x + math.sin(math.toRadians(deg)) * y).toFloat }
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def df(rows: (Long, java.sql.Timestamp, Array[Float])*) =
+      spark.createDataFrame(rows).toDF("doc_id", "ts", "embedding")
+    // 1 at 0°, 2 at 4°, 3 at 8°: 1~2 and 2~3 clear 0.995, 1~3 (≈ 0.990) does not
+    val all = df((1L, ts("2024-01-01 10:00:00"), at(0)), (2L, ts("2024-01-01 10:30:00"), at(4)),
+      (3L, ts("2024-01-01 10:30:01"), at(8)))
+    assert(graft.operators.Embeddings.embedCosinePairs(
+        all.select(col("doc_id").as("vec_id"), col("embedding")), simThreshold = 0.995, bandBits = 16)
+      .select("d1", "d2").as[(Long, Long)].collect().toSet === Set((1L, 2L), (2L, 3L)))
+    def run(batch: org.apache.spark.sql.DataFrame, id: Long) =
+      EmbedIngest.processBatch(batch, id, "specrun", s"$base/index", s"$base/corpus",
+        simThreshold = 0.995, bandBits = 16, watermarkMs = 2L * 3600 * 1000)
+    run(all.filter(col("doc_id") === 1L), 0L)
+    run(all.filter(col("doc_id") > 1L), 1L)
+    assert(spark.read.parquet(s"$base/corpus").select("doc_id").as[Long].collect().sorted ===
+      Array(1L, 3L))
+  }
+
   test("embedding dedup ingest rejects a band width outside 8..32 before the stream starts") {
     implicit val sqlCtx = spark.sqlContext
     val base = new java.io.File("target/embed-bandbits-spec")
