@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * split):
   *  - `load_s`: one-time read+cache of every input table (the analogue
   *    of the reference's CSV parse, which dominates its "query total"
-  *    numbers, README.md:44-62).
+  *    numbers, README.md:44-62). [[Tables.preload]] loads the tables
+  *    as one concurrent wave, one cache-filling job each, so their
+  *    loads overlap instead of queuing one behind another.
   *  - per-query: one untimed warm run (plan compilation + codegen JIT,
   *    paid once per JVM in any real deployment), then timed runs.
   *    `cold` records each query's first-run time so the JIT cost

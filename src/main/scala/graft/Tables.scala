@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.expr
+import java.util.concurrent.Executors
 import scala.util.control.NonFatal
 
 import graft.sources.Layout
@@ -97,43 +98,78 @@ object Tables {
     * scans over a row-based InMemoryRelation lose the vectorized
     * parquet reader, which is a measured loss for the array-heavy
     * documents/embeddings pipelines ("cache aggregates, not sort
-    * inputs" — BIGBENCH.md). */
+    * inputs" — BIGBENCH.md).
+    *
+    * One concurrent wave: every table is submitted at once to a pool of
+    * `min(tables, defaultParallelism)` threads, and the call returns
+    * when all of them are done. Each load is a chain of one-task jobs
+    * (a parquet schema read, then the fill), so loaded one after
+    * another they left all but one core idle. Each table keeps its own
+    * guard: a missing or unreadable table is skipped with a stderr line
+    * while the others load. */
   def preload(spark: SparkSession, dir: String,
               except: Set[String] = Set("documents", "embeddings")): Unit = {
-    all.filterNot(except).foreach { n =>
-      try Caches.memo(spark, Preloaded, (dir, n)) {
-        // Parquet split planning gives a compact file a handful of
-        // scan partitions (measured: lineitem at sf0.1 cached as 3),
-        // and the InMemoryRelation inherits them — so every partial
-        // aggregate over a preloaded table ran at ≤3-way parallelism
-        // regardless of session width (agg_approx_distinct's partial
-        // stage: one 826 ms task, two idle cores ×29). Spread files
-        // big enough to matter round-robin across the session's
-        // parallelism AT LOAD TIME (the one-time cost the bench's
-        // load_s line already charges); the cutoff derives from the
-        // file's size, not a fixed table list, so it scales with the
-        // data and the dims stay single-partition.
-        val raw = load(spark, dir, n)
-        val big = Layout.parquetBytes(spark, s"$dir/$n.parquet") > (1L << 20)
-        val df = (if (big) raw.repartition(spark.sparkContext.defaultParallelism)
-                  else raw).cache()
-        df.count() // force materialization
-        df
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[tables] preload skipped $n: ${e.getMessage}")
+    val names = all.filterNot(except)
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(names.size, spark.sparkContext.defaultParallelism)))
+    try {
+      val loads = names.map { n =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            // the pool's threads do not inherit the caller's active session
+            SparkSession.setActiveSession(spark)
+            preloadOne(spark, dir, n)
+          }
+        })
       }
-    }
-    // Deliberately NOT spread: the `except` tables (documents /
-    // embeddings). Measured (r16): a round-robin spread of the corpus
-    // moved the single-task shingle stage to 32 tasks but total wall
-    // was flat-to-worse — the interpreted HOF shingle work is
-    // allocation-bound, so 32 concurrent tasks contended on the
-    // allocator for no net gain, while every query paid an extra
-    // corpus exchange. The per-row cost is attacked in the expression
-    // layer instead (codegen shingle hashing).
+      loads.foreach(_.get())
+    } finally pool.shutdown()
   }
 
-  /** Drop this session's preloaded entries (returns [[load]] to its
-    * side-effect-free read-from-disk behavior). */
-  def clearPreload(spark: SparkSession): Unit = Caches.forget(spark, Preloaded)
+  private def preloadOne(spark: SparkSession, dir: String, n: String): Unit =
+    try Caches.memo(spark, Preloaded, (dir, n)) {
+      // Parquet split planning gives a compact file a handful of
+      // scan partitions (measured: lineitem at sf0.1 cached as 3),
+      // and the InMemoryRelation inherits them — so every partial
+      // aggregate over a preloaded table ran at ≤3-way parallelism
+      // regardless of session width (agg_approx_distinct's partial
+      // stage: one 826 ms task, two idle cores ×29). Spread files
+      // big enough to matter round-robin across the session's
+      // parallelism AT LOAD TIME (the one-time cost the bench's
+      // load_s line already charges); the cutoff derives from the
+      // file's size, not a fixed table list, so it scales with the
+      // data and the dims stay single-partition.
+      //
+      // Deliberately NOT spread: the `except` tables (documents /
+      // embeddings). Measured (r16): a round-robin spread of the corpus
+      // moved the single-task shingle stage to 32 tasks but total wall
+      // was flat-to-worse — the interpreted HOF shingle work is
+      // allocation-bound, so 32 concurrent tasks contended on the
+      // allocator for no net gain, while every query paid an extra
+      // corpus exchange. The per-row cost is attacked in the expression
+      // layer instead (codegen shingle hashing).
+      val raw = load(spark, dir, n)
+      val big = Layout.parquetBytes(spark, s"$dir/$n.parquet") > (1L << 20)
+      val df = (if (big) raw.repartition(spark.sparkContext.defaultParallelism)
+                else raw).cache()
+      // Fill the cache with one job: a no-op per partition still
+      // computes (and so stores) every cached block, and with no
+      // exchange above the InMemoryTableScan AQE leaves the plan alone.
+      // `count()` took three: AQE wraps the scan in a
+      // TableCacheQueryStage (the fill), then runs the partial and the
+      // final count as jobs of their own. A spread table's cached plan
+      // holds its round-robin exchange, so AQE still stages its scan:
+      // the shuffle, the fill and the no-op pass are three jobs there.
+      df.foreachPartition((_: Iterator[Row]) => ())
+      df
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[tables] preload skipped $n: ${e.getMessage}")
+    }
+
+  /** Drop this session's preloaded entries and unpersist their frames:
+    * [[load]] returns to its side-effect-free read-from-disk behavior,
+    * and the cache manager no longer answers a plain read of those
+    * files from memory. */
+  def clearPreload(spark: SparkSession): Unit =
+    Caches.forget(spark, Preloaded).foreach(_.asInstanceOf[DataFrame].unpersist())
 }

@@ -3194,7 +3194,8 @@ object Documents {
     // instead of re-counting the exploded stream.
     val uni = graft.Caches.persist(
       toks.groupBy("tok").agg(count(lit(1)).as("cu")))
-    val nUni = uni.agg(sum("cu").cast("long").as("nu"))
+    // coalesce: an empty corpus sums to NULL, not 0
+    val nUni = uni.agg(coalesce(sum("cu").cast("long"), lit(0L)).as("nu"))
     val bi = t.filter(size(col("t")) >= 2)
       .select(explode(expr(kgramSql(2))).as("bigram"))
     val cbAll = graft.Caches.persist(
@@ -3203,7 +3204,7 @@ object Documents {
       .filter(col("cb") >= minCount)
       .withColumn("w1", split(col("bigram"), " ")(0))
       .withColumn("w2", split(col("bigram"), " ")(1))
-    val nBi = cbAll.agg(sum("cb").cast("long").as("nb"))
+    val nBi = cbAll.agg(coalesce(sum("cb").cast("long"), lit(0L)).as("nb"))
     cb
       .join(uni.select(col("tok").as("w1"), col("cu").as("cu1")), Seq("w1"))
       .join(uni.select(col("tok").as("w2"), col("cu").as("cu2")), Seq("w2"))

@@ -5,7 +5,8 @@ import graft.{Bench, Caches}
 /** Single-query timing probe: run one registered query N times under
   * the same session/preload regime as [[graft.Bench]] and print each
   * run's wall time — the tool for chasing warm-vs-cold anomalies in
-  * one operator without paying a full bench sweep.
+  * one operator without paying a full bench sweep. It prints the
+  * preload seconds first (the bench's `load_s`).
   *
   * Usage: `runMain graft.tools.TimeQuery <query> [runs] [sfDir] [--release]`
   * `--release` drops operator-internal persists between runs (each run
@@ -18,7 +19,8 @@ object TimeQuery {
     val runs = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = args.lift(2).getOrElse(Bench.envSfDir)
     val release = args.contains("--release")
-    val (spark, _) = Bench.session(sfDir)
+    val (spark, loadS) = Bench.session(sfDir)
+    println(f"[timequery] preload: $loadS%.3f s")
     for (i <- 1 to runs) {
       val t = Bench.runOnce(spark, sfDir, name)
       println(f"[timequery] $name run $i: $t%.3f s")

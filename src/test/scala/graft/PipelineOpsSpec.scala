@@ -232,4 +232,12 @@ class PipelineOpsSpec extends SparkSuite {
     // 'the cat' occurs 8 times but 'the' is frequent — PMI must be lower
     got.find(_._1 == "the cat").foreach(tc => assert(tc._3 < ny.get._3))
   }
+
+  test("pmiCollocations on an empty corpus returns no rows with the usual schema") {
+    val some = Seq((1L, "new york new york new york")).toDF("doc_id", "text")
+    val empty = some.filter(lit(false))
+    val got = Documents.pmiCollocations(empty, minCount = 1)
+    assert(got.collect().isEmpty)
+    assert(got.schema === Documents.pmiCollocations(some, minCount = 1).schema)
+  }
 }

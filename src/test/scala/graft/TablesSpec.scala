@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
@@ -21,7 +27,7 @@ import java.sql.Timestamp
   *     eight queries downstream.
   */
 class TablesSpec extends SparkSuite {
-  import SparkSpec.sfTiny
+  import SparkSpec.{sfSmall, sfTiny}
 
   // 2024-03-01T12:34:56.789012 UTC, expressed three ways.
   private val micros = 1709296496789012L
@@ -138,5 +144,92 @@ class TablesSpec extends SparkSuite {
       }
     }
     assert(drifted.isEmpty, "schema drift:\n" + drifted.mkString("\n"))
+  }
+
+  // ---- preload / clearPreload ----
+
+  private val preloaded = Tables.all.filterNot(Set("documents", "embeddings"))
+
+  /** The cache entry the session's cache manager holds for `df`'s plan. */
+  private def cached(df: DataFrame): Option[InMemoryRelation] =
+    spark.sharedState.cacheManager.lookupCachedData(ClassicConversions.castToImpl(df))
+      .map(_.cachedRepresentation)
+
+  /** Row count and an order-free checksum over every column. */
+  private def fingerprint(df: DataFrame): (Long, Long) = {
+    val h = hash(df.columns.map(col).toIndexedSeq: _*).cast("long")
+    val r = df.agg(count(lit(1)), sum(h)).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  test("preload: sf0.1 caches every non-excepted table, spread by size, rows as on disk") {
+    Tables.clearPreload(spark)
+    val sf01 = new java.io.File(sfTiny).getParent + "/sf0.1"
+    val onDisk = preloaded.map(n => n -> fingerprint(Tables.load(spark, sf01, n))).toMap
+    Tables.preload(spark, sf01)
+    try {
+      val width = spark.sparkContext.defaultParallelism
+      for (n <- preloaded) {
+        val df = Tables.load(spark, sf01, n)
+        val rel = cached(df)
+        assert(rel.isDefined, s"$n is not cached")
+        assert(rel.get.cacheBuilder.isCachedColumnBuffersLoaded, s"$n cache is not filled")
+        val parts = rel.get.cacheBuilder.cachedColumnBuffers.getNumPartitions
+        val expected = if (Set("lineitem", "orders", "events")(n)) width else 1
+        assert(parts == expected, s"$n cached as $parts partitions, expected $expected")
+        assert(fingerprint(df) == onDisk(n), s"$n rows differ from a plain read")
+      }
+      for (n <- Seq("documents", "embeddings"))
+        assert(cached(Tables.load(spark, sf01, n)).isEmpty, s"$n must stay uncached")
+    } finally Tables.clearPreload(spark)
+  }
+
+  test("preload: at most 2 jobs per table (schema read + one cache fill)") {
+    Tables.clearPreload(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Tables.preload(spark, sfSmall)
+      ListenerBusDrain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      Tables.clearPreload(spark)
+    }
+    info(s"${jobs.get()} jobs for ${preloaded.size} tables")
+    assert(jobs.get() <= 2 * preloaded.size,
+      s"preload ran ${jobs.get()} jobs for ${preloaded.size} tables")
+  }
+
+  test("preload: missing tables are skipped, the present ones still load") {
+    Tables.clearPreload(spark)
+    val dir = tmpDir("partial")
+    for (n <- Seq("customer", "events"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfTiny/$n.parquet"),
+        java.nio.file.Paths.get(s"$dir/$n.parquet"))
+    try {
+      Tables.preload(spark, dir)
+      for (n <- Seq("customer", "events"))
+        assert(cached(Tables.load(spark, dir, n)).isDefined, s"$n is not cached")
+      for (n <- preloaded.filterNot(Set("customer", "events")))
+        intercept[org.apache.spark.sql.AnalysisException](Tables.load(spark, dir, n))
+    } finally Tables.clearPreload(spark)
+  }
+
+  test("clearPreload: unpersists the tables, so a load reads the files again") {
+    Tables.clearPreload(spark)
+    Tables.preload(spark, sfTiny)
+    val frames = preloaded.map(n => Tables.load(spark, sfTiny, n))
+    assert(frames.forall(cached(_).isDefined))
+    Tables.clearPreload(spark)
+    for ((n, df) <- preloaded.zip(frames)) {
+      assert(cached(df).isEmpty, s"$n is still in the cache manager")
+      val plan = Tables.load(spark, sfTiny, n).queryExecution.executedPlan
+      assert(plan.collectFirst { case s: FileSourceScanExec => s }.isDefined,
+        s"$n does not plan a file scan:\n$plan")
+    }
   }
 }
