@@ -9,8 +9,34 @@ import org.apache.spark.sql.SparkSession
   * skewed shuffles re-plan at runtime, and the session time zone is
   * pinned to UTC for oracle parity (reference parses dates in local
   * TZ — documented divergence, SURVEY.md §7.2.6).
+  *
+  * Generated code is compiled once per JVM and then reused: Janino's
+  * classes live in one process-wide cache of [[CodegenCacheEntries]]
+  * entries. Spark's default of 100 (4 LRU segments) is smaller than
+  * one pass of perfbench's 12-query `sql_sf001` set, so a warm pass
+  * recompiled most of it (110 of a cold pass's 129 classes at sf0.01,
+  * GraftSessionSpec's regime).
   */
 object GraftSession {
+  /** Capacity of the codegen class cache
+    * (`spark.sql.codegen.cache.maxEntries`): the smallest power of two
+    * at least 1.5× the registry's working set. Measured with an
+    * unbounded cache, the preload plus one pass of all 220 queries
+    * fills 2,307 entries at sf0.01 and 2,338 at sf0.1 (driver and task
+    * threads compile under different class loaders, so a class is often
+    * held twice: the sf0.1 entries are 1,516 distinct sources); 1.5 ×
+    * 2,338 = 3,507, hence 4,096. The 1.5× covers the split into 4 LRU
+    * segments, each of which evicts at a quarter of the capacity.
+    * Metaspace after a warm 220-query pass at sf0.01 read 211.3 MB with
+    * 2,350 entries retained against 195.6 MB at the default: about 7 KB
+    * a class, so a full cache costs about 29 MB.
+    *
+    * A static conf: `CodeGenerator`'s initializer reads it once per
+    * JVM, at the first compile, from the session active then. Every
+    * runner and spec builds its session here before any query runs,
+    * and a session built after the first compile cannot resize it. */
+  val CodegenCacheEntries = 4096
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(s"local[$cores]", cores).getOrCreate()
 
@@ -43,5 +69,6 @@ object GraftSession {
       // the ceiling, ~750M entries) so regrowth has headroom
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
         (1L << 30).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -121,14 +121,15 @@ object Layout {
 
   private def parquetFileSizes(spark: SparkSession, path: String): Seq[Long] = {
     val p = new Path(path)
-    val it = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .listFiles(p, true) // recursive: partitioned/nested dirs
-    val b = Seq.newBuilder[Long]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet")) b += s.getLen
-    }
-    b.result()
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // A walk over listStatus, not listFiles(p, true): listFiles builds a
+    // LocatedFileStatus per file, which reads the file's permission, and
+    // without libhadoop the local FS forks `ls -ld` for every such read.
+    def walk(s: FileStatus): Seq[Long] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk) // partitioned/nested dirs
+      else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getLen)
+      else Nil
+    walk(fs.getFileStatus(p))
   }
 
   /** 2-D Morton (Z-order) interleave: bit i of `a` lands at position

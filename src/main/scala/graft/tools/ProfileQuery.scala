@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.Bench
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -57,7 +58,7 @@ object ProfileQuery {
     }
     spark.sparkContext.addSparkListener(listener)
     val wall = run()
-    Thread.sleep(500) // let the async listener bus drain
+    ListenerBusDrain(spark.sparkContext) // every event of the run delivered
 
     println(f"[profile] $name profiled run: $wall%.3f s, ${jobs.size} jobs, ${stages.size} stages")
     def mb(b: Long) = f"${b / 1048576.0}%8.1f"

@@ -1,12 +1,15 @@
 package graft.tools
 
 import graft.{Bench, Caches}
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Single-query timing probe: run one registered query N times under
   * the same session/preload regime as [[graft.Bench]] and print each
-  * run's wall time — the tool for chasing warm-vs-cold anomalies in
-  * one operator without paying a full bench sweep. It prints the
-  * preload seconds first (the bench's `load_s`).
+  * run's wall time and the number of classes codegen compiled during
+  * it (a warm run that still compiles pays Janino on every run) — the
+  * tool for chasing warm-vs-cold anomalies in one operator without
+  * paying a full bench sweep. It prints the preload seconds first (the
+  * bench's `load_s`).
   *
   * Usage: `runMain graft.tools.TimeQuery <query> [runs] [sfDir] [--release]`
   * `--release` drops operator-internal persists between runs (each run
@@ -22,8 +25,10 @@ object TimeQuery {
     val (spark, loadS) = Bench.session(sfDir)
     println(f"[timequery] preload: $loadS%.3f s")
     for (i <- 1 to runs) {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t = Bench.runOnce(spark, sfDir, name)
-      println(f"[timequery] $name run $i: $t%.3f s")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      println(f"[timequery] $name run $i: $t%.3f s, $compiles classes compiled")
       if (release) Caches.release(spark)
     }
     spark.stop()
