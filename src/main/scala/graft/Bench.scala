@@ -87,51 +87,23 @@ object Bench {
     * against the standing frames, and one release closes the family.
     * Sweep order can no longer move the floor between rows. `main`
     * and `tools.BigBenchLlm` both run the family this way. */
-  val pairFamily: Seq[String] = Seq("dedup_clusters", "dedup_ngram_jaccard",
-    "dedup_containment", "dedup_source_matrix", "dedup_keep_list",
-    "dedup_cluster_keep", "dedup_cluster_stats", "corpus_dedup_savings",
-    "corpus_split_leakage", "corpus_split_leakfree")
-    .filter(SparkEntry.queries.contains)
+  val pairFamily: Seq[String] = SparkEntry.lookup(Seq("dedup_clusters",
+    "dedup_ngram_jaccard", "dedup_containment", "dedup_source_matrix",
+    "dedup_keep_list", "dedup_cluster_keep", "dedup_cluster_stats",
+    "corpus_dedup_savings", "corpus_split_leakage", "corpus_split_leakfree")).map(_.name)
+
+  /** The rows swept one by one, with a release after each: every
+    * registered query in [[SparkEntry.registry]] order (moving a record
+    * moves its row), minus the pair family, which runs last. EVERY
+    * registered query gets a bench row — round 7 shipped 19
+    * registered-but-unbenched queries and their regressions were
+    * invisible; deriving the rows from the registry makes that gap
+    * structurally impossible. */
+  def soloRows: Seq[String] = SparkEntry.registry.map(_.name).filterNot(pairFamily.contains)
 
   def main(args: Array[String]): Unit = {
     val sfDir = envSfDir
     val (spark, loadS) = session(sfDir)
-
-    val headline = Seq(
-      "agg_avg", "agg_max_date", "agg_multi",
-      "sort_asc", "sort_date", "sort_string", "sort_topn",
-      "join_equi", "join_multicond", "join_skew_salted",
-      "agg_count_distinct", "agg_approx_distinct",
-      "agg_regression", "agg_approx_percentile", "layout_zorder",
-      "group_agg", "group_rollup", "group_cube", "window_rank",
-      "set_union", "join_left_outer", "join_anti", "join_semi",
-      "join_asof", "join_range", "agg_stddev", "window_running", "group_pivot",
-      "window_lag", "group_grouping_sets", "window_ntile", "join_full_outer", "scalar_datetime",
-      "corpus_stats", "corpus_mix", "group_having", "select_distinct", "filter_in_subquery",
-      "window_first_last", "window_percent_rank", "agg_corr", "events_retention",
-      "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_local", "tpch_q18_big_orders",
-      "tpch_q10_returns", "tpch_q7_volume",
-      "events_attribution", "events_dedup_window",
-      "events_ewma", "events_window_sliding",
-      "group_percentile", "group_approx_distinct",
-      "corpus_reservoir", "corpus_topk_per_lang",
-      "events_anomaly", "corpus_trim", "corpus_histogram",
-      "corpus_quality_sample", "corpus_upsert",
-      "filter_null_safe", "scalar_string", "agg_string_minmax", "window_range_frame",
-      "q1_join_avg", "q3_subquery_desc", "events_window", "events_json_props",
-      "events_sessionize", "events_funnel", "events_resample",
-      "events_active_users", "events_markov", "events_paths",
-      "corpus_dsir", "corpus_dsir_select",
-    ).filter(SparkEntry.queries.contains)
-    // EVERY registered query gets a bench row — the curated order
-    // above runs first (stable cross-round comparison), then the rest
-    // sorted (minus the pair family, which runs last under the shared
-    // regime). Round 7 shipped 19 registered-but-unbenched queries and
-    // their regressions were invisible; deriving the tail from the
-    // registry itself makes that gap structurally impossible.
-    val headlineAll = (headline ++
-      (SparkEntry.queries.keys.toSet -- headline).toSeq.sorted)
-      .filterNot(pairFamily.contains)
 
     var errors = List.empty[(String, String)]
     var cold = List.empty[(String, Double)]
@@ -164,7 +136,7 @@ object Bench {
           if (releaseEach) Caches.release(spark)
         }
       }
-    val results = sweep(headlineAll, releaseEach = true) ++ {
+    val results = sweep(soloRows, releaseEach = true) ++ {
       // The floor row's runs must each CONTAIN the connected-components
       // pass: the CC memo (Caches.memoFrame) would otherwise serve the
       // warm-up's labeling to every timed run and the reported median
@@ -226,7 +198,7 @@ object Bench {
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val fixed = s""""n_queries":${results.length},"errors":${errors.size},"load_s":${f3(loadS)},"runs":2,"run_scheme":"adaptive_min2_med3","full":"target/bench_latest.json","sf":${jstr(sfDir)}}"""
     val medians = results.toMap
-    val valuesByName = (headlineAll ++ pairFamily).sorted
+    val valuesByName = SparkEntry.registry.map(_.name).sorted
       .map(n => medians.get(n).map(f3).getOrElse("null"))
       .mkString("[", ",", "]")
     val withValues = s"""{"metric":"total","value":${f3(total)},"unit":"sec","values_by_name":$valuesByName,$fixed"""

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import java.util.concurrent.Executors
 import scala.util.control.NonFatal
@@ -150,18 +150,8 @@ object Tables {
       // layer instead (codegen shingle hashing).
       val raw = load(spark, dir, n)
       val big = Layout.parquetBytes(spark, s"$dir/$n.parquet") > (1L << 20)
-      val df = (if (big) raw.repartition(spark.sparkContext.defaultParallelism)
-                else raw).cache()
-      // Fill the cache with one job: a no-op per partition still
-      // computes (and so stores) every cached block, and with no
-      // exchange above the InMemoryTableScan AQE leaves the plan alone.
-      // `count()` took three: AQE wraps the scan in a
-      // TableCacheQueryStage (the fill), then runs the partial and the
-      // final count as jobs of their own. A spread table's cached plan
-      // holds its round-robin exchange, so AQE still stages its scan:
-      // the shuffle, the fill and the no-op pass are three jobs there.
-      df.foreachPartition((_: Iterator[Row]) => ())
-      df
+      Caches.fill((if (big) raw.repartition(spark.sparkContext.defaultParallelism)
+                   else raw).cache())
     } catch { case NonFatal(e) =>
       System.err.println(s"[tables] preload skipped $n: ${e.getMessage}")
     }

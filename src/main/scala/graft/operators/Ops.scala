@@ -57,11 +57,11 @@ object Ops {
                       budgetBytes: Long = DefaultBroadcastBudget): DataFrame = {
     val cached = graft.Caches.persist(small)
     // decision memoized per (plan, budget) for the life of the persist
-    // registry: rebuilding the same query must not re-pay the count()
+    // registry: rebuilding the same query must not re-pay the fill
     // job; Caches.release clears both, so fresh pipelines re-measure
     val fits = graft.Caches.decideOnce(cached.sparkSession,
       cached.queryExecution.analyzed.semanticHash(), budgetBytes) {
-      cached.count() // materialize so the stats below are measured, not estimated
+      graft.Caches.fill(cached) // materialize so the stats below are measured, not estimated
       // fresh Dataset over the same plan → its optimizer pass resolves the
       // now-populated cache, so stats are the InMemoryRelation's real size
       cached.select("*").queryExecution.optimizedPlan.stats.sizeInBytes < budgetBytes

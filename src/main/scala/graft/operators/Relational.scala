@@ -15,7 +15,7 @@ import graft.Tables
   *    — the reference hand-rolls this per-row at CSV parse time
   *    (`table.cpp:83-251`); here it is free and verified in tests.
   *  - Every computed column is aliased identically to the DuckDB oracle
-  *    SQL in [[graft.SparkEntry.oracleSql]].
+  *    SQL of its [[graft.SparkEntry.registry]] record.
   *  - Result rows are ordered by the full projected column list so the
   *    output sequence is deterministic across engines and partitionings.
   *  - Small dimensions (nation/region) get explicit `broadcast()`;

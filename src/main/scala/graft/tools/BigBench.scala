@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.{Bench, Caches}
+import graft.{Bench, Caches, SparkEntry}
 
 /** Same-scale comparison against BASELINE.md: the reference's published
   * numbers are at 10M rows (README.md:44-62); the driver's sf0.1 data
@@ -65,15 +65,18 @@ object BigBench {
   }
 
   /** The optional comma-separated query subset in `args(1)`, else every
-    * name in `allNames`; an unknown name fails the run instead of
-    * silently dropping out of the printed line. */
-  private[tools] def selected(args: Array[String], allNames: Seq[String]): Seq[String] =
-    args.lift(1).fold(allNames) { arg =>
+    * name in `allNames`; an unknown name, in the subset or in
+    * `allNames` itself, fails the run before any data is generated
+    * instead of silently dropping out of the printed line. */
+  private[tools] def selected(args: Array[String], allNames: Seq[String]): Seq[String] = {
+    val all = SparkEntry.lookup(allNames).map(_.name)
+    args.lift(1).fold(all) { arg =>
       val names = arg.split(",").toSeq
-      val unknown = names.filterNot(allNames.contains)
+      val unknown = names.filterNot(all.contains)
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
       names
     }
+  }
 
   /** `{"name":seconds,...}` with 3-decimal values, in `xs` order. */
   private[tools] def jmap(xs: Seq[(String, Double)]): String =

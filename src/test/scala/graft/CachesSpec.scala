@@ -1,8 +1,11 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.classic.ClassicConversions
 import org.apache.spark.sql.functions.col
-import graft.operators.{Documents, Embeddings}
+import graft.operators.{Documents, Embeddings, Ops}
 
 /** The session scope: frames are registered when an operator persists
   * an intermediate and dropped — and ONLY those frames — by a scoped
@@ -143,5 +146,43 @@ class CachesSpec extends SparkSuite {
     threads.foreach(_.join())
     assert(builds.get() === 1, "racing callers must wait for the one build")
     Caches.release(spark)
+  }
+
+  test("broadcastIfFits fills its small side in one job; both branches follow the measured size") {
+    Caches.release(spark)
+    val small = spark.range(0, 2000, 1, 4).selectExpr("id", "id * 3 AS v")
+    val big = spark.range(0, 20000, 1, 4).toDF("id")
+    def joinPlan(budget: Long): String =
+      big.join(Ops.broadcastIfFits(small, budget), "id").queryExecution.executedPlan.toString
+    // auto-broadcast off: a BroadcastHashJoin below can only come from
+    // the helper's hint
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      // count() ran three jobs here: AQE's cache-fill stage, then the
+      // partial and the final count
+      val jobs = new AtomicInteger()
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(counter)
+      try { Ops.broadcastIfFits(small, Long.MaxValue); ListenerBusDrain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(counter)
+      assert(jobs.get() === 1, s"one broadcastIfFits call ran ${jobs.get()} jobs")
+      val rel = spark.sharedState.cacheManager
+        .lookupCachedData(ClassicConversions.castToImpl(small)).map(_.cachedRepresentation)
+      assert(rel.exists(_.cacheBuilder.isCachedColumnBuffersLoaded), "small side is not filled")
+      val measured = rel.get.cacheBuilder.sizeInBytesStats.value.longValue
+      assert(measured > 0)
+      assert(joinPlan(measured + 1).contains("BroadcastHashJoin"),
+        s"a budget above the measured $measured bytes must broadcast")
+      assert(!joinPlan(measured).contains("BroadcastHashJoin"),
+        s"a budget at the measured $measured bytes must not broadcast")
+    } finally {
+      spark.conf.set(key, prev)
+      Caches.release(spark)
+    }
   }
 }

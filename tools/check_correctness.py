@@ -6,7 +6,8 @@ Usage: python3 tools/check_correctness.py <verify_out_dir> <sf_dir>
 For each <name>/ parquet dir produced by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the same parquet tables,
 sorts columns by name, and compares row count, schema (column names) and
-values. Prints one line per query plus a summary.
+values. Prints one line per query plus a summary. Every registered query
+carries an oracle, so a dump without one is a FAIL, not a skip.
 """
 import sys, json, glob, os
 import duckdb
@@ -17,7 +18,7 @@ def main(out_dir, sf_dir):
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = n_skip = 0
+    n_pass = n_fail = 0
     for name in sorted(os.listdir(out_dir)):
         qdir = os.path.join(out_dir, name)
         if not os.path.isdir(qdir):
@@ -30,8 +31,8 @@ def main(out_dir, sf_dir):
             n_fail += 1
             continue
         if name not in oracle:
-            print(f"SKIP {name}: no oracle (rows={len(spark_df)})")
-            n_skip += 1
+            print(f"FAIL {name}: no oracle (rows={len(spark_df)})")
+            n_fail += 1
             continue
         try:
             # Type gate BEFORE values: the driver hashes serialized
@@ -85,7 +86,7 @@ def main(out_dir, sf_dir):
         else:
             print(f"PASS {name} ({len(s)} rows)")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
