@@ -44,8 +44,8 @@ object GraftSession {
     SparkSession.builder()
       .master(master)
       .appName("graft")
-      // SQL surface for the native codegen expressions (vec_dot,
-      // simhash64, minhash_sig); cluster deployments get the same via
+      // SQL surface for the native expressions (the ten functions in
+      // GraftExtensions.functions); cluster deployments get the same via
       // --conf spark.sql.extensions=graft.functions.GraftExtensions
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -5,11 +5,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
+import graft.functions.VectorExpressions._
+
 /** SQL surface for graft's native expressions, injected via the
   * standard `SparkSessionExtensions` mechanism — `spark.sql(...)`
-  * users (and the typed-CSV CLI) get `vec_dot`, `simhash64`, and
-  * `minhash_sig` as first-class functions, planned and codegen'd
-  * exactly like built-ins.
+  * users (and the typed-CSV CLI) get every function in
+  * [[GraftExtensions.functions]] (the vector dots, the SimHash and
+  * MinHash signatures, `mode_count`, `pq_adc` and the `misra_gries`
+  * aggregate) as first-class functions, planned and codegen'd exactly
+  * like built-ins.
   *
   * Wire up with `SparkSession.builder.withExtensions(new
   * GraftExtensions)` (done by [[graft.GraftSession]]) or
@@ -17,127 +21,71 @@ import org.apache.spark.sql.types.IntegerType
   * cluster.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((
+        FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[VectorExpressions.type].getName, f.name, f.usage, "", ""),
+        f.builder))
+    }
+}
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[VectorExpressions.type].getName, name, usage, "", "")
+object GraftExtensions {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"vec_dot expects 2 arguments, got ${args.length}")
-        VectorExpressions.VecDot(args.head, args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a string array"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"simhash64 expects 1 argument, got ${args.length}")
-        VectorExpressions.SimHash64(args.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_wide"),
-      info("simhash_wide",
-        "simhash_wide(tokens, words) - words x 64-bit SimHash of a string array, as array<bigint>"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"simhash_wide expects 2 arguments, got ${args.length}")
-        val words = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"simhash_wide words must be an integer literal, got $other")
-        }
-        VectorExpressions.SimHashWide(args.head, words)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      info("minhash_sig",
-        "minhash_sig(tokens, nPerms) - nPerms-permutation MinHash signature of a string array"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"minhash_sig expects 2 arguments, got ${args.length}")
-        val nPerms = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"minhash_sig nPerms must be an integer literal, got $other")
-        }
-        VectorExpressions.MinHashSig(args.head, nPerms)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_md5"),
-      info("simhash_md5",
-        "simhash_md5(tokens) - engine-portable 60-bit md5 SimHash of a string array"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"simhash_md5 expects 1 argument, got ${args.length}")
-        VectorExpressions.SimHashMd5(args.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig_md5"),
-      info("minhash_sig_md5",
-        "minhash_sig_md5(tokens, nPerms) - engine-portable md5/Kirsch-Mitzenmacher MinHash signature"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"minhash_sig_md5 expects 2 arguments, got ${args.length}")
-        val nPerms = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"minhash_sig_md5 nPerms must be an integer literal, got $other")
-        }
-        VectorExpressions.MinHashSigMd5(args.head, nPerms)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      info("misra_gries",
-        "misra_gries(col, k) - k-counter Misra-Gries heavy-hitter sketch, as map<string,bigint>"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"misra_gries expects 2 arguments, got ${args.length}")
-        val k = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"misra_gries k must be an integer literal, got $other")
-        }
-        MisraGries(args.head, k)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("mode_count"),
-      info("mode_count",
-        "mode_count(arr) - multiplicity of the most frequent element of a string array"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"mode_count expects 1 argument, got ${args.length}")
-        VectorExpressions.ModeCount(args.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("gated_vec_dot"),
-      info("gated_vec_dot",
-        "gated_vec_dot(a, b, bound[, prefix]) - vec_dot that returns NULL unless the " +
-          "prefix-dot reaches bound (lossless Cauchy-Schwarz prune for threshold joins)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3 || args.length == 4,
-          s"gated_vec_dot expects 3 or 4 arguments, got ${args.length}")
-        val prefix = if (args.length == 3) 16 else args(3) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"gated_vec_dot prefix must be an integer literal, got $other")
-        }
-        VectorExpressions.GatedVecDot(args.head, args(1), args(2), prefix)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      info("pq_adc",
-        "pq_adc(codes, lut, k) - asymmetric PQ distance: sum of lut[s*k + codes[s]] " +
-          "over the m code bytes, against a per-query codeword dot table"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"pq_adc expects 3 arguments, got ${args.length}")
-        val k = args(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"pq_adc k must be an integer literal, got $other")
-        }
-        VectorExpressions.PqAdc(args.head, args(1), k)
-      }))
+  /** The arguments of one call to SQL function `fn`. */
+  final class Args(fn: String, val all: Seq[Expression]) {
+    def apply(i: Int): Expression = all(i)
+    def size: Int = all.length
+
+    /** Argument `i`, which must be an integer literal: the parameter
+      * `param` that the expression takes as a constructor value. */
+    def int(i: Int, param: String): Int = all(i) match {
+      case Literal(v: Int, IntegerType) => v
+      case other =>
+        throw new IllegalArgumentException(s"$fn $param must be an integer literal, got $other")
+    }
   }
+
+  /** One SQL function: its name, usage text, the argument counts it
+    * accepts, and how it builds its expression. */
+  final case class SqlFunction(name: String, usage: String, arities: Seq[Int],
+                               build: Args => Expression) {
+    def builder(args: Seq[Expression]): Expression = {
+      val expected = if (arities == Seq(1)) "1 argument" else s"${arities.mkString(" or ")} arguments"
+      require(arities.contains(args.length), s"$name expects $expected, got ${args.length}")
+      build(new Args(name, args))
+    }
+  }
+
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays",
+      Seq(2), a => VecDot(a(0), a(1))),
+    SqlFunction("simhash64", "simhash64(tokens) - 64-bit SimHash of a string array",
+      Seq(1), a => SimHash64(a(0))),
+    SqlFunction("simhash_wide",
+      "simhash_wide(tokens, words) - words x 64-bit SimHash of a string array, as array<bigint>",
+      Seq(2), a => SimHashWide(a(0), a.int(1, "words"))),
+    SqlFunction("minhash_sig",
+      "minhash_sig(tokens, nPerms) - nPerms-permutation MinHash signature of a string array",
+      Seq(2), a => MinHashSig(a(0), a.int(1, "nPerms"))),
+    SqlFunction("simhash_md5",
+      "simhash_md5(tokens) - engine-portable 60-bit md5 SimHash of a string array",
+      Seq(1), a => SimHashMd5(a(0))),
+    SqlFunction("minhash_sig_md5",
+      "minhash_sig_md5(tokens, nPerms) - engine-portable md5/Kirsch-Mitzenmacher MinHash signature",
+      Seq(2), a => MinHashSigMd5(a(0), a.int(1, "nPerms"))),
+    SqlFunction("misra_gries",
+      "misra_gries(col, k) - k-counter Misra-Gries heavy-hitter sketch, as map<string,bigint>",
+      Seq(2), a => MisraGries(a(0), a.int(1, "k"))),
+    SqlFunction("mode_count",
+      "mode_count(arr) - multiplicity of the most frequent element of a string array",
+      Seq(1), a => ModeCount(a(0))),
+    SqlFunction("gated_vec_dot",
+      "gated_vec_dot(a, b, bound[, prefix]) - vec_dot that returns NULL unless the " +
+        "prefix-dot reaches bound (lossless Cauchy-Schwarz prune for threshold joins)",
+      Seq(3, 4), a => GatedVecDot(a(0), a(1), a(2), if (a.size == 3) 16 else a.int(3, "prefix"))),
+    SqlFunction("pq_adc",
+      "pq_adc(codes, lut, k) - asymmetric PQ distance: sum of lut[s*k + codes[s]] " +
+        "over the m code bytes, against a per-query codeword dot table",
+      Seq(3), a => PqAdc(a(0), a(1), a.int(2, "k"))))
 }

@@ -5,9 +5,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -143,9 +144,10 @@ case class MisraGries(
   * Buffer/result layout (row-major, upper triangle mirrored at eval):
   * `[n, sum_0..sum_{d-1}, g_00..g_{d-1,d-1}]` with
   * `g_ij = Σ x_i·x_j`. Update accumulates the upper triangle only
-  * (d(d+1)/2 fused multiply-adds per row); rows whose array is null or
-  * of the wrong length are skipped, mirroring built-in aggregate null
-  * semantics. */
+  * (d(d+1)/2 fused multiply-adds per row); rows whose array is null,
+  * holds a null element or is of the wrong length are skipped,
+  * mirroring built-in aggregate null semantics. The input must be
+  * `array<float>`. */
 case class GramMatrix(
     child: Expression,
     dim: Int,
@@ -162,18 +164,21 @@ case class GramMatrix(
 
   private val len = 1 + dim + dim * dim
 
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case other =>
+      TypeCheckResult.TypeCheckFailure(s"gram_matrix needs array<float>, got ${other.catalogString}")
+  }
+
   override def createAggregationBuffer(): Array[Double] = new Array[Double](len)
 
   override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
     val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      if (arr.numElements() == dim) {
-        val x = new Array[Double](dim)
-        var i = 0
-        while (i < dim) { x(i) = arr.getFloat(i).toDouble; i += 1 }
+    if (v != null && v.asInstanceOf[ArrayData].numElements() == dim) {
+      val x = Kernels.toDoubles(v.asInstanceOf[ArrayData], isFloat = true)
+      if (x != null) {
         buf(0) += 1.0
-        i = 0
+        var i = 0
         while (i < dim) {
           buf(1 + i) += x(i)
           val rowBase = 1 + dim + i * dim

@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,30 +16,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * element — so a 64-dim dot product against 16 centroids costs ~1k
   * lambda dispatches per row, and a 256-bit sign sketch ~16k. At
   * kilobyte scale that's the measured bottleneck of the whole ANN
-  * tier; at 100 TB it's fatal. These expressions generate tight Java
-  * loops inside whole-stage codegen instead (the "custom Expression
-  * with doGenCode beats a UDF beats interpreted HOFs" rung of the
-  * extension ladder).
+  * tier; at 100 TB it's fatal. These expressions run inside whole-stage
+  * codegen instead (the "custom Expression with doGenCode beats a UDF
+  * beats interpreted HOFs" rung of the extension ladder).
   *
-  * Numeric parity: every loop accumulates a `double` sequentially in
-  * element order — bit-identical to the `aggregate(zip_with(...))`
-  * fold it replaces and to the DuckDB oracle's `list_sum` fold, so
-  * oracle hash checks are unaffected.
+  * One kernel per expression: each loop lives once, in [[Kernels]].
+  * `nullSafeEval` calls it, and `doGenCode` emits one static call to the
+  * same method, so the interpreted and the generated paths cannot
+  * disagree. Child expressions stay in the generated code.
   */
 object VectorExpressions {
 
-  private[functions] def elementGetter(dt: DataType, arr: String, i: String): String =
-    dt match {
-      case FloatType  => s"(double) $arr.getFloat($i)"
-      case DoubleType => s"$arr.getDouble($i)"
-      case other      => throw new IllegalArgumentException(s"unsupported element type $other")
-    }
+  private val K = "graft.functions.Kernels$.MODULE$"
 
-  private[functions] def elementAt(dt: DataType, arr: ArrayData, i: Int): Double =
-    dt match {
-      case FloatType  => arr.getFloat(i).toDouble
-      case DoubleType => arr.getDouble(i)
-      case other      => throw new IllegalArgumentException(s"unsupported element type $other")
+  /** The body every `doGenCode` emits: `ev.value` is the kernel call's
+    * result. A kernel that can answer NULL (`orNull`) returns null for
+    * it, boxed where the SQL type is primitive. */
+  private def kernelCall(ctx: CodegenContext, ev: ExprCode, dt: DataType, call: String,
+                         orNull: Boolean = true): String =
+    if (!orNull) s"${ev.value} = $K.$call;"
+    else {
+      val r = ctx.freshName("r")
+      s"""${CodeGenerator.boxedType(dt)} $r = $K.$call;
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }""".stripMargin
     }
 
   private def checkFloatArray(e: Expression, side: String): TypeCheckResult =
@@ -48,6 +47,19 @@ object VectorExpressions {
       case other =>
         TypeCheckResult.TypeCheckFailure(s"$side must be array<float|double>, got $other")
     }
+
+  /** Whether a checked `array<float|double>` input holds floats. */
+  private def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  /** An expression over one `array<string>` column. */
+  trait StringArrayInput extends UnaryExpression {
+    override def nullable: Boolean = true
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
+    }
+  }
 
   /** `vec_dot(a, b)` — Σ aᵢ·bᵢ, double accumulator, element order.
     * Null element poisons the result to null, and so does a LENGTH
@@ -66,40 +78,15 @@ object VectorExpressions {
         case fail                             => fail
       }
 
-    private lazy val leftElem = left.dataType.asInstanceOf[ArrayType].elementType
-    private lazy val rightElem = right.dataType.asInstanceOf[ArrayType].elementType
+    private lazy val leftFloat = isFloat(left)
+    private lazy val rightFloat = isFloat(right)
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val bd = b.asInstanceOf[ArrayData]
-      val n = ad.numElements()
-      if (n != bd.numElements()) return null
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        if (ad.isNullAt(i) || bd.isNullAt(i)) return null
-        acc += elementAt(leftElem, ad, i) * elementAt(rightElem, bd, i)
-        i += 1
-      }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      Kernels.dot(a.asInstanceOf[ArrayData], leftFloat, b.asInstanceOf[ArrayData], rightFloat)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $n = $a.numElements();
-           |double $acc = 0.0;
-           |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-           |for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
-           |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  $acc += ${elementGetter(leftElem, a, i)} * ${elementGetter(rightElem, b, i)};
-           |}
-           |${ev.value} = $acc;
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        kernelCall(ctx, ev, dataType, s"dot($a, $leftFloat, $b, $rightFloat)"))
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -115,15 +102,16 @@ object VectorExpressions {
     * the tail's possible contribution by the tail-norm product; the
     * caller subtracts a small slack from `cut` to absorb fp rounding).
     * Survivors CONTINUE the same accumulator over the tail, so their
-    * returned dot is BIT-IDENTICAL to [[VecDot]] — the gate changes
-    * which rows pay the full loop, never a value. On background pairs
-    * of a τ=0.95 dedup the prefix rejects ≫99% after `prefix` madds
-    * instead of the full dimension. Null elements / length mismatch
-    * poison to null exactly like [[VecDot]] (the gate's null is
-    * indistinguishable, which is fine: both mean "not a pair"). */
+    * returned dot is BIT-IDENTICAL to [[VecDot]] (one kernel, which
+    * `vec_dot` runs ungated) — the gate changes which rows pay the full
+    * loop, never a value. On background pairs of a τ=0.95 dedup the
+    * prefix rejects ≫99% after `prefix` madds instead of the full
+    * dimension. Null elements / length mismatch poison to null exactly
+    * like [[VecDot]] (the gate's null is indistinguishable, which is
+    * fine: both mean "not a pair"). */
   case class GatedVecDot(left: Expression, right: Expression, gate: Expression,
                          prefix: Int)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+      extends TernaryExpression {
     require(prefix > 0, s"prefix must be positive, got $prefix")
     override def first: Expression = left
     override def second: Expression = right
@@ -146,56 +134,16 @@ object VectorExpressions {
         case fail => fail
       }
 
-    private lazy val leftElem = left.dataType.asInstanceOf[ArrayType].elementType
-    private lazy val rightElem = right.dataType.asInstanceOf[ArrayType].elementType
+    private lazy val leftFloat = isFloat(left)
+    private lazy val rightFloat = isFloat(right)
 
-    override def nullSafeEval(a: Any, b: Any, g: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val bd = b.asInstanceOf[ArrayData]
-      val n = ad.numElements()
-      if (n != bd.numElements()) return null
-      val bound = g.asInstanceOf[Double]
-      val p = math.min(prefix, n)
-      var acc = 0.0
-      var i = 0
-      while (i < p) {
-        if (ad.isNullAt(i) || bd.isNullAt(i)) return null
-        acc += elementAt(leftElem, ad, i) * elementAt(rightElem, bd, i)
-        i += 1
-      }
-      if (acc < bound) return null
-      while (i < n) {
-        if (ad.isNullAt(i) || bd.isNullAt(i)) return null
-        acc += elementAt(leftElem, ad, i) * elementAt(rightElem, bd, i)
-        i += 1
-      }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any, g: Any): Any =
+      Kernels.gatedDot(a.asInstanceOf[ArrayData], leftFloat, b.asInstanceOf[ArrayData],
+        rightFloat, prefix, g.asInstanceOf[Double])
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, g) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val p = ctx.freshName("p")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $n = $a.numElements();
-           |double $acc = 0.0;
-           |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-           |int $p = $prefix < $n ? $prefix : $n;
-           |int $i = 0;
-           |for (; $i < $p && !${ev.isNull}; $i++) {
-           |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  $acc += ${elementGetter(leftElem, a, i)} * ${elementGetter(rightElem, b, i)};
-           |}
-           |if (!${ev.isNull} && $acc < $g) { ${ev.isNull} = true; }
-           |for (; $i < $n && !${ev.isNull}; $i++) {
-           |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  $acc += ${elementGetter(leftElem, a, i)} * ${elementGetter(rightElem, b, i)};
-           |}
-           |${ev.value} = $acc;
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b, g) =>
+        kernelCall(ctx, ev, dataType, s"gatedDot($a, $leftFloat, $b, $rightFloat, $prefix, $g)"))
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
@@ -230,44 +178,11 @@ object VectorExpressions {
             s"need (array<int>, array<double>), got $other")
       }
 
-    override def nullSafeEval(c: Any, l: Any): Any = {
-      val cd = c.asInstanceOf[ArrayData]
-      val ld = l.asInstanceOf[ArrayData]
-      val m = cd.numElements()
-      if (ld.numElements() != m * k) return null
-      var acc = 0.0
-      var s = 0
-      while (s < m) {
-        if (cd.isNullAt(s)) return null
-        val code = cd.getInt(s)
-        if (code < 0 || code >= k) return null
-        if (ld.isNullAt(s * k + code)) return null
-        acc += ld.getDouble(s * k + code)
-        s += 1
-      }
-      acc
-    }
+    override def nullSafeEval(c: Any, l: Any): Any =
+      Kernels.pqAdc(c.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData], k)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (c, l) => {
-        val s = ctx.freshName("s")
-        val m = ctx.freshName("m")
-        val code = ctx.freshName("code")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $m = $c.numElements();
-           |double $acc = 0.0;
-           |if ($l.numElements() != $m * $k) { ${ev.isNull} = true; }
-           |for (int $s = 0; $s < $m && !${ev.isNull}; $s++) {
-           |  if ($c.isNullAt($s)) { ${ev.isNull} = true; break; }
-           |  int $code = $c.getInt($s);
-           |  if ($code < 0 || $code >= $k ||
-           |      $l.isNullAt($s * $k + $code)) { ${ev.isNull} = true; break; }
-           |  $acc += $l.getDouble($s * $k + $code);
-           |}
-           |${ev.value} = $acc;
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (c, l) => kernelCall(ctx, ev, dataType, s"pqAdc($c, $l, $k)"))
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -276,8 +191,7 @@ object VectorExpressions {
 
   /** `sign_sketch(emb)` — nBits sign-random-projection bits packed
     * into nBits/64 longs: bit p of word w is set iff
-    * ⟨emb, signs[w·64+p]⟩ > 0. One pass over the embedding (outer loop
-    * over dims, inner over bits) — same accumulation order as the HOF
+    * ⟨emb, signs[w·64+p]⟩ > 0 — same accumulation order as the HOF
     * fold it replaces. `signs` rows must have length ≥ dim. */
   case class SignSketch(child: Expression, signs: Seq[Seq[Double]])
       extends UnaryExpression {
@@ -289,65 +203,16 @@ object VectorExpressions {
     override def prettyName: String = "sign_sketch"
     override def checkInputDataTypes(): TypeCheckResult = checkFloatArray(child, "child")
 
-    private lazy val elem = child.dataType.asInstanceOf[ArrayType].elementType
+    private lazy val childFloat = isFloat(child)
     @transient private lazy val mat: Array[Array[Double]] = signs.map(_.toArray).toArray
 
-    // Same loop restructure as NearestCentroids: copy the row to a
-    // primitive double[] once, then per-BIT contiguous dot loops
-    // (SIMD-able; no accessor call in the hot loop). Each bit's sum
-    // still accumulates element-ascending — bit-identical output.
-    override def nullSafeEval(a: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val d = ad.numElements()
-      val v = new Array[Double](d)
-      var j = 0
-      while (j < d) {
-        if (ad.isNullAt(j)) return null
-        v(j) = elementAt(elem, ad, j)
-        j += 1
-      }
-      val words = new Array[Long](nBits / 64)
-      var p = 0
-      while (p < nBits) {
-        val row = mat(p)
-        var acc = 0.0
-        var i = 0
-        while (i < d) { acc += v(i) * row(i); i += 1 }
-        if (acc > 0) words(p >> 6) |= 1L << (p & 63)
-        p += 1
-      }
-      new GenericArrayData(words)
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.signSketch(a.asInstanceOf[ArrayData], childFloat, mat)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val matRef = ctx.addReferenceObj("signs", mat, "double[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val j = ctx.freshName("j")
-        val p = ctx.freshName("p")
-        val d = ctx.freshName("d")
-        val v = ctx.freshName("v")
-        val row = ctx.freshName("row")
-        val acc = ctx.freshName("acc")
-        val words = ctx.freshName("words")
-        s"""
-           |int $d = $a.numElements();
-           |double[] $v = new double[$d];
-           |for (int $j = 0; $j < $d; $j++) {
-           |  if ($a.isNullAt($j)) { ${ev.isNull} = true; break; }
-           |  $v[$j] = ${elementGetter(elem, a, j)};
-           |}
-           |long[] $words = new long[${nBits / 64}];
-           |if (!${ev.isNull}) {
-           |  for (int $p = 0; $p < $nBits; $p++) {
-           |    double[] $row = $matRef[$p];
-           |    double $acc = 0.0;
-           |    for (int $j = 0; $j < $d; $j++) $acc += $v[$j] * $row[$j];
-           |    if ($acc > 0) $words[$p >> 6] |= 1L << ($p & 63);
-           |  }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($words);
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        kernelCall(ctx, ev, dataType, s"signSketch($a, $childFloat, $matRef)"))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -370,100 +235,16 @@ object VectorExpressions {
     override def prettyName: String = "nearest_centroids"
     override def checkInputDataTypes(): TypeCheckResult = checkFloatArray(child, "child")
 
-    private lazy val elem = child.dataType.asInstanceOf[ArrayType].elementType
+    private lazy val childFloat = isFloat(child)
     @transient private lazy val mat: Array[Array[Double]] = cents.map(_.toArray).toArray
 
-    // Loop structure (both eval paths): copy the row into a primitive
-    // double[] once, then per-CENTROID contiguous dot loops. The naive
-    // element-outer/centroid-inner order walks a k-row stride per
-    // element (k cache lines touched per madd at k≈1000) and its inner
-    // loop mixes an ArrayData accessor call the JIT can't vectorize;
-    // row-major per-centroid loops over two plain double[]s are
-    // SIMD-able and measured ~4× faster at k=1025, d=64. Per-centroid
-    // accumulation stays element-ascending, so sims are BIT-IDENTICAL
-    // to the previous order — assignments cannot shift.
-    override def nullSafeEval(a: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val d = ad.numElements()
-      val v = new Array[Double](d)
-      var j = 0
-      while (j < d) {
-        if (ad.isNullAt(j)) return null
-        v(j) = elementAt(elem, ad, j)
-        j += 1
-      }
-      val sims = new Array[Double](k)
-      var c = 0
-      while (c < k) {
-        val row = mat(c)
-        var acc = 0.0
-        var i = 0
-        while (i < d) { acc += v(i) * row(i); i += 1 }
-        sims(c) = acc
-        c += 1
-      }
-      val out = new Array[Int](n)
-      val used = new Array[Boolean](k)
-      var r = 0
-      while (r < n) {
-        var best = -1
-        c = 0
-        while (c < k) {
-          if (!used(c) && (best < 0 || sims(c) > sims(best))) best = c
-          c += 1
-        }
-        used(best) = true
-        out(r) = best
-        r += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any): Any =
+      Kernels.nearestCentroids(a.asInstanceOf[ArrayData], childFloat, mat, n)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val matRef = ctx.addReferenceObj("cents", mat, "double[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val j = ctx.freshName("j")
-        val c = ctx.freshName("c")
-        val r = ctx.freshName("r")
-        val d = ctx.freshName("d")
-        val v = ctx.freshName("v")
-        val row = ctx.freshName("row")
-        val acc = ctx.freshName("acc")
-        val sims = ctx.freshName("sims")
-        val used = ctx.freshName("used")
-        val out = ctx.freshName("out")
-        val best = ctx.freshName("best")
-        s"""
-           |int $d = $a.numElements();
-           |double[] $v = new double[$d];
-           |for (int $j = 0; $j < $d; $j++) {
-           |  if ($a.isNullAt($j)) { ${ev.isNull} = true; break; }
-           |  $v[$j] = ${elementGetter(elem, a, j)};
-           |}
-           |double[] $sims = new double[$k];
-           |if (!${ev.isNull}) {
-           |  for (int $c = 0; $c < $k; $c++) {
-           |    double[] $row = $matRef[$c];
-           |    double $acc = 0.0;
-           |    for (int $j = 0; $j < $d; $j++) $acc += $v[$j] * $row[$j];
-           |    $sims[$c] = $acc;
-           |  }
-           |}
-           |int[] $out = new int[$n];
-           |if (!${ev.isNull}) {
-           |  boolean[] $used = new boolean[$k];
-           |  for (int $r = 0; $r < $n; $r++) {
-           |    int $best = -1;
-           |    for (int $c = 0; $c < $k; $c++) {
-           |      if (!$used[$c] && ($best < 0 || $sims[$c] > $sims[$best])) $best = $c;
-           |    }
-           |    $used[$best] = true;
-           |    $out[$r] = $best;
-           |  }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        kernelCall(ctx, ev, dataType, s"nearestCentroids($a, $childFloat, $matRef, $n)"))
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -473,62 +254,16 @@ object VectorExpressions {
   /** `simhash64(tokens)` — 64-bit SimHash over an array<string>: each
     * token's xxhash64 (seed 42, identical to SQL `xxhash64(tok)`)
     * votes +1/−1 per bit position; the sign of each counter becomes
-    * the output bit. Matches the interpreted
-    * aggregate-over-zip_with formulation bit for bit. */
-  case class SimHash64(child: Expression) extends UnaryExpression {
+    * the output bit. Word 0 of [[SimHashWide]] (one kernel). Matches
+    * the interpreted aggregate-over-zip_with formulation bit for bit. */
+  case class SimHash64(child: Expression) extends StringArrayInput {
     override def dataType: DataType = LongType
-    override def nullable: Boolean = true
     override def prettyName: String = "simhash64"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
+    override def nullSafeEval(a: Any): Any = Kernels.simhash64(a.asInstanceOf[ArrayData])
 
-    override def nullSafeEval(a: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val n = ad.numElements()
-      val cnt = new Array[Int](64)
-      var i = 0
-      while (i < n) {
-        if (ad.isNullAt(i)) return null
-        val h = XxHash64Function.hash(ad.getUTF8String(i), StringType, 42L)
-        var p = 0
-        while (p < 64) { cnt(p) += (if (((h >>> p) & 1L) == 1L) 1 else -1); p += 1 }
-        i += 1
-      }
-      var out = 0L
-      var p = 0
-      while (p < 64) { if (cnt(p) > 0) out |= 1L << p; p += 1 }
-      out
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val stype = ctx.addReferenceObj("stype", StringType, "org.apache.spark.sql.types.DataType")
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val p = ctx.freshName("p")
-        val n = ctx.freshName("n")
-        val h = ctx.freshName("h")
-        val cnt = ctx.freshName("cnt")
-        val res = ctx.freshName("res")
-        s"""
-           |int $n = $a.numElements();
-           |int[] $cnt = new int[64];
-           |for (int $i = 0; $i < $n; $i++) {
-           |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  long $h = org.apache.spark.sql.catalyst.expressions.XxHash64Function$$.MODULE$$
-           |    .hash($a.getUTF8String($i), $stype, 42L);
-           |  for (int $p = 0; $p < 64; $p++) $cnt[$p] += ((($h >>> $p) & 1L) == 1L) ? 1 : -1;
-           |}
-           |long $res = 0L;
-           |if (!${ev.isNull}) {
-           |  for (int $p = 0; $p < 64; $p++) if ($cnt[$p] > 0) $res |= 1L << $p;
-           |}
-           |${ev.value} = $res;
-           |""".stripMargin
-      })
-    }
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"simhash64($a)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -541,32 +276,19 @@ object VectorExpressions {
     * per bit, counter signs become the bits. Identical results to the
     * SQL formulation `conv(substring(md5(tok),1,15),16,10)` per token
     * and to DuckDB's `('0x'||substr(md5(tok),1,15))::BIGINT`, so a
-    * DuckDB oracle replays the signature exactly — while this codegen
-    * loop keeps the per-row cost at one md5 + 60 bit-tests per token
+    * DuckDB oracle replays the signature exactly — while the kernel
+    * keeps the per-row cost at one md5 + 60 bit-tests per token
     * instead of the interpreted HOF fold's 60·|tokens| lambda
     * dispatches. [[SimHash64]] (xxhash64, no md5 cost) remains the
     * non-oracle scale signature. */
-  case class SimHashMd5(child: Expression) extends UnaryExpression {
+  case class SimHashMd5(child: Expression) extends StringArrayInput {
     override def dataType: DataType = LongType
-    override def nullable: Boolean = true
     override def prettyName: String = "simhash_md5"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      Md5SimHashHelper.sig60(a.asInstanceOf[ArrayData])
+    override def nullSafeEval(a: Any): Any = Kernels.sig60(a.asInstanceOf[ArrayData])
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |java.lang.Long $r = graft.functions.Md5SimHashHelper$$.MODULE$$.sig60($a);
-           |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"sig60($a)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -581,82 +303,17 @@ object VectorExpressions {
     * signature supports wider bands at the same pigeonhole-guaranteed
     * Hamming bar — 128 bits give 4×32-bit bands at ham ≤ 3, collapsing
     * the random band-collision term from n²·2⁻¹⁶ to n²·2⁻³², which
-    * stays sub-linear past 10⁹ docs. One codegen loop, 64·words vote
-    * counters per row. */
-  case class SimHashWide(child: Expression, words: Int) extends UnaryExpression {
+    * stays sub-linear past 10⁹ docs. 64·words vote counters per row. */
+  case class SimHashWide(child: Expression, words: Int) extends StringArrayInput {
     require(words >= 1 && words <= 8, s"need 1 <= words <= 8, got $words")
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "simhash_wide"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
+    override def nullSafeEval(a: Any): Any = Kernels.simhashWide(a.asInstanceOf[ArrayData], words)
 
-    override def nullSafeEval(a: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val n = ad.numElements()
-      val cnt = new Array[Int](64 * words)
-      var i = 0
-      while (i < n) {
-        if (ad.isNullAt(i)) return null
-        val s = ad.getUTF8String(i)
-        var w = 0
-        while (w < words) {
-          val h = XxHash64Function.hash(s, StringType, 42L + w)
-          val off = w * 64
-          var p = 0
-          while (p < 64) { cnt(off + p) += (if (((h >>> p) & 1L) == 1L) 1 else -1); p += 1 }
-          w += 1
-        }
-        i += 1
-      }
-      val out = new Array[Long](words)
-      var w = 0
-      while (w < words) {
-        var p = 0
-        while (p < 64) { if (cnt(w * 64 + p) > 0) out(w) |= 1L << p; p += 1 }
-        w += 1
-      }
-      new GenericArrayData(out)
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val stype = ctx.addReferenceObj("stype", StringType, "org.apache.spark.sql.types.DataType")
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val p = ctx.freshName("p")
-        val w = ctx.freshName("w")
-        val n = ctx.freshName("n")
-        val h = ctx.freshName("h")
-        val s = ctx.freshName("s")
-        val cnt = ctx.freshName("cnt")
-        val out = ctx.freshName("out")
-        s"""
-           |int $n = $a.numElements();
-           |int[] $cnt = new int[${64 * words}];
-           |for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
-           |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  org.apache.spark.unsafe.types.UTF8String $s = $a.getUTF8String($i);
-           |  for (int $w = 0; $w < $words; $w++) {
-           |    long $h = org.apache.spark.sql.catalyst.expressions.XxHash64Function$$.MODULE$$
-           |      .hash($s, $stype, 42L + $w);
-           |    for (int $p = 0; $p < 64; $p++)
-           |      $cnt[$w * 64 + $p] += ((($h >>> $p) & 1L) == 1L) ? 1 : -1;
-           |  }
-           |}
-           |long[] $out = new long[$words];
-           |if (!${ev.isNull}) {
-           |  for (int $w = 0; $w < $words; $w++)
-           |    for (int $p = 0; $p < 64; $p++)
-           |      if ($cnt[$w * 64 + $p] > 0) $out[$w] |= 1L << $p;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           |""".stripMargin
-      })
-    }
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"simhashWide($a, $words)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -667,66 +324,17 @@ object VectorExpressions {
     * seed p (each seed is an independent permutation of the shingle
     * universe). P(sig_a[p] == sig_b[p]) = Jaccard(a, b), the classic
     * estimator. Null for an empty array (no shingles → no signature).
-    * One codegen loop of |tokens|·nPerms hashes per row. */
-  case class MinHashSig(child: Expression, nPerms: Int) extends UnaryExpression {
+    * |tokens|·nPerms hashes per row. */
+  case class MinHashSig(child: Expression, nPerms: Int) extends StringArrayInput {
     require(nPerms > 0, s"need nPerms > 0, got $nPerms")
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "minhash_sig"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
+    override def nullSafeEval(a: Any): Any = Kernels.minhashSig(a.asInstanceOf[ArrayData], nPerms)
 
-    override def nullSafeEval(a: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val n = ad.numElements()
-      if (n == 0) return null
-      val sig = Array.fill(nPerms)(Long.MaxValue)
-      var i = 0
-      while (i < n) {
-        if (ad.isNullAt(i)) return null
-        val s = ad.getUTF8String(i)
-        var p = 0
-        while (p < nPerms) {
-          val h = XxHash64Function.hash(s, StringType, p.toLong)
-          if (h < sig(p)) sig(p) = h
-          p += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(sig)
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val stype = ctx.addReferenceObj("stype", StringType, "org.apache.spark.sql.types.DataType")
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val p = ctx.freshName("p")
-        val n = ctx.freshName("n")
-        val h = ctx.freshName("h")
-        val s = ctx.freshName("s")
-        val sig = ctx.freshName("sig")
-        s"""
-           |int $n = $a.numElements();
-           |long[] $sig = new long[$nPerms];
-           |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-           |if ($n == 0) { ${ev.isNull} = true; }
-           |for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
-           |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  org.apache.spark.unsafe.types.UTF8String $s = $a.getUTF8String($i);
-           |  for (int $p = 0; $p < $nPerms; $p++) {
-           |    long $h = org.apache.spark.sql.catalyst.expressions.XxHash64Function$$.MODULE$$
-           |      .hash($s, $stype, (long) $p);
-           |    if ($h < $sig[$p]) $sig[$p] = $h;
-           |  }
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-           |""".stripMargin
-      })
-    }
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"minhashSig($a, $nPerms)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -740,32 +348,19 @@ object VectorExpressions {
     * 64-bit arithmetic, e.g. a DuckDB oracle). Value-identical to the
     * SQL formulation over `conv(substring(md5(s),...),16,10)`, which
     * Catalyst's CollapseProject would otherwise re-evaluate md5 once
-    * PER PERM (measured 103 s vs ~30 s at 1M docs) — this codegen loop
-    * pays one md5 + nPerms add-mul-mods per element. */
-  case class MinHashSigMd5(child: Expression, nPerms: Int) extends UnaryExpression {
+    * PER PERM (measured 103 s vs ~30 s at 1M docs) — the kernel pays
+    * one md5 + nPerms add-mul-mods per element. */
+  case class MinHashSigMd5(child: Expression, nPerms: Int) extends StringArrayInput {
     require(nPerms > 0, s"need nPerms > 0, got $nPerms")
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "minhash_sig_md5"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
-
     override def nullSafeEval(a: Any): Any =
-      Md5SimHashHelper.minhashSig(a.asInstanceOf[ArrayData], nPerms)
+      Kernels.minhashSigMd5(a.asInstanceOf[ArrayData], nPerms)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |org.apache.spark.sql.catalyst.util.GenericArrayData $r =
-           |  graft.functions.Md5SimHashHelper$$.MODULE$$.minhashSig($a, $nPerms);
-           |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"minhashSigMd5($a, $nPerms)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -779,28 +374,14 @@ object VectorExpressions {
     * bands) — see [[graft.operators.Documents.simhashPairsWide]]'s
     * regime notes. Value-identical to the per-half SQL formulation,
     * so a DuckDB oracle replays it exactly. */
-  case class SimHashMd5Wide(child: Expression) extends UnaryExpression {
+  case class SimHashMd5Wide(child: Expression) extends StringArrayInput {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "simhash_md5_wide"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      Md5SimHashHelper.sig60Wide(a.asInstanceOf[ArrayData])
+    override def nullSafeEval(a: Any): Any = Kernels.sig60Wide(a.asInstanceOf[ArrayData])
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |org.apache.spark.sql.catalyst.util.GenericArrayData $r =
-           |  graft.functions.Md5SimHashHelper$$.MODULE$$.sig60Wide($a);
-           |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"sig60Wide($a)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -808,59 +389,19 @@ object VectorExpressions {
 
   /** `mode_count(arr)` — multiplicity of the most frequent element of
     * a string array (0 for empty, null for null input or a null
-    * element). One open-addressing-free hash-map pass per row — O(n)
-    * against the O(n log n) `aggregate(array_sort(...))` run-length
-    * fold it replaces, and codegen'd where the fold ran interpreted
-    * (one lambda dispatch per element). The per-doc statistic behind
-    * the Gopher top-n-gram repetition filter. */
-  case class ModeCount(child: Expression) extends UnaryExpression {
+    * element). One hash-map pass per row — O(n) against the
+    * O(n log n) `aggregate(array_sort(...))` run-length fold it
+    * replaces, and codegen'd where the fold ran interpreted (one lambda
+    * dispatch per element). The per-doc statistic behind the Gopher
+    * top-n-gram repetition filter. */
+  case class ModeCount(child: Expression) extends StringArrayInput {
     override def dataType: DataType = LongType
-    override def nullable: Boolean = true
     override def prettyName: String = "mode_count"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any = {
-      val ad = a.asInstanceOf[ArrayData]
-      val n = ad.numElements()
-      val m = new java.util.HashMap[Any, Integer]()
-      var best = 0L
-      var i = 0
-      while (i < n) {
-        if (ad.isNullAt(i)) return null
-        val c = m.merge(ad.getUTF8String(i), 1, (x: Integer, y: Integer) => x + y)
-        if (c.longValue() > best) best = c.longValue()
-        i += 1
-      }
-      best
-    }
+    override def nullSafeEval(a: Any): Any = Kernels.modeCount(a.asInstanceOf[ArrayData])
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val m = ctx.freshName("m")
-        val c = ctx.freshName("c")
-        val prev = ctx.freshName("prev")
-        val best = ctx.freshName("best")
-        // raw types: Janino compiles a generics-free Java subset
-        s"""
-           |int $n = $a.numElements();
-           |java.util.HashMap $m = new java.util.HashMap();
-           |long $best = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-           |  Object $prev = $m.get($a.getUTF8String($i));
-           |  int $c = ($prev == null) ? 1 : ((java.lang.Integer) $prev).intValue() + 1;
-           |  $m.put($a.getUTF8String($i), java.lang.Integer.valueOf($c));
-           |  if ($c > $best) $best = (long) $c;
-           |}
-           |${ev.value} = ${ev.isNull} ? 0L : $best;
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a => kernelCall(ctx, ev, dataType, s"modeCount($a)"))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -882,27 +423,17 @@ object VectorExpressions {
     * such element under distinct, like array_distinct's single null).
     * Fewer than k tokens → empty array (the CASE WHEN arm). */
   case class ShingleHash64(child: Expression, k: Int, distinct: Boolean)
-      extends UnaryExpression {
+      extends StringArrayInput {
     require(k >= 1 && k <= 16, s"need 1 <= k <= 16, got $k")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
     override def prettyName: String = "shingle_hash64"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
-
     override def nullSafeEval(a: Any): Any =
-      ShingleHashHelper.grams(a.asInstanceOf[ArrayData], k, distinct)
+      Kernels.grams(a.asInstanceOf[ArrayData], k, distinct)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        s"""
-           |${ev.value} = graft.functions.ShingleHashHelper$$.MODULE$$
-           |  .grams($a, $k, $distinct);
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        kernelCall(ctx, ev, dataType, s"grams($a, $k, $distinct)", orNull = false))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -920,8 +451,8 @@ object VectorExpressions {
     * (the DSIR bucketing, the bucketed quality model) pay this once
     * per token INSTANCE, which made the string round-trips ~60% of
     * corpus_dsir's CPU. Same digest kernel as [[SimHashMd5]] /
-    * [[MinHashSigMd5]] ([[Md5SimHashHelper.tokenHash60]]), so the hash
-    * family stays the single oracle-replayable recipe. */
+    * [[MinHashSigMd5]] ([[Kernels.tokenHash60]]), so the hash family
+    * stays the single oracle-replayable recipe. */
   case class Md5Prefix60(child: Expression) extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullable: Boolean = true
@@ -932,15 +463,11 @@ object VectorExpressions {
       case other => TypeCheckResult.TypeCheckFailure(s"need string, got $other")
     }
 
-    override def nullSafeEval(s: Any): Any =
-      Md5SimHashHelper.tokenHash60(s.asInstanceOf[UTF8String])
+    override def nullSafeEval(s: Any): Any = Kernels.tokenHash60(s.asInstanceOf[UTF8String])
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s => {
-        s"""
-           |${ev.value} = graft.functions.Md5SimHashHelper$$.MODULE$$.tokenHash60($s);
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, s =>
+        kernelCall(ctx, ev, dataType, s"tokenHash60($s)", orNull = false))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -958,27 +485,17 @@ object VectorExpressions {
     * null input → null, so callers that relied on the CASE's
     * `size(null)` → else-arm wrap it in coalesce(…, array())). */
   case class ShingleGrams(child: Expression, k: Int, distinct: Boolean)
-      extends UnaryExpression {
+      extends StringArrayInput {
     require(k >= 1 && k <= 16, s"need 1 <= k <= 16, got $k")
     override def dataType: DataType = ArrayType(StringType, containsNull = true)
-    override def nullable: Boolean = true
     override def prettyName: String = "shingle_grams"
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"need array<string>, got $other")
-    }
-
     override def nullSafeEval(a: Any): Any =
-      ShingleHashHelper.gramStrings(a.asInstanceOf[ArrayData], k, distinct)
+      Kernels.gramStrings(a.asInstanceOf[ArrayData], k, distinct)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        s"""
-           |${ev.value} = graft.functions.ShingleHashHelper$$.MODULE$$
-           |  .gramStrings($a, $k, $distinct);
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, a =>
+        kernelCall(ctx, ev, dataType, s"gramStrings($a, $k, $distinct)", orNull = false))
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -1034,198 +551,3 @@ object VectorExpressions {
     ColumnBridge.column(Md5Prefix60(ColumnBridge.expression(s)))
 }
 
-/** Shared shingle-hash kernel — top-level for clean codegen
-  * references. One UTF8String.concatWs allocation per gram and one
-  * xxhash64 over its bytes; the distinct path keeps array_distinct's
-  * first-occurrence order via an insertion-ordered set keyed on the
-  * gram STRING (so two distinct grams that collide in the 64-bit hash
-  * still emit two stream rows, exactly like the chain it replaces). */
-object ShingleHashHelper {
-  private val space = UTF8String.fromString(" ")
-
-  def grams(ad: ArrayData, k: Int, distinct: Boolean): GenericArrayData = {
-    val n = ad.numElements()
-    if (n < k) return new GenericArrayData(Array.empty[Long])
-    val toks = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) { toks(i) = if (ad.isNullAt(i)) null else ad.getUTF8String(i); i += 1 }
-    val m = n - k + 1
-    val out = new Array[Long](m)
-    var seen: java.util.HashSet[UTF8String] = null
-    if (distinct) seen = new java.util.HashSet[UTF8String](m * 2)
-    var sawNullGram = false
-    var w = 0
-    var o = 0
-    val parts = new Array[UTF8String](k)
-    while (w < m) {
-      var nullGram = false
-      var j = 0
-      while (j < k) {
-        val t = toks(w + j)
-        if (t == null) nullGram = true
-        parts(j) = t
-        j += 1
-      }
-      if (nullGram) {
-        // concat() nulls the gram; xxhash64(null) = the seed. Under
-        // distinct, array_distinct keeps a single null.
-        if (!distinct || !sawNullGram) { out(o) = 42L; o += 1; sawNullGram = true }
-      } else {
-        val gram = UTF8String.concatWs(space, parts: _*)
-        if (!distinct || seen.add(gram)) {
-          out(o) = XxHash64Function.hash(gram, StringType, 42L)
-          o += 1
-        }
-      }
-      w += 1
-    }
-    new GenericArrayData(if (o == m) out else java.util.Arrays.copyOf(out, o))
-  }
-
-  /** Gram-string sibling of [[grams]] — same window walk, same
-    * null-gram and first-occurrence-distinct semantics, but emits the
-    * UTF8String grams instead of their hashes (see
-    * [[VectorExpressions.ShingleGrams]]). */
-  def gramStrings(ad: ArrayData, k: Int, distinct: Boolean): GenericArrayData = {
-    val n = ad.numElements()
-    if (n < k) return new GenericArrayData(Array.empty[AnyRef])
-    val toks = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) { toks(i) = if (ad.isNullAt(i)) null else ad.getUTF8String(i); i += 1 }
-    val m = n - k + 1
-    val out = new Array[AnyRef](m)
-    var seen: java.util.HashSet[UTF8String] = null
-    if (distinct) seen = new java.util.HashSet[UTF8String](m * 2)
-    var sawNullGram = false
-    var w = 0
-    var o = 0
-    val parts = new Array[UTF8String](k)
-    while (w < m) {
-      var nullGram = false
-      var j = 0
-      while (j < k) {
-        val t = toks(w + j)
-        if (t == null) nullGram = true
-        parts(j) = t
-        j += 1
-      }
-      if (nullGram) {
-        // concat() nulls the gram; array_distinct keeps a single null
-        if (!distinct || !sawNullGram) { out(o) = null; o += 1; sawNullGram = true }
-      } else {
-        val gram = UTF8String.concatWs(space, parts: _*)
-        if (!distinct || seen.add(gram)) { out(o) = gram; o += 1 }
-      }
-      w += 1
-    }
-    new GenericArrayData(if (o == m) out else java.util.Arrays.copyOf(out, o))
-  }
-}
-
-/** Shared md5-simhash kernel — a TOP-LEVEL object so generated Java
-  * references it by a clean class name. The MessageDigest is
-  * thread-local (getInstance per row would dominate; MessageDigest is
-  * not thread-safe to share). */
-object Md5SimHashHelper {
-  private val tlMd: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  /** First 15 hex chars of md5(token) as a long — 60 bits, positive. */
-  def tokenHash60(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val md = tlMd.get(); md.reset()
-    val d = md.digest(s.getBytes)
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
-    v >>> 4
-  }
-
-  /** Kirsch–Mitzenmacher MinHash signature over md5 halves — see
-    * [[VectorExpressions.MinHashSigMd5]]. Null iff the array is empty
-    * or any element is null (matches
-    * [[VectorExpressions.MinHashSig]]'s null semantics). */
-  def minhashSig(ad: org.apache.spark.sql.catalyst.util.ArrayData,
-                 nPerms: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val P = 2147483647L
-    val n = ad.numElements()
-    if (n == 0) return null
-    val sig = Array.fill(nPerms)(Long.MaxValue)
-    val md = tlMd.get()
-    var i = 0
-    while (i < n) {
-      if (ad.isNullAt(i)) return null
-      md.reset()
-      val d = md.digest(ad.getUTF8String(i).getBytes)
-      var a = 0L; var b = 0L
-      var j = 0
-      while (j < 8) { a = (a << 8) | (d(j) & 0xFFL); b = (b << 8) | (d(j + 8) & 0xFFL); j += 1 }
-      a = (a >>> 4) % P
-      b = (b >>> 4) % P
-      var p = 0
-      while (p < nPerms) {
-        val h = (a + p * b) % P
-        if (h < sig(p)) sig(p) = h
-        p += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
-  }
-
-  /** Wide (2 × 60-bit) portable SimHash: the md5 digest's two 60-bit
-    * halves vote as INDEPENDENT hash functions (word 0 ← hex chars
-    * 1–15, word 1 ← hex chars 17–31) — one md5 per token buys both
-    * words. See [[VectorExpressions.SimHashMd5Wide]]. Null iff any
-    * element is null. */
-  def sig60Wide(ad: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = ad.numElements()
-    val cnt = new Array[Int](120)
-    val md = tlMd.get()
-    var i = 0
-    while (i < n) {
-      if (ad.isNullAt(i)) return null
-      md.reset()
-      val d = md.digest(ad.getUTF8String(i).getBytes)
-      var a = 0L; var b = 0L
-      var j = 0
-      while (j < 8) { a = (a << 8) | (d(j) & 0xFFL); b = (b << 8) | (d(j + 8) & 0xFFL); j += 1 }
-      a = a >>> 4
-      b = b >>> 4
-      var p = 0
-      while (p < 60) {
-        cnt(p) += (if (((a >>> p) & 1L) == 1L) 1 else -1)
-        cnt(60 + p) += (if (((b >>> p) & 1L) == 1L) 1 else -1)
-        p += 1
-      }
-      i += 1
-    }
-    val out = new Array[Long](2)
-    var p = 0
-    while (p < 60) {
-      if (cnt(p) > 0) out(0) |= 1L << p
-      if (cnt(60 + p) > 0) out(1) |= 1L << p
-      p += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** 60-bit SimHash of a string array; null iff any element is null
-    * (matches [[VectorExpressions.SimHash64]]'s null semantics). */
-  def sig60(ad: org.apache.spark.sql.catalyst.util.ArrayData): java.lang.Long = {
-    val n = ad.numElements()
-    val cnt = new Array[Int](60)
-    var i = 0
-    while (i < n) {
-      if (ad.isNullAt(i)) return null
-      val h = tokenHash60(ad.getUTF8String(i))
-      var p = 0
-      while (p < 60) { cnt(p) += (if (((h >>> p) & 1L) == 1L) 1 else -1); p += 1 }
-      i += 1
-    }
-    var out = 0L
-    var p = 0
-    while (p < 60) { if (cnt(p) > 0) out |= 1L << p; p += 1 }
-    java.lang.Long.valueOf(out)
-  }
-}

@@ -1542,10 +1542,11 @@ object Documents {
       })
   }
 
-  /** Predicted vs labeled language per document (rows-only check: the
-    * synthetic corpus is same-vocabulary across langs, so the value is
-    * the operator plumbing; accuracy is asserted on constructed text in
-    * the spec). */
+  /** Predicted vs labeled language per document. Registered as
+    * `text_langid`, whose oracle replays the same keyword classifier in
+    * DuckDB. The synthetic corpus is same-vocabulary across langs, so
+    * the oracle checks the operator plumbing; accuracy is asserted on
+    * constructed text in the spec. */
   def textLangId(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), langIdCol(col("text")).as("lang_pred"))

@@ -242,11 +242,12 @@ object Embeddings {
       .orderBy("q_id", "rnk")
   }
 
-  /** Registered query: sketch-ANN top-10 for the first 10 vectors
-    * (rows-only check; recall@10 vs [[knnBrute]] asserted in the
-    * spec). Keeps the historical `embed_ann_lsh` name — sign sketches
-    * ARE an LSH family (Charikar's SimHash); only the broken
-    * bucket-join amplification is gone. */
+  /** Registered query: sketch-ANN top-10 for the first 10 vectors,
+    * checked by an oracle that replays the sign sketch, Hamming
+    * prefilter and exact rerank value for value (recall@10 vs
+    * [[knnBrute]] is asserted in the spec). Keeps the historical
+    * `embed_ann_lsh` name — sign sketches ARE an LSH family (Charikar's
+    * SimHash); only the broken bucket-join amplification is gone. */
   def embedAnnLsh(spark: SparkSession, dir: String): DataFrame =
     annSketch(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10)
 
@@ -323,10 +324,11 @@ object Embeddings {
       .orderBy("d1", "d2")
   }
 
-  /** Registered query (rows-only): cosine ≥ 0.95 near-dup pairs over
-    * the embeddings table — 0 rows on this corpus (max pairwise cosine
-    * ≈ 0.51), which is itself the correct answer; the planted-dup
-    * recall bar is in EmbeddingsSpec. */
+  /** Registered query: cosine ≥ 0.95 near-dup pairs over the
+    * embeddings table, checked by an oracle that replays the banded
+    * near-dup path — 0 rows on this corpus (max pairwise cosine ≈ 0.51),
+    * which is itself the correct answer; the planted-dup recall bar is
+    * in EmbeddingsSpec. */
   def dedupEmbedCosine(spark: SparkSession, dir: String): DataFrame =
     embedCosinePairs(Tables.load(spark, dir, "embeddings"), simThreshold = 0.95)
 
@@ -547,9 +549,10 @@ object Embeddings {
       .orderBy("q_id", "rnk")
   }
 
-  /** Registered query (rows-only): IVF top-10 for the first 10
-    * vectors. This corpus is weakly clustered (true top-10 sims
-    * 0.24–0.49 over background σ=0.124), so honest IVF needs wide
+  /** IVF top-10 for the first 10 vectors. Not registered:
+    * `embed_ann_ivf` registers [[embedAnnIvfGate]], its recall gate
+    * over the same geometry. This corpus is weakly clustered (true
+    * top-10 sims 0.24–0.49 over background σ=0.124), so honest IVF needs wide
     * probes: k=16 cells, 5 probes, 3-way assignment measures
     * recall@10 = 0.93 while scoring ~69% of the corpus — the measured
     * price of cluster-free data, documented rather than hidden (specs
@@ -569,7 +572,7 @@ object Embeddings {
     * exactly 1.0, and nothing else comes within 0.5 of that on this
     * corpus: rank 1 is the clone, closed-form. A probe-routing bug, a
     * posting-list bug, or a scoring bug each break the row, while
-    * [[embedAnnIvf]] stays the honest-recall rows-only twin. */
+    * [[embedAnnIvfGate]] stays the honest-recall twin (recall ≥ 0.80). */
   def embedAnnIvfPlanted(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -995,9 +998,9 @@ object Embeddings {
       .orderBy("q_id", "rnk")
   }
 
-  /** Registered query (rows-only: codebooks are Spark-side k-means):
-    * PQ top-10 for the first 10 vectors; recall vs [[knnBrute]] is
-    * spec-asserted. */
+  /** PQ top-10 for the first 10 vectors (codebooks are Spark-side
+    * k-means). Not registered: `embed_pq` registers [[embedPqGate]], its
+    * recall gate. */
   def embedPq(spark: SparkSession, dir: String): DataFrame =
     annPq(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10)
 
@@ -1008,8 +1011,8 @@ object Embeddings {
     * candidate's is bounded near its true cosine (≤ ~0.5 on this
     * corpus) — a ≥0.4 deterministic margin puts the clone in the
     * top-C survivors, and the exact rerank then makes rank 1
-    * closed-form at cosine exactly 1.0. [[embedPq]] stays the
-    * honest-recall rows-only twin. */
+    * closed-form at cosine exactly 1.0. [[embedPqGate]] stays the
+    * honest-recall twin (recall ≥ 0.50). */
   def embedPqPlanted(spark: SparkSession, dir: String): DataFrame = {
     val emb0 = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -1436,13 +1439,12 @@ object Embeddings {
     emb.withColumn("embedding", array(comps.toIndexedSeq: _*))
   }
 
-  /** Registered query: exact top-10 cosine kNN in the 16-dim PCA
-    * subspace — the trained counterpart of [[embedMatryoshka]]'s raw
-    * prefix (PCA puts the variance up front when the encoder didn't).
-    * The eigensolve isn't SQL-replayable, so this row is spec-gated
-    * (recall floor vs full-dim + basis orthonormality) rather than
-    * DuckDB-oracled, like the other learned-model paths (IVF, PQ,
-    * SemDeDup). */
+  /** Exact top-10 cosine kNN in the 16-dim PCA subspace — the trained
+    * counterpart of [[embedMatryoshka]]'s raw prefix (PCA puts the
+    * variance up front when the encoder didn't). Not registered: the
+    * eigensolve isn't SQL-replayable, so `embed_pca` registers
+    * [[embedPcaGate]], its invariant gate, and the spec asserts this
+    * path's recall floor. */
   def embedPca(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
     val Pca(mean, basis, _) = memoFit(emb, d, 64)
@@ -1457,8 +1459,8 @@ object Embeddings {
     * An exact clone of each query mean-centers and projects to the
     * IDENTICAL reduced vector whatever the learned basis is, so its
     * projected cosine is exactly 1 — the provable maximum — and
-    * rank 1 is closed-form. [[embedPca]] stays the honest
-    * reduced-space-recall rows-only twin. */
+    * rank 1 is closed-form. [[embedPca]] (spec-asserted) stays the
+    * honest reduced-space-recall twin. */
   def embedPcaPlanted(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
     val emb0 = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
     val clones = emb0.filter(col("vec_id") < 10)

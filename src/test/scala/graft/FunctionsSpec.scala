@@ -425,4 +425,54 @@ class FunctionsSpec extends SparkSuite {
       }
     }
   }
+
+  test("every SQL function names itself on a wrong arity or a non-literal integer parameter") {
+    val floats = "array(CAST(1.0 AS FLOAT))"
+    val toks = "array('a', 'b')"
+    val n = "CAST(id AS INT)" // an integer, but not a literal
+    // name -> (a call with the wrong argument count, a call whose integer
+    // parameter is not a literal, for functions that take one)
+    val calls: Map[String, (String, Option[String])] = Map(
+      "vec_dot" -> (s"vec_dot($floats)", None),
+      "simhash64" -> (s"simhash64($toks, 2)", None),
+      "simhash_wide" -> (s"simhash_wide($toks)", Some(s"simhash_wide($toks, $n)")),
+      "minhash_sig" -> (s"minhash_sig($toks, 4, 4)", Some(s"minhash_sig($toks, $n)")),
+      "simhash_md5" -> ("simhash_md5()", None),
+      "minhash_sig_md5" -> (s"minhash_sig_md5($toks)", Some(s"minhash_sig_md5($toks, $n)")),
+      "misra_gries" -> ("misra_gries('a')", Some(s"misra_gries('a', $n)")),
+      "mode_count" -> (s"mode_count($toks, $toks)", None),
+      "gated_vec_dot" -> (s"gated_vec_dot($floats, $floats)",
+        Some(s"gated_vec_dot($floats, $floats, 0.0D, $n)")),
+      "pq_adc" -> ("pq_adc(array(0), array(1.0D))", Some(s"pq_adc(array(0), array(1.0D), $n)")))
+    assert(calls.keySet === graft.functions.GraftExtensions.functions.map(_.name).toSet)
+    def failure(call: String): String = {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM range(1)").collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    }
+    calls.foreach { case (name, (badArity, badInt)) =>
+      val arity = failure(badArity)
+      assert(arity.contains(s"$name expects"), arity)
+      badInt.foreach { call =>
+        val literal = failure(call)
+        assert(literal.contains(s"$name ") && literal.contains("must be an integer literal"), literal)
+      }
+    }
+  }
+
+  test("gram_matrix skips rows with a null element and rejects a non-float array by type") {
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    def gram(df: org.apache.spark.sql.DataFrame): Seq[Double] =
+      df.agg(ColumnBridge.column(graft.functions.GramMatrix(
+        ColumnBridge.expression(col("v")), 2).toAggregateExpression()))
+        .head().getSeq[Double](0)
+    val clean = gram(Seq(Seq(Some(1.0f), Some(2.0f)), Seq(Some(3.0f), Some(-1.0f))).toDF("v"))
+    assert(clean === Seq(2.0, 4.0, 1.0, 10.0, -1.0, -1.0, 5.0))
+    val withNull = gram(Seq(Seq(Some(1.0f), Some(2.0f)), Seq(Some(3.0f), Some(-1.0f)),
+      Seq(Some(5.0f), None), Seq(None, None)).toDF("v"))
+    assert(withNull === clean, "a row with a null element must be skipped, not read as zeros")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      gram(Seq(Seq(1.0, 2.0)).toDF("v")))
+    assert(err.getMessage.contains("gram_matrix needs array<float>, got array<double>"),
+      err.getMessage)
+  }
 }
