@@ -549,20 +549,6 @@ object Embeddings {
       .orderBy("q_id", "rnk")
   }
 
-  /** IVF top-10 for the first 10 vectors. Not registered:
-    * `embed_ann_ivf` registers [[embedAnnIvfGate]], its recall gate
-    * over the same geometry. This corpus is weakly clustered (true
-    * top-10 sims 0.24–0.49 over background σ=0.124), so honest IVF needs wide
-    * probes: k=16 cells, 5 probes, 3-way assignment measures
-    * recall@10 = 0.93 while scoring ~69% of the corpus — the measured
-    * price of cluster-free data, documented rather than hidden (specs
-    * assert ≥0.9 both here and at 3/10 single-assign probes on
-    * genuinely clustered vectors, where IVF scans ~30%). [[annSketch]]
-    * is the production pick for corpora like this one. */
-  def embedAnnIvf(spark: SparkSession, dir: String): DataFrame =
-    annIvf(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10,
-      nCentroids = 16, nProbe = 5, nAssign = 3)
-
   /** Registered query (HARD oracle, planted-structure recipe like
     * [[dedupSemantic]]): the learned-quantizer IVF path verified
     * end-to-end. Each query vector gets an exact clone planted under
@@ -997,12 +983,6 @@ object Embeddings {
       .select("q_id", "vec_id", "sim", "rnk")
       .orderBy("q_id", "rnk")
   }
-
-  /** PQ top-10 for the first 10 vectors (codebooks are Spark-side
-    * k-means). Not registered: `embed_pq` registers [[embedPqGate]], its
-    * recall gate. */
-  def embedPq(spark: SparkSession, dir: String): DataFrame =
-    annPq(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10)
 
   /** Registered query (HARD oracle, planted-structure recipe): the
     * learned PQ codebook path verified end-to-end. An exact clone
@@ -1499,9 +1479,7 @@ object Embeddings {
     // per-query recall past hits/k. `complete` now requires the rows
     // to be k DISTINCT pairs per query, and the join side is
     // deduplicated so recall is exactly |exact ∩ approx| / k.
-    val shape = a.agg(count(lit(1)).as("n_rows"),
-      countDistinct(col("q_id")).as("n_qs"),
-      countDistinct(col("q_id"), col("vec_id")).as("n_pairs"))
+    val shape = recallShape(a)
     val perQ = exact.select(col("q_id"), col("vec_id"))
       .join(a.distinct().withColumn("hit", lit(1)),
         Seq("q_id", "vec_id"), "left_outer")
@@ -1516,6 +1494,18 @@ object Embeddings {
           col("n_qs") === col("n_queries")).as("complete"),
         (col("mr") >= lit(bar)).as(barName))
   }
+
+  /** [[recallGate]]'s shape row: `n_rows`, `n_qs` (distinct non-null
+    * `q_id`s) and `n_pairs` (distinct pairs with neither id null) of
+    * `a(q_id, vec_id)`. Counted per pair and then per query, not with
+    * two `countDistinct`s: those plan an `Expand` whose group ids can
+    * swap between runs, and each swap is generated code that a warm
+    * run compiles again. */
+  def recallShape(a: DataFrame): DataFrame =
+    a.groupBy("q_id", "vec_id").agg(count(lit(1)).as("n"))
+      .groupBy("q_id").agg(sum("n").as("n"), count(col("vec_id")).as("pairs"))
+      .agg(coalesce(sum("n"), lit(0L)).as("n_rows"), count(col("q_id")).as("n_qs"),
+        coalesce(sum(when(col("q_id").isNotNull, col("pairs"))), lit(0L)).as("n_pairs"))
 
   /** Registered query (HARD oracle via [[recallGate]]): the honest-
     * recall IVF path reduced to its driver-checkable gate — recall

@@ -2,11 +2,14 @@ package graft.tools
 
 import graft.{Bench, Caches}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Single-query timing probe: run one registered query N times under
   * the same session/preload regime as [[graft.Bench]] and print each
-  * run's wall time and the number of classes codegen compiled during
-  * it (a warm run that still compiles pays Janino on every run) — the
+  * run's wall time, the number of classes codegen compiled during it
+  * and the milliseconds Janino spent on them (the timings
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` samples, summed; a warm
+  * run that still compiles pays Janino on every run) — the
   * tool for chasing warm-vs-cold anomalies in one operator without
   * paying a full bench sweep. It prints the preload seconds first (the
   * bench's `load_s`).
@@ -26,9 +29,11 @@ object TimeQuery {
     println(f"[timequery] preload: $loadS%.3f s")
     for (i <- 1 to runs) {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
       val t = Bench.runOnce(spark, sfDir, name)
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-      println(f"[timequery] $name run $i: $t%.3f s, $compiles classes compiled")
+      val janinoMs = (CodeGenerator.compileTime - ns0) / 1e6
+      println(f"[timequery] $name run $i: $t%.3f s, $compiles classes compiled in $janinoMs%.0f ms")
       if (release) Caches.release(spark)
     }
     spark.stop()

@@ -595,6 +595,26 @@ class EmbeddingsSpec extends SparkSuite {
       "5 distinct hits is recall 0.5 — duplicates must not double it")
   }
 
+  test("recallGate's shape row plans no Expand and equals the two-countDistinct formulation") {
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val exact = Embeddings.knnBrute(emb, queries, k = 10)
+    val gate = Embeddings.recallGate(exact, exact, k = 10, bar = 0.5, barName = "ok")
+    assert(gate.queryExecution.optimizedPlan
+      .collect { case e: org.apache.spark.sql.catalyst.plans.logical.Expand => e }.isEmpty)
+    val pairs = exact.select("q_id", "vec_id")
+    val withNulls = pairs.unionAll(spark.sql(
+      "select * from values (null, 1L), (1L, null), (null, null), (1L, null) as t(q_id, vec_id)"))
+    val fixtures = Seq(pairs, pairs.unionAll(pairs.filter(col("vec_id") % 2 === 0)),
+      exact.select(col("q_id"), (lit(400L) + col("q_id") * 10 + col("rnk")).as("vec_id")),
+      exact.filter(col("rnk") <= 5).select("q_id", "vec_id"), withNulls, pairs.limit(0))
+    fixtures.foreach { a =>
+      val old = a.agg(count(lit(1)).as("n_rows"), countDistinct(col("q_id")).as("n_qs"),
+        countDistinct(col("q_id"), col("vec_id")).as("n_pairs")).head()
+      assert(Embeddings.recallShape(a).head() == old)
+    }
+  }
+
   test("embedPcaGate invariants hold, and a corrupted basis breaks orthonormality") {
     val row = Embeddings.embedPcaGate(spark, SparkSpec.sfTiny).head()
     for (c <- Seq("basis_orthonormal", "centered", "spectrum_nonincreasing",
