@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *    back under a new name and miss.
   *  - in local mode only, [[DriverLoaderPlugin]]: each session's tasks
   *    would run under that session's own executor class loader, so
-  *    every whole-stage class compiled once for the driver's check
+  *    every whole-stage class compiled once when planning checks it
   *    and once more for its tasks, and again in every new session.
   */
 object GraftSession {
