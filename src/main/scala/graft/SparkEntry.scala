@@ -1723,7 +1723,7 @@ object SparkEntry {
     // Same fold as embed_knn over the 16-dim Matryoshka prefix — the
     // list slice is the only difference, so prefix-vs-full ranking
     // divergence is attributable to the truncation alone.
-    Query("embed_matryoshka", Embeddings.embedMatryoshka(_, _),
+    Query("embed_matryoshka", Embeddings.embedMatryoshka,
       """WITH e AS (SELECT vec_id, embedding[1:16] AS embedding FROM embeddings),
         |q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM e WHERE vec_id < 10),
         |s AS (SELECT q_id, vec_id,
@@ -1749,11 +1749,11 @@ object SparkEntry {
         |FROM d JOIN s ON d.label = s.label
         |WHERE round((d.dist - s.mu) / s.sd, 4) > 2.0
         |ORDER BY d.label, d.vec_id""".stripMargin),
-    Query("embed_pca", Embeddings.embedPcaGate(_, _),
+    Query("embed_pca", Embeddings.embedPcaGate,
       """SELECT 16 AS d, (SELECT count(*) FROM embeddings)::BIGINT AS n_vectors,
         |  true AS basis_orthonormal, true AS centered,
         |  true AS spectrum_nonincreasing, true AS var_captured_ge_uniform""".stripMargin),
-    Query("embed_pca_planted", Embeddings.embedPcaPlanted(_, _),
+    Query("embed_pca_planted", Embeddings.embedPcaPlanted,
       """SELECT vec_id AS q_id, (vec_id + 10000000)::BIGINT AS vec_id,
         |       1.0::DOUBLE AS sim, 1::INT AS rnk
         |FROM embeddings WHERE vec_id < 10 ORDER BY q_id""".stripMargin),

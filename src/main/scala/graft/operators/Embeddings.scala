@@ -10,23 +10,25 @@ import graft.functions.VectorExpressions
 /** Similarity search over the `embeddings` table
   * (vec_id, embedding: array<float>, label).
   *
-  * Three tiers, per the standard ANN playbook:
-  *  - [[knnBrute]] — exact brute-force cosine top-k: broadcast the
-  *    (small) query set, stream the corpus once, windowed top-k. The
-  *    correctness baseline; linear in corpus size, no shuffle of the
-  *    corpus itself (only the k·|queries| survivors).
-  *  - [[annSketch]] (registered as `embed_ann_lsh`) — sign-random-
-  *    projection sketches + Hamming pre-filter + exact rerank. The
-  *    scale path when the corpus has no cluster structure: the scan
-  *    touches a 32-byte sketch instead of the 256-byte embedding, and
-  *    exact cosine runs only on the top-C Hamming survivors.
-  *  - [[annIvf]] — k-means coarse quantizer + posting lists. Wins when
-  *    the corpus genuinely clusters; degrades to high probe counts
-  *    when it doesn't (measured on the driver corpus — see scaladoc).
+  * Every vector top-k path runs on one search skeleton ([[search]]):
+  *  - the query frame ([[queryFrame]]): `vec_id AS q_id`,
+  *    `embedding AS q_emb`, broadcast — queries are few;
+  *  - a probe layout ([[Layout]]) that yields (q_id, vec_id) candidates
+  *    and, for the approximate layouts, a pre-rank score and depth:
+  *    [[AllRows]] (exact brute force, [[knnBrute]]), [[Prefix]]
+  *    (Matryoshka), [[Sketch]] (sign-sketch Hamming), [[Ivf]] (k-means
+  *    cells, optionally scored by PQ codes), [[Pq]] (PQ
+  *    reconstructions);
+  *  - one ranked cut ([[rankedCut]]) for every pre-rank and final
+  *    top-n, with one tie rule: the lower `vec_id` wins;
+  *  - one exact rerank: cosine of the float vectors rounded to 6
+  *    places ([[exact]]), fetched through broadcast joins for the
+  *    pre-ranked survivors only, and projected once as
+  *    (q_id, vec_id, sim, rnk) in rank order ([[topK]]).
   *
-  * Vector math is `zip_with`/`aggregate` over the float arrays, cast
-  * to double before multiply-accumulate — codegen'd, no UDFs, and
-  * bit-identical to the DuckDB oracle's sequential fold.
+  * Vector math is the codegen'd
+  * [[graft.functions.VectorExpressions.VecDot]] kernel: a sequential
+  * double fold in element order, bit-identical to the DuckDB oracle's.
   */
 object Embeddings {
 
@@ -41,6 +43,165 @@ object Embeddings {
   def normCol(a: String): Column =
     sqrt(VectorExpressions.vecDot(col(a), col(a)))
 
+  // ---- Fixed geometry: each value is the measured setting its
+  // scaladoc names, and every registered row and spec runs it. ----
+
+  /** Sign-sketch width: 256 bits, four 64-bit words — 32 bytes a
+    * vector against 256 for a 64-dim float embedding. */
+  private[graft] val SketchBits = 256
+
+  /** Pre-rank depth of the sketch, PQ and IVF-PQ layouts, per result
+    * row: the top 15·k candidates are reranked exactly. Measured on the
+    * driver corpus, whose true top-10 sims run 0.24–0.49 over a
+    * background σ of 0.124: sketch recall@10 is 0.99 at 500 vectors. */
+  private val CandFactor = 15
+
+  /** PQ geometry: 8 subspaces × 16 codewords, 8 code bytes a vector —
+    * a 32× cut from 64-dim float32. */
+  private val PqM = 8
+  private val PqCodes = 16
+
+  /** Lloyd rounds of an index-grade fit (IVF quantizer, PQ codebooks,
+    * SemDeDup cells) and of [[probeClusteredness]]' light fit. */
+  private val IndexIters = 4
+  private val ProbeIters = 2
+
+  /** [[annAuto]]'s route cut on measured tightness: midway between the
+    * uniform (≤0.56) and clustered (≥0.95) regimes at every probed scale. */
+  private val TightnessCut = 0.75
+
+  /** Neighbourhood size of the bitext margin (the CCMatrix recipe's k=4). */
+  private val BitextK = 4
+
+  /** Embedding width, and the reduced width of the registered PCA and
+    * Matryoshka-prefix rows. */
+  private val Dim = 64
+  private val ReducedDim = 16
+
+  // ---- The search skeleton ----
+
+  /** The query frame: `vec_id AS q_id`, `embedding AS q_emb`, plus any
+    * `extra` columns, over the rows the caller selected as queries. */
+  private[graft] def queryFrame(rows: DataFrame, extra: Column*): DataFrame =
+    rows.select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb")) ++ extra: _*)
+
+  /** Cosine of two vector columns, unrounded: the pre-rank score of the
+    * prefix and PQ layouts. */
+  private def cosine(a: String, b: String): Column =
+    dotCol(a, b) / (normCol(a) * normCol(b))
+
+  /** The exact score of query/vector pairs: (q_id, vec_id, score), the
+    * cosine of `q_emb` and `embedding` rounded to 6 places before any
+    * ranking, so both engines break ties on the same doubles. */
+  private def exact(pairs: DataFrame): DataFrame =
+    pairs.select(col("q_id"), col("vec_id"), round(cosine("q_emb", "embedding"), 6).as("score"))
+
+  /** The ranked cut: the first `n` rows of each `part` by `order`, ties
+    * to the lower `tie` id, numbered 1..n in `rnk`. A literal cut plans
+    * as a partial `WindowGroupLimit`, so each map task forwards at most
+    * `n` rows per partition key. */
+  private def rankedCut(df: DataFrame, part: String, order: Column, n: Int,
+                        tie: String = "vec_id"): DataFrame =
+    df.withColumn("rnk", row_number().over(Window.partitionBy(part).orderBy(order, col(tie).asc)))
+      .filter(col("rnk") <= n)
+
+  /** The final cut of exact-scored pairs: the top `k` per query as
+    * (q_id, vec_id, sim, rnk), in (q_id, rnk) order. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    rankedCut(scored, "q_id", col("score").desc, k)
+      .select(col("q_id"), col("vec_id"), col("score").as("sim"), col("rnk"))
+      .orderBy("q_id", "rnk")
+
+  /** A probe layout: how a query reaches its candidates. `depth` is the
+    * pre-rank cut: that many candidates per query reach the exact
+    * rerank. */
+  private[graft] sealed trait Layout
+
+  /** Every corpus row but the query itself, scored exactly; `extra`
+    * rides the broadcast join condition (metadata-filtered search). */
+  private[graft] final case class AllRows(extra: Column) extends Layout
+
+  /** Matryoshka prefix: pre-ranked by the cosine of the first `d` dims. */
+  private[graft] final case class Prefix(d: Int, depth: Int) extends Layout
+
+  /** Sign sketches: pre-ranked by Hamming distance over [[SketchBits]]
+    * bits; pairs past half the bits are anti-correlated and dropped. */
+  private[graft] final case class Sketch(depth: Int) extends Layout
+
+  /** PQ codes: pre-ranked by the cosine to each vector's PQ
+    * reconstruction (queries stay exact — the asymmetric comparison). */
+  private[graft] final case class Pq(depth: Int) extends Layout
+
+  /** IVF cells (see [[annIvf]]; 0 auto-sizes lists and probes): only
+    * vectors in a query's `nProbe` nearest cells are scored. Without
+    * `pqDepth` they are scored exactly; with it, by their PQ codes
+    * (IVF-PQ, see [[annIvfPq]]) and the top `pqDepth` are reranked. */
+  private[graft] final case class Ivf(nCentroids: Int, nProbe: Int, nAssign: Int,
+                                      pqDepth: Option[Int] = None) extends Layout
+
+  /** The one search skeleton: the `k` exact-cosine nearest corpus
+    * vectors of each query in `queries` (a [[queryFrame]]), reached
+    * through `layout`. Pre-ranked layouts keep the top `depth` per query
+    * and fetch only those survivors' vectors for the exact rerank: the
+    * survivor set broadcasts back against the corpus, which never
+    * shuffles. */
+  private[graft] def search(corpus: DataFrame, queries: DataFrame, k: Int,
+                            layout: Layout): DataFrame = {
+    val emb = corpus.select("vec_id", "embedding")
+    def pairs(rows: DataFrame, qs: DataFrame, extra: Column = lit(true)) =
+      rows.join(broadcast(qs), col("vec_id") =!= col("q_id") && extra)
+    def byCosine(rows: DataFrame, qs: DataFrame) =
+      pairs(rows, qs).select(col("q_id"), col("vec_id"), cosine("q_emb", "embedding").as("score"))
+    def rerank(pre: DataFrame, order: Column, depth: Int) = {
+      val survivors = rankedCut(pre, "q_id", order, depth).select("q_id", "vec_id")
+      topK(exact(emb.join(broadcast(survivors), "vec_id").join(broadcast(queries), "q_id")), k)
+    }
+    layout match {
+      case AllRows(extra) => topK(exact(pairs(corpus, queries, extra)), k)
+      case Prefix(d, depth) =>
+        rerank(byCosine(emb.select(col("vec_id"), slice(col("embedding"), 1, d).as("embedding")),
+          queries.select(col("q_id"), slice(col("q_emb"), 1, d).as("q_emb"))),
+          col("score").desc, depth)
+      case Sketch(depth) =>
+        val sigs = Caches.persist(emb.select(col("vec_id"), signatureCol(SketchBits).as("sig")))
+        val qSigs = queries.select(col("q_id"), signatureCol(SketchBits, "q_emb").as("q_sig"))
+        rerank(pairs(sigs, qSigs).select(col("q_id"), col("vec_id"), hamming("sig", "q_sig").as("score"))
+          .filter(col("score") <= SketchBits / 2), col("score").asc, depth)
+      case Pq(depth) =>
+        val books = codebook(emb)
+        val booksLit = typedlit(books)
+        val recon = pqEncode(emb, books).select(col("vec_id"),
+          flatten(transform(col("codes"),
+            (c, s) => element_at(element_at(booksLit, s + 1), c + 1))).as("embedding"))
+        rerank(byCosine(recon, queries), col("score").desc, depth)
+      case g @ Ivf(_, _, _, None) =>
+        topK(ivfProbe(emb, queries, g, k, "ivf")(
+          cid => emb.select(col("vec_id"), col("embedding"), cid), exact), k)
+      case g @ Ivf(_, _, _, Some(depth)) =>
+        val books = codebook(emb)
+        val sub = books.head.head.length
+        // ‖codeword‖² lookup, flattened like the query LUT — PqAdc over it
+        // with a vector's own codes yields ‖recon‖² (subspaces are
+        // orthogonal coordinate blocks, so norms² add).
+        val normLut = books.flatMap(_.map(cw => cw.map(x => x * x).sum))
+        // per-query ADC table: lut[s·k + c] = ⟨q_s, codeword_{s,c}⟩ —
+        // interpreted HOFs are fine here, it runs once per QUERY row
+        val lut = flatten(transform(typedlit(books), (bk, s) =>
+          transform(bk, cw => aggregate(
+            zip_with(cw, slice(col("q_emb"), s * sub + 1, lit(sub)), _ * _),
+            lit(0.0), _ + _))))
+        val adcQueries = queries.withColumn("lut", lut).withColumn("qnorm", normCol("q_emb"))
+        rerank(ivfProbe(emb, adcQueries, g, depth, "ivfpq")(
+          cid => emb.select(col("vec_id"), pqCodes(books).as("codes"), cid)
+            .withColumn("rnorm",
+              sqrt(VectorExpressions.pqAdc(col("codes"), typedlit(normLut), PqCodes))),
+          _.select(col("q_id"), col("vec_id"),
+            (VectorExpressions.pqAdc(col("codes"), col("lut"), PqCodes) /
+              (col("qnorm") * col("rnorm"))).as("score"))),
+          col("score").desc, depth)
+    }
+  }
+
   /** Exact top-k cosine neighbors for each query vector. Queries are
     * broadcast (tiny); the corpus is scanned once, each partition
     * scoring all queries; the window top-k shuffles only on q_id.
@@ -49,28 +210,23 @@ object Embeddings {
     * condition, so filtered candidates are dropped at scan time, not
     * post-scored. */
   def knnBrute(corpus: DataFrame, queries: DataFrame, k: Int,
-               extra: Column = lit(true)): DataFrame = {
-    val scored = corpus
-      .join(broadcast(queries), col("vec_id") =!= col("q_id") && extra)
-      .select(col("q_id"), col("vec_id"),
-        round(dotCol("q_emb", "embedding") / (normCol("q_emb") * normCol("embedding")), 6)
-          .as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "vec_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+               extra: Column = lit(true)): DataFrame =
+    search(corpus, queries, k, AllRows(extra))
+
+  /** The embeddings table's (vec_id, embedding), and the registered rows'
+    * query set: the first 10 vectors. */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+
+  private def firstTen: Column = col("vec_id") < 10
 
   /** Registered query: exact top-10 cosine neighbors for the first 10
     * vectors, DuckDB-oracle-checked (double fold is deterministic in
     * both engines; sims rounded to 6 before ranking so tie-breaks
     * agree). */
   def embedKnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    knnBrute(emb, queries, k = 10)
+    val emb = vectors(spark, dir)
+    knnBrute(emb, queryFrame(emb.filter(firstTen)), k = 10)
   }
 
   /** Metadata-FILTERED vector search — the production shape of kNN
@@ -83,73 +239,42 @@ object Embeddings {
   def embedKnnFiltered(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding", "label")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"))
-    knnBrute(emb, queries, k = 5, extra = col("label") === col("q_label"))
+    knnBrute(emb, queryFrame(emb.filter(firstTen), col("label").as("q_label")), k = 5,
+      extra = col("label") === col("q_label"))
   }
 
   /** Matryoshka-prefix retrieval (Kusupati et al. 2022): score with
-    * only the first `d` dimensions of each embedding. MRL-trained
-    * encoders front-load information, so a d/4 prefix retains most of
-    * the ranking signal at a quarter of the scan bytes and FLOPs — the
-    * cheap first pass of a coarse-to-fine cascade (prefix top-C, then
-    * full-dim rerank — the rerank stage is exactly [[knnBrute]] over
-    * the C survivors). At 100 TB the win is I/O-shaped, not just
+    * only the first [[ReducedDim]] = 16 dimensions of each embedding.
+    * MRL-trained encoders front-load information, so a d/4 prefix
+    * retains most of the ranking signal at a quarter of the scan bytes
+    * and FLOPs — the cheap first pass of a coarse-to-fine cascade
+    * ([[matryoshkaCascade]]). At 100 TB the win is I/O-shaped, not just
     * compute: a separate column of prefix vectors means the first pass
     * reads d/64 of the embedding bytes off parquet. Exact top-k over
     * the truncated vectors, so the DuckDB oracle replays it with a
-    * list slice; MatryoshkaSpec measures recall@10 vs the full-dim
-    * ranking. */
-  def embedMatryoshka(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), slice(col("embedding"), 1, d).as("embedding"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    knnBrute(emb, queries, k = 10)
+    * list slice; EmbeddingsSpec measures its recall@10 against
+    * [[embedPca]] at the same width. */
+  def embedMatryoshka(spark: SparkSession, dir: String): DataFrame = {
+    val emb = vectors(spark, dir)
+      .select(col("vec_id"), slice(col("embedding"), 1, ReducedDim).as("embedding"))
+    knnBrute(emb, queryFrame(emb.filter(firstTen)), k = 10)
   }
 
   /** The full coarse-to-fine Matryoshka cascade: prefix-score with the
     * first `d` dims, keep the top `c` candidates per query, exact
-    * full-dim rerank of the survivors only. Stage 1 reads d/64 of the
-    * vector bytes and does d/64 of the FLOPs over the whole corpus;
-    * stage 2 touches full vectors for only c·|queries| rows (the
-    * survivor set broadcasts back against the corpus — the corpus
-    * never shuffles). Candidate depth `c` sets the recall/cost trade:
+    * full-dim rerank of the survivors only ([[Prefix]]). Stage 1 reads
+    * d/64 of the vector bytes and does d/64 of the FLOPs over the whole
+    * corpus; stage 2 touches full vectors for only c·|queries| rows.
+    * Candidate depth `c` sets the recall/cost trade:
     * on the driver corpus — synthetic vectors, NOT MRL-trained, so
     * prefixes carry no front-loaded signal — the measured candidate
     * recall@10 is d=16/C=100: 0.67, d=32/C=100: 0.89, d=32/C=150:
-    * 0.96 (MatryoshkaSpec pins ≥0.9 at d=32, C=150); an MRL-trained
+    * 0.96 (EmbeddingsSpec pins ≥0.9 at d=32, C=150); an MRL-trained
     * encoder front-loads variance and reaches the same recall at C
     * within a small multiple of k. */
   def matryoshkaCascade(corpus: DataFrame, queries: DataFrame,
-                        d: Int, c: Int, k: Int): DataFrame = {
-    val pre = corpus.select(col("vec_id"), slice(col("embedding"), 1, d).as("p_emb"))
-    val qPre = queries.select(col("q_id"), slice(col("q_emb"), 1, d).as("qp_emb"))
-    val wPre = Window.partitionBy("q_id").orderBy(col("psim").desc, col("vec_id").asc)
-    val survivors = pre
-      .join(broadcast(qPre), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (VectorExpressions.vecDot(col("qp_emb"), col("p_emb")) /
-          (sqrt(VectorExpressions.vecDot(col("qp_emb"), col("qp_emb"))) *
-            sqrt(VectorExpressions.vecDot(col("p_emb"), col("p_emb"))))).as("psim"))
-      .withColumn("rnk", row_number().over(wPre))
-      .filter(col("rnk") <= c)
-      .select("q_id", "vec_id")
-    val wFull = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    corpus
-      .join(broadcast(survivors), "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(VectorExpressions.vecDot(col("q_emb"), col("embedding")) /
-          (sqrt(VectorExpressions.vecDot(col("q_emb"), col("q_emb"))) *
-            sqrt(VectorExpressions.vecDot(col("embedding"), col("embedding")))), 6)
-          .as("sim"))
-      .withColumn("rnk", row_number().over(wFull))
-      .filter(col("rnk") <= k)
-      .select("q_id", "vec_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+                        d: Int, c: Int, k: Int): DataFrame =
+    search(corpus, queries, k, Prefix(d, c))
 
   /** Fixed ±1 projection matrix (nBits × 64) — md5-derived, so it is
     * deterministic across runs AND rebuildable value-for-value by a
@@ -166,7 +291,7 @@ object Embeddings {
   private def signsSeq(nBits: Int): Seq[Seq[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Seq.tabulate(nBits) { p =>
-      Seq.tabulate(64) { d =>
+      Seq.tabulate(Dim) { d =>
         val digest = md.digest(
           s"sign:$p:$d".getBytes(java.nio.charset.StandardCharsets.UTF_8))
         if (((digest(0) >> 4) & 1) == 1) 1.0 else -1.0
@@ -175,72 +300,50 @@ object Embeddings {
   }
 
   /** nBits-bit sign-random-projection signature (SimHash for vectors)
-    * as an array of nBits/64 longs: bit p = sign(⟨embedding, r_p⟩) for
-    * nBits fixed ±1 random vectors. Hamming distance between
-    * signatures estimates the angle: E[ham] = nBits·θ/π. A codegen'd
-    * [[graft.functions.VectorExpressions.SignSketch]] loop — the
-    * interpreted HOF formulation cost ~nBits·dim lambda dispatches
+    * of the vector column `of`, as an array of nBits/64 longs: bit p =
+    * sign(⟨v, r_p⟩) for nBits fixed ±1 random vectors. Hamming distance
+    * between signatures estimates the angle: E[ham] = nBits·θ/π. A
+    * codegen'd [[graft.functions.VectorExpressions.SignSketch]] loop —
+    * the interpreted HOF formulation cost ~nBits·dim lambda dispatches
     * per row. */
   // private[graft]: EmbedIngest computes the SAME signatures for its
   // standing index, so stream arrivals and batch replays can never
   // disagree on a vector's sketch
-  private[graft] def signatureCol(nBits: Int): Column =
-    VectorExpressions.signSketch(col("embedding"), signsSeq(nBits))
+  private[graft] def signatureCol(nBits: Int, of: String = "embedding"): Column =
+    VectorExpressions.signSketch(col(of), signsSeq(nBits))
+
+  /** Hamming distance of two signature columns: xor + popcount per
+    * 64-bit word, summed — codegen'd. */
+  private[graft] def hamming(a: String, b: String): Column =
+    (0 until SketchBits / 64)
+      .map(w => bit_count(expr(s"$a[$w]").bitwiseXOR(expr(s"$b[$w]"))))
+      .reduce(_ + _)
 
   /** Approximate top-k cosine neighbors via sign-sketch Hamming
-    * pre-filter + exact rerank — the replacement for
+    * pre-filter + exact rerank ([[Sketch]]) — the replacement for
     * BucketedRandomProjectionLSH, whose single-projection OR-amplified
     * hashes degenerate to ~2 buckets on unit vectors (all-pairs in
     * disguise: measured 188 s warm on 2,000 vectors; this runs the
     * same query in ~2 s).
     *
-    * 1. sketch: nBits sign projections per vector, packed into
-    *    nBits/64 longs and persisted (computed exactly once — the
+    * 1. sketch: [[SketchBits]] sign projections per vector, packed into
+    *    64-bit words and persisted (computed exactly once — the
     *    cache is also a materialization boundary no predicate rewrite
     *    can re-derive the interpreted aggregate below).
     * 2. pre-filter: broadcast the query sketches, scan the corpus
-    *    sketches (32 bytes/vector at nBits=256, 8× narrower than the
-    *    embeddings), Hamming = xor + popcount per word — codegen'd.
-    *    Pairs with ham > nBits/2 are anti-correlated and dropped
-    *    map-side; the top-C=k·candFactor by Hamming survive per query.
-    * 3. rerank: exact cosine on the C survivors only, top-k.
+    *    sketches (32 bytes/vector, 8× narrower than the embeddings),
+    *    Hamming = xor + popcount per word — codegen'd. Pairs with
+    *    ham > SketchBits/2 are anti-correlated and dropped map-side;
+    *    the top [[CandFactor]]·k by Hamming survive per query.
+    * 3. rerank: exact cosine on the survivors only, top-k.
     *
-    * Tuning (measured on the driver corpus, where true top-10 sims
-    * run 0.24–0.49 over background σ=0.124): nBits=256, candFactor=15
-    * → recall@10 = 0.99 at 500 vectors; larger corpora want a larger
-    * candFactor or more bits — the knob trades exact-distance
-    * computations for recall, which is the ANN contract. */
-  def annSketch(corpus: DataFrame, queryIds: Column, k: Int,
-                nBits: Int = 256, candFactor: Int = 15): DataFrame = {
-    val words = nBits / 64
-    val sigs = graft.Caches.persist(corpus
-      .select(col("vec_id"), signatureCol(nBits).as("sig")))
-    val queries = broadcast(sigs.filter(queryIds)
-      .select(col("vec_id").as("q_id"), col("sig").as("q_sig")))
-    val ham = (0 until words)
-      .map(w => bit_count(expr(s"sig[$w]").bitwiseXOR(expr(s"q_sig[$w]"))))
-      .reduce(_ + _)
-    val cands = sigs.join(queries, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), ham.as("ham"))
-      .filter(col("ham") <= nBits / 2)
-    val hw = Window.partitionBy("q_id").orderBy(col("ham").asc, col("vec_id").asc)
-    val topC = cands.withColumn("hrnk", row_number().over(hw))
-      .filter(col("hrnk") <= k * candFactor)
-      .select("q_id", "vec_id")
-    val qEmb = corpus.filter(queryIds)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val scored = corpus.select("vec_id", "embedding")
-      .join(broadcast(topC), "vec_id")
-      .join(broadcast(qEmb), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(dotCol("q_emb", "embedding") / (normCol("q_emb") * normCol("embedding")), 6)
-          .as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "vec_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+    * Recall at the fixed geometry (measured on the driver corpus, where
+    * true top-10 sims run 0.24–0.49 over background σ=0.124): 256 bits
+    * and a 15·k cut give recall@10 = 0.99 at 500 vectors; a larger
+    * corpus would want a deeper cut or more bits, which trade exact
+    * distance computations for recall — the ANN contract. */
+  def annSketch(corpus: DataFrame, queryIds: Column, k: Int): DataFrame =
+    search(corpus, queryFrame(corpus.filter(queryIds)), k, Sketch(k * CandFactor))
 
   /** Registered query: sketch-ANN top-10 for the first 10 vectors,
     * checked by an oracle that replays the sign sketch, Hamming
@@ -249,7 +352,7 @@ object Embeddings {
     * `embed_ann_lsh` name — sign sketches ARE an LSH family (Charikar's
     * SimHash); only the broken bucket-join amplification is gone. */
   def embedAnnLsh(spark: SparkSession, dir: String): DataFrame =
-    annSketch(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10)
+    annSketch(Tables.load(spark, dir, "embeddings"), firstTen, k = 10)
 
   /** Band width for the sign-LSH band join, derived from corpus scale:
     * a random far pair collides in a b-bit band at 2⁻ᵇ, so the random-
@@ -332,35 +435,50 @@ object Embeddings {
   def dedupEmbedCosine(spark: SparkSession, dir: String): DataFrame =
     embedCosinePairs(Tables.load(spark, dir, "embeddings"), simThreshold = 0.95)
 
-  /** The `n` nearest centroid ids for each row's `embedding`, as an
-    * array<int>. Centroids are unit-normalized on the driver, so
+  /** The `n` nearest centroid ids for each row's vector column `of`, as
+    * an array<int>. Centroids are unit-normalized on the driver, so
     * argmax dot = argmax cosine and the per-row norm divides out —
     * the whole assignment is a single projection over the broadcast
     * literal array (no corpus×k inflation, no window: the round-3
     * version shuffled and sorted corpus×k rows for this argmax). */
-  // private[graft]: the IVF recall/scan probes (graft.tools) replay the
-  // assignment to measure scanned-fraction without duplicating the math
-  private[graft] def nearestCids(cents: Seq[Seq[Double]], n: Int): Column = {
-    val unit = cents.map { c =>
-      val nrm = math.sqrt(c.map(x => x * x).sum)
-      if (nrm == 0) c else c.map(_ / nrm)
-    }
-    VectorExpressions.nearestCentroids(col("embedding"), unit, n)
+  private def nearestCids(cents: Seq[Seq[Double]], n: Int, of: String = "embedding"): Column =
+    VectorExpressions.nearestCentroids(col(of), unitRows(cents), n)
+
+  /** Centroids scaled to unit length; a zero centroid stays zero. */
+  private def unitRows(cents: Seq[Seq[Double]]): Seq[Seq[Double]] = cents.map { c =>
+    val nrm = math.sqrt(c.map(x => x * x).sum)
+    if (nrm == 0) c else c.map(_ / nrm)
   }
+
+  /** The classic IVF list count: 4·√n clamped to [10, cap] — per-probe
+    * scan cost O(√n) instead of O(n). */
+  private def autoLists(n: Long, cap: Long): Int =
+    math.min(cap, math.max(10L, 4L * math.round(math.sqrt(n.toDouble)))).toInt
+
+  /** A deterministic content-hash sample of about `target` of `emb`'s
+    * `n` rows — all of them when n ≤ target. Hash sampling keeps a fit
+    * partition-invariant and reproducible: same corpus, same model, any
+    * cluster. */
+  private def hashSample(emb: DataFrame, n: Long, target: Long): DataFrame =
+    if (n <= target) emb
+    else emb.filter(pmod(xxhash64(col("vec_id")), lit(n / target + 1)) === 0)
+
+  /** The semantic hash of a corpus plan: the key of its learned indexes. */
+  private def planKey(df: DataFrame): Int = df.queryExecution.analyzed.semanticHash()
 
   /** The learned indexes — k-means quantizers, PQ codebooks, PCA fits
     * and posting tables — are session memos in [[graft.Caches]], keyed
     * by the corpus plan's semantic hash + the fit's params: an index is
     * built once and probed many times; without the memo every probe
-    * query re-runs `iters` full corpus passes. */
+    * query re-runs its Lloyd rounds, each a full corpus pass. */
   private val Quantizer = new Caches.Kind("k-means quantizer")
   private val Codebook = new Caches.Kind("PQ codebook")
   private val PcaFit = new Caches.Kind("PCA fit")
   private val PostingTable = new Caches.Kind("posting table")
 
-  /** The coarse quantizer fit on `train` (whose plan hash is `planKey`). */
-  private def quantizer(train: DataFrame, planKey: Int, k: Int, iters: Int): Seq[Seq[Double]] =
-    Caches.memo(train.sparkSession, Quantizer, (planKey, k, iters))(fitKmeans(train, k, iters))
+  /** The coarse quantizer fit on `train` (whose plan hash is `key`). */
+  private def quantizer(train: DataFrame, key: Int, k: Int, iters: Int): Seq[Seq[Double]] =
+    Caches.memo(train.sparkSession, Quantizer, (key, k, iters))(fitKmeans(train, k, iters))
 
   /** Forget this session's learned indexes and drop its posting tables
     * (index rebuild after a data rewrite under an identical plan). */
@@ -372,25 +490,6 @@ object Embeddings {
     }
   }
 
-  /** IVF (inverted-file) ANN — the centroid-partitioned scale path:
-    * 1. coarse quantizer: deterministic k-means (Lloyd) — init from
-    *    nCentroids hash-ordered corpus rows, `iters` rounds of
-    *    assign (projection argmax over the broadcast centroid
-    *    literal) + recompute (posexplode → per-dim avg, collected to
-    *    the driver: k×d doubles, tiny by construction). Empty
-    *    clusters keep their previous centroid.
-    * 2. posting lists: each vector joins the lists of its `nAssign`
-    *    nearest centroids (multi-assignment trades index size for
-    *    recall on weakly-clustered corpora), one narrow shuffle keyed
-    *    by centroid.
-    * 3. probe: a query scores only the vectors in its `nProbe`
-    *    nearest centroids' lists — cost scales with
-    *    corpus·nProbe·nAssign/k, not corpus.
-    * Deterministic end-to-end (seeded init, content-hash
-    * sampled fit), so recall
-    * vs brute force is a stable spec assertion. Complements
-    * [[annSketch]]: IVF wins when the corpus clusters; the sketch
-    * path when it doesn't. */
   /** The posting lists ARE the index, and an index at lake scale is a
     * persisted bucketed TABLE, not a session cache: the old
     * `persist(rows.repartition(col("cid")))` build needed the full
@@ -429,6 +528,43 @@ object Embeddings {
   private def probedCells(queries: DataFrame): Array[Any] =
     queries.select("cid").distinct().collect().map(_.get(0))
 
+  /** The IVF probe under [[annIvf]] and [[annIvfPq]]: size the lists and
+    * probes, fit (or reuse) the quantizer, build (or reuse) the posting
+    * table of `rows(cid)` tagged `tag`, and score the posting rows of
+    * each query's probed cells with `score` (pairs → (q_id, vec_id,
+    * score)). The scan bucket-prunes to the probed cells and excludes
+    * the query itself. Returns (q_id, vec_id, score) with every true
+    * top-`n` pair.
+    *
+    * Multi-assignment makes the same pair surface via up to nAssign
+    * shared cells (identical score — the dedup is just a max). A
+    * groupBy dedup of the scored rows would shuffle every one of them:
+    * measured ~940M rows / ~19 GB at 100M×(16,5,3) — the exact shape
+    * that killed the r15 posting build, one operator later. Instead
+    * the ranked cut comes first, widened to n·nAssign: it plans as a
+    * PARTIAL WindowGroupLimit, so each map task forwards at most
+    * n·nAssign rows per query and the exchange carries
+    * ~tasks·|q|·n·nAssign rows, not the scored corpus. Every true
+    * top-n pair survives the cut — the pairs ranked above the n-th
+    * distinct pair are < n distinct pairs × ≤ nAssign copies each —
+    * and the tiny survivor set dedups exactly. */
+  private def ivfProbe(emb: DataFrame, queries: DataFrame, g: Ivf, n: Int, tag: String)(
+      rows: Column => DataFrame, score: DataFrame => DataFrame): DataFrame = {
+    val count = emb.count()
+    val nLists = if (g.nCentroids > 0) g.nCentroids else autoLists(count, 4096)
+    val probes = if (g.nProbe > 0) g.nProbe else math.max(3, nLists / 16)
+    val key = planKey(emb)
+    val cents = quantizer(emb, key, nLists, IndexIters)
+    val posting = postingTable(emb.sparkSession, key, s"${tag}_${nLists}_${g.nAssign}",
+      count * g.nAssign)(rows(explode(nearestCids(cents, g.nAssign)).as("cid")))
+    val probed = queries.select(col("*"), explode(nearestCids(cents, probes, "q_emb")).as("cid"))
+    val matched = score(posting.filter(col("cid").isin(probedCells(probed): _*))
+      .join(broadcast(probed), "cid")
+      .filter(col("q_id") =!= col("vec_id")))
+    rankedCut(matched, "q_id", col("score").desc, n * g.nAssign)
+      .groupBy("q_id", "vec_id").agg(max("score").as("score"))
+  }
+
   /** Seeded Lloyd k-means over (vec_id, embedding) — deterministic:
     * init from nCentroids hash-ordered rows, each iteration one assign
     * (codegen argmax projection) + recompute (posexplode → per-dim
@@ -442,17 +578,11 @@ object Embeddings {
     * otherwise: at 1M×64-dim that's 256M exploded rows across 4
     * Lloyd rounds, for centroids a 6% sample reproduces. Below the
     * cap the sample is the whole corpus, so small-corpus behavior
-    * (and every sf-scale spec) is bit-identical. Hash sampling keeps
-    * the fit partition-invariant and reproducible — same corpus,
-    * same centroids, any cluster. */
+    * (and every sf-scale spec) is bit-identical. */
   def fitKmeans(emb: DataFrame, nCentroids: Int, iters: Int): Seq[Seq[Double]] = {
     val sp = emb.sparkSession
     import sp.implicits._
-    val target = math.max(nCentroids.toLong * 256L, 65536L)
-    val n = emb.count()
-    val train =
-      if (n <= target) emb
-      else emb.filter(pmod(xxhash64(col("vec_id")), lit(n / target + 1)) === 0)
+    val train = hashSample(emb, emb.count(), math.max(nCentroids.toLong * 256L, 65536L))
     var cents: Seq[Seq[Double]] = train
       .orderBy(xxhash64(col("vec_id")))
       .limit(nCentroids)
@@ -482,72 +612,45 @@ object Embeddings {
     cents
   }
 
-  /** `nCentroids = 0` (the default) auto-sizes the list count to
-    * 4·√n clamped to [10, 4096] — the classic IVF rule that keeps
-    * per-probe scan cost O(√n) instead of O(n) — and `nProbe = 0`
-    * auto-follows at nlist/16 (min 3) so the probed FRACTION of the
-    * space stays roughly constant as lists multiply (a fixed absolute
-    * nProbe over a growing nlist silently trades recall away). Fixed
-    * small-list configs remain available explicitly — the registered
-    * sf-corpus query pins 16/5/3 where the recall spec measures it —
-    * but a library user pointing this at a 10⁹-vector lake gets the
-    * √n geometry, not a 10-list near-brute-force scan (the same
-    * fixed-knob trap [[semanticDupPairs]]'s auto-k closes). */
+  /** IVF (inverted-file) ANN — the centroid-partitioned scale path
+    * ([[Ivf]]):
+    * 1. coarse quantizer: [[fitKmeans]], [[IndexIters]] Lloyd rounds.
+    * 2. posting lists: each vector joins the lists of its `nAssign`
+    *    nearest centroids (multi-assignment trades index size for
+    *    recall on weakly-clustered corpora), written once as a
+    *    cid-bucketed table ([[postingTable]]).
+    * 3. probe: a query scores only the vectors in its `nProbe`
+    *    nearest centroids' lists — cost scales with
+    *    corpus·nProbe·nAssign/k, not corpus.
+    * Deterministic end-to-end (seeded init, content-hash sampled fit),
+    * so recall vs brute force is a stable spec assertion. Complements
+    * [[annSketch]]: IVF wins when the corpus clusters; the sketch
+    * path when it doesn't.
+    *
+    * `nCentroids = 0` (the default) auto-sizes the list count to
+    * 4·√n clamped to [10, 4096] — the classic IVF rule — and
+    * `nProbe = 0` auto-follows at nlist/16 (min 3) so the probed
+    * FRACTION of the space stays roughly constant as lists multiply (a
+    * fixed absolute nProbe over a growing nlist silently trades recall
+    * away). The registered sf-corpus rows pin 16/5/3, where the recall
+    * spec measures it; a library user pointing this at a 10⁹-vector
+    * lake gets the √n geometry, not a 10-list near-brute-force scan
+    * (the same fixed-knob trap [[semanticDupPairs]]'s auto-k closes). */
   def annIvf(corpus: DataFrame, queryIds: Column, k: Int,
-             nCentroids: Int = 0, nProbe: Int = 0, nAssign: Int = 1,
-             iters: Int = 4): DataFrame = {
-    val sp = corpus.sparkSession
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val n = emb.count()
-    val nLists =
-      if (nCentroids > 0) nCentroids
-      else math.min(4096L, math.max(10L,
-        4L * math.round(math.sqrt(n.toDouble)))).toInt
-    val probes = if (nProbe > 0) nProbe else math.max(3, nLists / 16)
-    val planKey = emb.queryExecution.analyzed.semanticHash()
-    val cents = quantizer(emb, planKey, nLists, iters)
-    // The posting lists ARE the index — a one-time cid-bucketed TABLE
-    // (see [[postingTable]]): the build streams the assignment pass
-    // into bucketed parquet with no shuffle and no standing cache, and
-    // every probe prunes to its probed buckets instead of scanning the
-    // corpus. This is the same physical build a 1000-executor lake
-    // deployment would run; in-session the memo supplies build-once.
-    val posting = postingTable(sp, planKey,
-      s"ivf_${nLists}_${nAssign}_$iters", n * nAssign) {
-      emb.select(col("vec_id"), col("embedding"),
-        explode(nearestCids(cents, nAssign)).as("cid"))
-    }
-    val queries = emb.filter(queryIds)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(nearestCids(cents, probes)).as("cid"))
-    val matched = posting.filter(col("cid").isin(probedCells(queries): _*))
-      .join(broadcast(queries), "cid")
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(dotCol("q_emb", "embedding") / (normCol("q_emb") * normCol("embedding")), 6)
-          .as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    // Multi-assignment makes the same pair surface via up to nAssign
-    // shared cells (identical score — the dedup is just a max). A
-    // groupBy dedup HERE would shuffle every scored row: measured
-    // ~940M rows / ~19 GB at 100M×(16,5,3) — the exact shape that
-    // killed the r15 posting build, one operator later. Instead rank
-    // first with the cutoff widened to k·nAssign: row_number+filter
-    // plans as a PARTIAL WindowGroupLimit, so each map task forwards
-    // at most k·nAssign rows per query and the exchange carries
-    // ~tasks·|q|·k·nAssign rows, not the scored corpus. Every true
-    // top-k pair survives the cut — the pairs ranked above the k-th
-    // distinct pair are < k distinct pairs × ≤ nAssign copies each —
-    // and the tiny survivor set dedups and re-ranks exactly.
-    val preTopK = matched
-      .withColumn("prn", row_number().over(w))
-      .filter(col("prn") <= k * nAssign)
-      .groupBy("q_id", "vec_id").agg(max("sim").as("sim"))
-    preTopK.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "vec_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+             nCentroids: Int = 0, nProbe: Int = 0, nAssign: Int = 1): DataFrame =
+    search(corpus, queryFrame(corpus.filter(queryIds)), k, Ivf(nCentroids, nProbe, nAssign))
+
+  /** `emb` (vec_id, embedding) plus an exact clone of each `pred` row
+    * under `vec_id + 10M` — the planted-structure recipe: a clone's
+    * cosine to its original rounds to exactly 1.0, so the answer is
+    * closed-form while the learned path stays in the loop. */
+  private def withClones(emb: DataFrame, pred: Column): DataFrame =
+    emb.union(emb.filter(pred)
+      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding")))
+
+  /** The rank-1 rows of a top-k result, by query. */
+  private def rankOne(top: DataFrame): DataFrame =
+    top.filter(col("rnk") === 1).orderBy("q_id")
 
   /** Registered query (HARD oracle, planted-structure recipe like
     * [[dedupSemantic]]): the learned-quantizer IVF path verified
@@ -559,16 +662,9 @@ object Embeddings {
     * corpus: rank 1 is the clone, closed-form. A probe-routing bug, a
     * posting-list bug, or a scoring bug each break the row, while
     * [[embedAnnIvfGate]] stays the honest-recall twin (recall ≥ 0.80). */
-  def embedAnnIvfPlanted(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val clones = emb.filter(col("vec_id") < 10)
-      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
-    annIvf(emb.union(clones), col("vec_id") < 10, k = 10,
-      nCentroids = 16, nProbe = 5, nAssign = 3)
-      .filter(col("rnk") === 1)
-      .orderBy("q_id")
-  }
+  def embedAnnIvfPlanted(spark: SparkSession, dir: String): DataFrame =
+    rankOne(annIvf(withClones(vectors(spark, dir), firstTen), firstTen, k = 10,
+      nCentroids = 16, nProbe = 5, nAssign = 3))
 
   /** Measured corpus-clusteredness, the basis for [[annAuto]]'s
     * IVF-vs-sketch routing (round 8 measured identical IVF geometry
@@ -617,34 +713,19 @@ object Embeddings {
                            occupancyEntropy: Double, tightness: Double,
                            margin: Double)
 
-  def probeClusteredness(corpus: DataFrame, nCentroids: Int = 0,
-                         iters: Int = 2): Clusteredness = {
+  def probeClusteredness(corpus: DataFrame): Clusteredness = {
     val sp = corpus.sparkSession
     import sp.implicits._
     val emb = corpus.select(col("vec_id"), col("embedding"))
     val n = emb.count()
-    val nLists =
-      if (nCentroids > 0) nCentroids
-      else math.min(1024L, math.max(10L,
-        4L * math.round(math.sqrt(n.toDouble)))).toInt
+    val nLists = autoLists(n, 1024)
     // light fit: ~16 training points per centroid (fitKmeans would
     // default to 256/centroid — index-grade quality the probe doesn't
     // need and can't afford on the route-to-sketch corpora)
-    val fitCap = math.max(16L * nLists, 16384L)
-    val train =
-      if (n <= fitCap) emb
-      else emb.filter(pmod(xxhash64(col("vec_id")), lit(n / fitCap + 1)) === 0)
-    val planKey = train.queryExecution.analyzed.semanticHash()
-    val cents = quantizer(train, planKey, nLists, iters)
-    val cap = 16384L
-    val sample =
-      if (n <= cap) emb
-      else emb.filter(pmod(xxhash64(col("vec_id")), lit(n / cap + 1)) === 0)
-    val unit = cents.map { c =>
-      val nr = math.sqrt(c.map(x => x * x).sum)
-      if (nr == 0) c else c.map(_ / nr)
-    }
-    val centDf = unit.zipWithIndex.map { case (c, i) => (i, c) }
+    val train = hashSample(emb, n, math.max(16L * nLists, 16384L))
+    val cents = quantizer(train, planKey(train), nLists, ProbeIters)
+    val sample = hashSample(emb, n, 16384L)
+    val centDf = unitRows(cents).zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cid", "centroid")
     val perCell = sample
       .select(col("embedding"), nearestCids(cents, 2).as("cids"))
@@ -677,9 +758,9 @@ object Embeddings {
 
   /** Structure-routed ANN: probe the corpus once, then answer top-k
     * through [[annIvf]] when the measured cell tightness clears
-    * `tightnessCut`, else through [[annSketch]]. The cut sits midway
-    * between the two regimes round 8 characterized (IVF recall 1.0
-    * clustered vs 0.74 uniform at identical geometry): measured
+    * [[TightnessCut]] (0.75), else through [[annSketch]]. The cut sits
+    * midway between the two regimes round 8 characterized (IVF recall
+    * 1.0 clustered vs 0.74 uniform at identical geometry): measured
     * tightness is ≥0.95 on clustered corpora and ≤0.56 on uniform
     * ones at every probed scale, so the cut is not delicate. The
     * decision is memoized per corpus plan (same registry lifetime as
@@ -687,17 +768,14 @@ object Embeddings {
     * fit once; a route to IVF then builds the index at its own
     * geometry (see [[probeClusteredness]] on why the probe stays
     * capped and cheap). */
-  def annAuto(corpus: DataFrame, queryIds: Column, k: Int,
-              tightnessCut: Double = 0.75,
-              nBits: Int = 256, candFactor: Int = 15): DataFrame = {
+  def annAuto(corpus: DataFrame, queryIds: Column, k: Int): DataFrame = {
     val emb = corpus.select(col("vec_id"), col("embedding"))
-    val planKey = emb.queryExecution.analyzed.semanticHash()
-    val useIvf = graft.Caches.decideOnce(emb.sparkSession,
-      planKey ^ 0x5eedc11e, (tightnessCut * 1e6).toLong) {
-      probeClusteredness(corpus).tightness >= tightnessCut
+    val useIvf = Caches.decideOnce(emb.sparkSession,
+      planKey(emb) ^ 0x5eedc11e, (TightnessCut * 1e6).toLong) {
+      probeClusteredness(corpus).tightness >= TightnessCut
     }
     if (useIvf) annIvf(corpus, queryIds, k)
-    else annSketch(corpus, queryIds, k, nBits, candFactor)
+    else annSketch(corpus, queryIds, k)
   }
 
   /** Registered query (HARD oracle): auto-routed top-10 for the first
@@ -708,7 +786,7 @@ object Embeddings {
     * row instead of silently shifting recall. The router's OTHER
     * branch runs under [[embedAnnAutoClustered]]'s driver oracle. */
   def embedAnnAuto(spark: SparkSession, dir: String): DataFrame =
-    annAuto(Tables.load(spark, dir, "embeddings"), col("vec_id") < 10, k = 10)
+    annAuto(Tables.load(spark, dir, "embeddings"), firstTen, k = 10)
 
   /** Deterministically clustered twin of an embeddings corpus: each
     * vector keeps its original embedding as in-cluster noise around a
@@ -740,15 +818,8 @@ object Embeddings {
     * so rank 1 is the clone, closed-form, for ANY IVF geometry: a
     * routing, posting-list, probe, or scoring bug all turn the row
     * red. */
-  def embedAnnAutoClustered(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = clusteredTwin(Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")))
-    val clones = corpus.filter(col("vec_id") < 10)
-      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
-    annAuto(corpus.union(clones), col("vec_id") < 10, k = 10)
-      .filter(col("rnk") === 1)
-      .orderBy("q_id")
-  }
+  def embedAnnAutoClustered(spark: SparkSession, dir: String): DataFrame =
+    rankOne(annAuto(withClones(clusteredTwin(vectors(spark, dir)), firstTen), firstTen, k = 10))
 
   /** Margin-based bitext mining (Artetxe & Schwenk 2019, "Margin-based
     * Parallel Corpus Mining with Multilingual Sentence Embeddings" —
@@ -757,62 +828,45 @@ object Embeddings {
     * sentences whose neighborhoods are dense in EVERY language, so
     * each candidate pair is scored by its cosine RELATIVE to both
     * endpoints' neighborhoods — margin(x,y) = cos(x,y) ÷ mean of
-    * (avg top-k cos(x, ·) forward, avg top-k cos(y, ·) reverse) — and
-    * each query keeps its best-margin match.
+    * (avg top-k cos(x, ·) forward, avg top-k cos(y, ·) reverse), with
+    * k = [[BitextK]] — and each query keeps its best-margin match.
     *
-    * Scale shape (NO corpus self-join): queries broadcast against the
-    * target side (one scan, window top-k on q_id like [[knnBrute]]);
-    * the ≤ |Q|·k surviving candidates broadcast back against the
-    * source side for the reverse neighborhoods (second scan); margins
-    * join on the tiny per-query / per-candidate aggregates. Cross-
-    * engine determinism: cosines round to 6 before ranking (the
-    * [[knnBrute]] convention), neighborhood means fold the k rounded
+    * Scale shape (NO corpus self-join): each neighbourhood pass is the
+    * skeleton's exact score and ranked cut over one scan with the query
+    * side broadcast — queries against the target side, then the
+    * ≤ |Q|·k surviving candidates, as queries, against the source side;
+    * margins join on the tiny per-query / per-candidate aggregates.
+    * Cross-engine determinism: cosines round to 6 before ranking (the
+    * [[exact]] score), neighborhood means fold the k rounded
     * cosines IN RANK ORDER (both engines run the identical sequential
     * fold), and the margin — a ratio of discrete rationals — uses the
     * engine-exact floor(x·1e6+0.5)/1e6 contract. The two "languages"
     * are the label parity classes of the synthetic corpus; on real
     * data they are the language column. */
-  def bitextMine(emb: DataFrame, queryPred: Column, k: Int = 4): DataFrame = {
-    val a = emb.filter(pmod(col("label"), lit(2)) === 0)
+  def bitextMine(emb: DataFrame, queryPred: Column): DataFrame = {
+    def side(parity: Int) = emb.filter(pmod(col("label"), lit(2)) === parity)
       .select(col("vec_id"), col("embedding"))
-    val b = emb.filter(pmod(col("label"), lit(2)) === 1)
-      .select(col("vec_id"), col("embedding"))
-    val q = a.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wF = Window.partitionBy("q_id").orderBy(col("cs").desc, col("vec_id").asc)
-    val fwd = graft.Caches.persist(b.crossJoin(broadcast(q))
-      .select(col("q_id"), col("vec_id"),
-        round(dotCol("q_emb", "embedding") / (normCol("q_emb") * normCol("embedding")), 6)
-          .as("cs"))
-      .withColumn("rk", row_number().over(wF))
-      .filter(col("rk") <= k))
+    val (a, b) = (side(0), side(1))
+    // the sides are disjoint, so no self-exclusion: a plain broadcast cross join
+    def neighbours(rows: DataFrame, queries: DataFrame) =
+      rankedCut(exact(rows.crossJoin(broadcast(queries))), "q_id", col("score").desc, BitextK)
+    val fwd = Caches.persist(neighbours(b, queryFrame(a.filter(queryPred))))
     // rank-ordered fold, not avg(): a hash aggregate's input order is
     // partition-arbitrary, and an ulp of drift in the mean would break
     // the cross-engine margin compare
     val foldAvg =
-      expr("aggregate(transform(array_sort(collect_list(struct(rk, cs))), s -> s.cs)," +
-        " 0D, (acc, x) -> acc + x)") / lit(k)
+      expr("aggregate(transform(array_sort(collect_list(struct(rnk, score))), s -> s.score)," +
+        " 0D, (acc, x) -> acc + x)") / lit(BitextK)
     val favg = fwd.groupBy("q_id").agg(foldAvg.as("favg"))
-    val candEmb = b.join(fwd.select(col("vec_id")).distinct(), "vec_id")
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    val wR = Window.partitionBy("cand_id").orderBy(col("cs").desc, col("vec_id").asc)
-    val rev = a.crossJoin(broadcast(candEmb))
-      .select(col("cand_id"), col("vec_id"),
-        round(dotCol("c_emb", "embedding") / (normCol("c_emb") * normCol("embedding")), 6)
-          .as("cs"))
-      .withColumn("rk", row_number().over(wR))
-      .filter(col("rk") <= k)
-    val ravg = rev.groupBy("cand_id").agg(foldAvg.as("ravg"))
-    val wPick = Window.partitionBy("q_id")
-      .orderBy(col("margin").desc, col("match_id").asc)
-    fwd.select(col("q_id"), col("vec_id").as("match_id"), col("cs"))
+    val rev = neighbours(a, queryFrame(b.join(fwd.select(col("vec_id")).distinct(), "vec_id")))
+    val ravg = rev.groupBy(col("q_id").as("cand_id")).agg(foldAvg.as("ravg"))
+    val margins = fwd.select(col("q_id"), col("vec_id").as("match_id"), col("score"))
       .join(favg, "q_id")
       .join(broadcast(ravg), col("match_id") === col("cand_id"))
       .withColumn("margin",
-        expr("floor(cs / ((favg + ravg) / 2) * 1e6 + 0.5) / 1e6"))
-      .withColumn("rn", row_number().over(wPick))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("match_id"), col("cs").as("cos_sim"), col("margin"))
+        expr("floor(score / ((favg + ravg) / 2) * 1e6 + 0.5) / 1e6"))
+    rankedCut(margins, "q_id", col("margin").desc, 1, tie = "match_id")
+      .select(col("q_id"), col("match_id"), col("score").as("cos_sim"), col("margin"))
       .orderBy("q_id")
   }
 
@@ -869,27 +923,22 @@ object Embeddings {
 
   /** Train m per-subspace codebooks of `k` codewords each (classic PQ,
     * Jégou et al. 2011): slice every vector into m contiguous
-    * subvectors, run seeded L2 Lloyd in ALL subspaces simultaneously —
-    * one corpus pass per iteration, not per (subspace, iteration):
+    * subvectors, run seeded L2 Lloyd ([[IndexIters]] rounds) in ALL
+    * subspaces simultaneously — one corpus pass per iteration, not per
+    * (subspace, iteration):
     * each row explodes to its m (subspace, code, subvector) triples
     * and one (s, code, pos) hash agg recomputes every codebook. The
     * first cut looped subspaces serially: 8×5 small jobs whose fixed
     * cost alone was 80% of an 84 s run at 1M vectors. Same sampled-fit
     * regime as [[fitKmeans]]. Returns m × k × (d/m) codewords. */
-  def fitPq(emb: DataFrame, m: Int, k: Int, iters: Int = 4): Seq[Seq[Seq[Double]]] = {
+  def fitPq(emb: DataFrame, m: Int, k: Int): Seq[Seq[Seq[Double]]] = {
     pqFitCount.incrementAndGet()
     val sp = emb.sparkSession
     import sp.implicits._
     val d = emb.select(size(col("embedding"))).head().getInt(0)
     require(d % m == 0, s"dim $d must divide into $m subspaces")
     val sub = d / m
-    val target = math.max(k.toLong * 256L, 65536L)
-    val n = emb.count()
-    val train =
-      if (n <= target) emb
-      else emb.filter(pmod(xxhash64(col("vec_id")), lit(n / target + 1)) === 0)
-    def sliceCol(s: Int): Column =
-      expr(s"transform(slice(embedding, ${s * sub + 1}, $sub), x -> CAST(x AS DOUBLE))")
+    val train = hashSample(emb, emb.count(), math.max(k.toLong * 256L, 65536L))
     // init: k hash-ordered rows seed all m subspaces (one job)
     val seedRows: Seq[Seq[Double]] = train
       .orderBy(xxhash64(col("vec_id")))
@@ -898,10 +947,10 @@ object Embeddings {
       .as[Seq[Double]].collect().toSeq
     var books: Seq[Seq[Seq[Double]]] =
       (0 until m).map(s => seedRows.map(_.slice(s * sub, s * sub + sub)))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to IndexIters) {
       val triples = train.select(explode(array((0 until m).map { s =>
-        struct(lit(s).as("s"), nearestL2Code(sliceCol(s), books(s)).as("code"),
-          sliceCol(s).as("sv"))
+        struct(lit(s).as("s"), nearestL2Code(subVector(s, sub), books(s)).as("code"),
+          subVector(s, sub).as("sv"))
       }: _*)).as("t"))
       val updated = triples
         .select(col("t.s").as("s"), col("t.code").as("code"),
@@ -917,72 +966,48 @@ object Embeddings {
     books
   }
 
+  /** Subvector `s` (of width `sub`) of `embedding`, as doubles: the PQ
+    * subspace slice. */
+  private def subVector(s: Int, sub: Int): Column =
+    expr(s"transform(slice(embedding, ${s * sub + 1}, $sub), x -> CAST(x AS DOUBLE))")
+
+  /** Each vector's m PQ codes, array<int>: the nearest codeword of each
+    * subspace. */
+  private def pqCodes(books: Seq[Seq[Seq[Double]]]): Column = {
+    val sub = books.head.head.length
+    array(books.indices.map(s => nearestL2Code(subVector(s, sub), books(s))): _*)
+  }
+
   /** Encode each vector as m code bytes — (vec_id, codes: array<int>).
     * One projection; with m=8, k=16 on 64-dim float32 that is 8 bytes
     * per vector against 256: a 32× cut in what a 100-TB ANN scan has
     * to read. */
-  def pqEncode(emb: DataFrame, books: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val m = books.length
-    val sub = books.head.head.length
-    emb.select(col("vec_id"), array(
-      (0 until m).map(s => nearestL2Code(
-        expr(s"transform(slice(embedding, ${s * sub + 1}, $sub), x -> CAST(x AS DOUBLE))"),
-        books(s))): _*).as("codes"))
-  }
+  def pqEncode(emb: DataFrame, books: Seq[Seq[Seq[Double]]]): DataFrame =
+    emb.select(col("vec_id"), pqCodes(books).as("codes"))
 
   /** Total [[fitPq]] invocations (spec hook: asserts the memo makes
     * repeated [[annPq]] calls fit-free). */
   private[graft] val pqFitCount = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The PQ codebooks fit on `emb` (whose plan hash is `planKey`): fit
-    * once per corpus and reused by every encode/probe — without the
-    * memo each [[annPq]] call re-runs `iters` collect jobs. */
-  private def codebook(emb: DataFrame, planKey: Int, m: Int,
-                       codebookSize: Int): Seq[Seq[Seq[Double]]] =
-    Caches.memo(emb.sparkSession, Codebook, (planKey, m, codebookSize, 4))(
-      fitPq(emb, m, codebookSize))
+  /** The PQ codebooks ([[PqM]] × [[PqCodes]]) fit on `emb`: fit once
+    * per corpus plan and reused by every encode/probe — without the
+    * memo each [[annPq]] call re-runs its Lloyd rounds. */
+  private def codebook(emb: DataFrame): Seq[Seq[Seq[Double]]] =
+    Caches.memo(emb.sparkSession, Codebook, planKey(emb))(fitPq(emb, PqM, PqCodes))
 
-  /** PQ top-k, two-stage (the IVFPQ-with-rerank pattern): exact query
-    * embeddings scored against PQ-RECONSTRUCTED corpus vectors
+  /** PQ top-k, two-stage (the IVFPQ-with-rerank pattern, [[Pq]]): exact
+    * query embeddings scored against PQ-RECONSTRUCTED corpus vectors
     * (asymmetric comparison — queries stay exact, the corpus scan pays
-    * m bytes/vector instead of 4·d), then the top `k·candFactor` PQ
-    * survivors per query are re-scored with their exact embeddings.
-    * Raw PQ ranking alone reads 0.28–0.62 recall@10 on the driver's
-    * structureless corpus (measured by the `tools.PqProbe` main, source
-    * at commit f4abc46 — 32× compression
+    * [[PqM]] bytes/vector instead of 4·d), then the top
+    * [[CandFactor]]·k PQ survivors per query are re-scored with their
+    * exact embeddings. Raw PQ ranking alone reads 0.28–0.62 recall@10
+    * on the driver's structureless corpus (measured by the
+    * `tools.PqProbe` main, source at commit f4abc46 — 32× compression
     * cannot preserve a 0.25-over-σ ranking margin); routing only the
     * FINAL ranking through exact vectors restores recall while the
     * full-corpus pass still runs on codes. */
-  def annPq(corpus: DataFrame, queryIds: Column, k: Int,
-            m: Int = 8, codebookSize: Int = 16, candFactor: Int = 15): DataFrame = {
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val books = codebook(emb, emb.queryExecution.analyzed.semanticHash(), m, codebookSize)
-    val booksLit = typedlit(books)
-    val recon = pqEncode(emb, books)
-      .select(col("vec_id"),
-        flatten(transform(col("codes"),
-          (c, s) => element_at(element_at(booksLit, s + 1), c + 1))).as("recon"))
-    val queries = emb.filter(queryIds)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), _.cast("double")).as("q_emb"))
-    val pqScored = recon.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (dotCol("q_emb", "recon") / (normCol("q_emb") * normCol("recon"))).as("sim_pq"))
-    val pw = Window.partitionBy("q_id").orderBy(col("sim_pq").desc, col("vec_id").asc)
-    val topC = pqScored.withColumn("prnk", row_number().over(pw))
-      .filter(col("prnk") <= k * candFactor)
-      .select("q_id", "vec_id")
-    val scored = emb.join(broadcast(topC), "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(dotCol("q_emb", "embedding") / (normCol("q_emb") * normCol("embedding")), 6)
-          .as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "vec_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+  def annPq(corpus: DataFrame, queryIds: Column, k: Int): DataFrame =
+    search(corpus, queryFrame(corpus.filter(queryIds)), k, Pq(k * CandFactor))
 
   /** Registered query (HARD oracle, planted-structure recipe): the
     * learned PQ codebook path verified end-to-end. An exact clone
@@ -993,15 +1018,8 @@ object Embeddings {
     * top-C survivors, and the exact rerank then makes rank 1
     * closed-form at cosine exactly 1.0. [[embedPqGate]] stays the
     * honest-recall twin (recall ≥ 0.50). */
-  def embedPqPlanted(spark: SparkSession, dir: String): DataFrame = {
-    val emb0 = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val clones = emb0.filter(col("vec_id") < 10)
-      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
-    annPq(emb0.union(clones), col("vec_id") < 10, k = 10)
-      .filter(col("rnk") === 1)
-      .orderBy("q_id")
-  }
+  def embedPqPlanted(spark: SparkSession, dir: String): DataFrame =
+    rankOne(annPq(withClones(vectors(spark, dir), firstTen), firstTen, k = 10))
 
   /** Composite IVF-PQ index (Jégou et al. 2011 — the faiss `IVFPQ`
     * production shape, by_residual=false variant): coarse k-means
@@ -1018,89 +1036,16 @@ object Embeddings {
     * At 100 TB this is the whole game: a probed cell's bytes are
     * ~(4m+8)/(4d) of the raw vectors (≈ 15× less at m=8, d=64), the
     * probed FRACTION is nProbe/nLists, and exact vectors are fetched
-    * only for k·candFactor survivors per query.
+    * only for [[CandFactor]]·k survivors per query.
     *
     * Both learned stages reuse the session memos (coarse quantizer ←
     * [[quantizer]], codebooks ← [[codebook]], keyed by the corpus
     * plan), and the posting list is a one-time cid-bucketed TABLE like
-    * [[annIvf]]'s (see [[postingTable]]) that probes bucket-prune. */
+    * [[annIvf]]'s: both run the same [[ivfProbe]], which bucket-prunes. */
   def annIvfPq(corpus: DataFrame, queryIds: Column, k: Int,
-               nCentroids: Int = 0, nProbe: Int = 0, nAssign: Int = 1,
-               m: Int = 8, codebookSize: Int = 16, candFactor: Int = 15,
-               iters: Int = 4): DataFrame = {
-    val sp = corpus.sparkSession
-    val emb = corpus.select(col("vec_id"), col("embedding"))
-    val n = emb.count()
-    val nLists =
-      if (nCentroids > 0) nCentroids
-      else math.min(4096L, math.max(10L,
-        4L * math.round(math.sqrt(n.toDouble)))).toInt
-    val probes = if (nProbe > 0) nProbe else math.max(3, nLists / 16)
-    val planKey = emb.queryExecution.analyzed.semanticHash()
-    val cents = quantizer(emb, planKey, nLists, iters)
-    val books = codebook(emb, planKey, m, codebookSize)
-    val sub = books.head.head.length
-    // ‖codeword‖² lookup, flattened like the query LUT — PqAdc over it
-    // with a vector's own codes yields ‖recon‖² (subspaces are
-    // orthogonal coordinate blocks, so norms² add).
-    val normLut: Seq[Double] = books.flatMap(_.map(cw => cw.map(x => x * x).sum))
-    val codesCol = array((0 until m).map(s => nearestL2Code(
-      expr(s"transform(slice(embedding, ${s * sub + 1}, $sub), x -> CAST(x AS DOUBLE))"),
-      books(s))): _*)
-    // Bucketed-table build like [[annIvf]]'s, but the posting row is
-    // the PQ-compressed (cid, vec_id, codes, rnorm) — ~15× fewer bytes
-    // at rest than raw vectors, which is the IVF-PQ contract.
-    val posting = postingTable(sp, planKey,
-      s"ivfpq_${nLists}_${nAssign}_${m}_${codebookSize}_$iters", n * nAssign) {
-      emb.select(col("vec_id"), codesCol.as("codes"),
-        explode(nearestCids(cents, nAssign)).as("cid"))
-        .withColumn("rnorm",
-          sqrt(VectorExpressions.pqAdc(col("codes"), typedlit(normLut), codebookSize)))
-    }
-    val booksLit = typedlit(books)
-    // per-query ADC table: lut[s·k + c] = ⟨q_s, codeword_{s,c}⟩ —
-    // interpreted HOFs are fine here, it runs once per QUERY row
-    val lutCol = flatten(transform(booksLit, (bk, s) =>
-      transform(bk, cw => aggregate(
-        zip_with(cw, slice(col("q_emb"), s * sub + 1, lit(sub)), _ * _),
-        lit(0.0), _ + _))))
-    val queries = emb.filter(queryIds)
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), _.cast("double")).as("q_emb"),
-        explode(nearestCids(cents, probes)).as("cid"))
-      .withColumn("lut", lutCol)
-      .withColumn("qnorm",
-        sqrt(VectorExpressions.vecDot(col("q_emb"), col("q_emb"))))
-    val pqMatched = posting.filter(col("cid").isin(probedCells(queries): _*))
-      .join(broadcast(queries), "cid")
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        (VectorExpressions.pqAdc(col("codes"), col("lut"), codebookSize) /
-          (col("qnorm") * col("rnorm"))).as("sim_pq"))
-    val pw = Window.partitionBy("q_id").orderBy(col("sim_pq").desc, col("vec_id").asc)
-    // rank-first with the cutoff widened to ·nAssign, THEN dedup the
-    // multi-assignment copies — the same partial-WindowGroupLimit
-    // shape as [[annIvf]]'s probe (a groupBy dedup here would shuffle
-    // every ADC-scored row; the widened cut provably keeps every true
-    // top-(k·candFactor) pair since each pair has ≤ nAssign copies)
-    val topC = pqMatched
-      .withColumn("prn", row_number().over(pw))
-      .filter(col("prn") <= k * candFactor * nAssign)
-      .groupBy("q_id", "vec_id").agg(max("sim_pq").as("sim_pq"))
-      .withColumn("prnk", row_number().over(pw))
-      .filter(col("prnk") <= k * candFactor)
-      .select("q_id", "vec_id")
-    val scored = emb.join(broadcast(topC), "vec_id")
-      .join(broadcast(queries.select("q_id", "q_emb").dropDuplicates("q_id")), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(dotCol("q_emb", "embedding") / (normCol("q_emb") * normCol("embedding")), 6)
-          .as("sim"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "vec_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+               nCentroids: Int = 0, nProbe: Int = 0, nAssign: Int = 1): DataFrame =
+    search(corpus, queryFrame(corpus.filter(queryIds)), k,
+      Ivf(nCentroids, nProbe, nAssign, Some(k * CandFactor)))
 
   /** Registered query (HARD oracle, planted-structure recipe): the
     * composite index verified end-to-end. The clone's codes are
@@ -1112,16 +1057,9 @@ object Embeddings {
     * [[embedPqPlanted]] puts it in the top-C, and the exact rerank
     * makes rank 1 closed-form at cosine exactly 1.0. A cell-routing,
     * code, LUT, ADC, or rerank bug each break the row. */
-  def embedAnnIvfPqPlanted(spark: SparkSession, dir: String): DataFrame = {
-    val emb0 = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val clones = emb0.filter(col("vec_id") < 10)
-      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
-    annIvfPq(emb0.union(clones), col("vec_id") < 10, k = 10,
-      nCentroids = 16, nProbe = 5, nAssign = 3)
-      .filter(col("rnk") === 1)
-      .orderBy("q_id")
-  }
+  def embedAnnIvfPqPlanted(spark: SparkSession, dir: String): DataFrame =
+    rankOne(annIvfPq(withClones(vectors(spark, dir), firstTen), firstTen, k = 10,
+      nCentroids = 16, nProbe = 5, nAssign = 3))
 
   /** Semantic dedup pairs — SemDeDup (Abbas et al., "SemDeDup: Data-
     * efficient learning at web-scale through semantic deduplication",
@@ -1149,13 +1087,12 @@ object Embeddings {
     * [[fitKmeans]] trains on a hash-sample (~256 points/centroid);
     * assignment is one codegen argmax pass, k·d ops per row. */
   def semanticDupPairs(emb: DataFrame, simThreshold: Double,
-                       nCentroids: Int = 0, iters: Int = 4): DataFrame = {
+                       nCentroids: Int = 0): DataFrame = {
     val vecs = emb.select(col("vec_id"), col("embedding"))
     val k =
       if (nCentroids > 0) nCentroids
       else math.min(4096L, math.max(16L, vecs.count() / 1024L)).toInt
-    val planKey = vecs.queryExecution.analyzed.semanticHash()
-    val cents = quantizer(vecs, planKey, k, iters)
+    val cents = quantizer(vecs, planKey(vecs), k, IndexIters)
     // norm computed ONCE per vector, not twice per pair: each vector
     // participates in ~cell-size pairs, so folding the norm into the
     // cached frame removes 2·|pairs|·dim multiply-adds from the
@@ -1182,8 +1119,8 @@ object Embeddings {
     * duplicate pair (anti join against the drop set — same decision
     * rule as the text-side keep list). */
   def semanticKeep(emb: DataFrame, simThreshold: Double,
-                   nCentroids: Int = 0, iters: Int = 4): DataFrame = {
-    val drops = semanticDupPairs(emb, simThreshold, nCentroids, iters)
+                   nCentroids: Int = 0): DataFrame = {
+    val drops = semanticDupPairs(emb, simThreshold, nCentroids)
       .select(col("id_b").as("vec_id")).distinct()
     emb.select("vec_id").join(drops, Seq("vec_id"), "left_anti")
       .orderBy("vec_id")
@@ -1205,13 +1142,9 @@ object Embeddings {
     * {(i, i+10M, 1.0) | i ≡ 0 mod 20}. A clustering bug that splits a
     * clone from its original, a cosine bug, or a spurious pair each
     * break a different leg of the compare. */
-  def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val clones = base.filter(col("vec_id") % 20 === 0)
-      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
-    semanticDupPairs(base.union(clones), simThreshold = 0.95)
-  }
+  def dedupSemantic(spark: SparkSession, dir: String): DataFrame =
+    semanticDupPairs(withClones(vectors(spark, dir), col("vec_id") % 20 === 0),
+      simThreshold = 0.95)
 
   /** Embedding-space outlier report — the curation filter that drops
     * mislabeled / off-distribution vectors before they poison a
@@ -1354,7 +1287,8 @@ object Embeddings {
     (Array.tabulate(n)(i => a(i)(i)), v)
   }
 
-  /** Fit a d-component PCA basis from ONE distributed pass: the
+  /** Fit a d-component PCA basis of [[Dim]]-wide vectors from ONE
+    * distributed pass: the
     * [[graft.functions.GramMatrix]] native aggregate reduces the corpus
     * to (n, Σx, Σxxᵀ) in a fixed 4161-double buffer — the covariance,
     * eigensolve, and component selection are then driver-side small
@@ -1362,14 +1296,14 @@ object Embeddings {
     * sorted by eigenvalue descending and sign-canonicalized (largest-
     * magnitude coordinate positive) so the basis — and every plan
     * built from it — is deterministic. */
-  def fitPca(emb: DataFrame, d: Int, dim: Int = 64)
-      : (Array[Double], Array[Array[Double]]) = {
-    val fit = pca(emb, d, dim)
+  def fitPca(emb: DataFrame, d: Int): (Array[Double], Array[Array[Double]]) = {
+    val fit = pca(emb, d)
     (fit.mean, fit.basis)
   }
 
-  private def pca(emb: DataFrame, d: Int, dim: Int): Pca = {
+  private def pca(emb: DataFrame, d: Int): Pca = {
     import org.apache.spark.sql.graftshim.ColumnBridge
+    val dim = Dim
     val flat = emb.agg(ColumnBridge.column(
         graft.functions.GramMatrix(
           ColumnBridge.expression(col("embedding")), dim).toAggregateExpression())
@@ -1392,17 +1326,16 @@ object Embeddings {
 
   /** Fraction of total variance the top-d components capture
     * (Σ top-d eigenvalues / trace). Fits through the memo if needed. */
-  def pcaVarianceCaptured(emb: DataFrame, d: Int, dim: Int = 64): Double = {
-    val spectrum = memoFit(emb, d, dim).spectrum
+  def pcaVarianceCaptured(emb: DataFrame, d: Int): Double = {
+    val spectrum = memoFit(emb, d).spectrum
     spectrum.take(d).sum / spectrum.sum
   }
 
   /** The PCA fit of `emb`, a session memo: the sufficient-stats
     * aggregate is one corpus pass — paid once per (corpus, d), probed
     * many times. */
-  private def memoFit(emb: DataFrame, d: Int, dim: Int): Pca =
-    Caches.memo(emb.sparkSession, PcaFit, (emb.queryExecution.analyzed.semanticHash(), d))(
-      pca(emb, d, dim))
+  private def memoFit(emb: DataFrame, d: Int): Pca =
+    Caches.memo(emb.sparkSession, PcaFit, (planKey(emb), d))(pca(emb, d))
 
   /** Project each embedding onto the top-d PCA components:
     * proj_k = ⟨x, e_k⟩ − ⟨mean, e_k⟩, the mean-dot a driver-side
@@ -1419,20 +1352,22 @@ object Embeddings {
     emb.withColumn("embedding", array(comps.toIndexedSeq: _*))
   }
 
+  /** Exact top-10 cosine kNN of the first 10 vectors in `emb`'s
+    * [[ReducedDim]]-dim PCA subspace. */
+  private def pcaKnn(emb: DataFrame): DataFrame = {
+    val Pca(mean, basis, _) = memoFit(emb, ReducedDim)
+    val proj = pcaProject(emb, mean, basis)
+    knnBrute(proj, queryFrame(proj.filter(firstTen)), k = 10)
+  }
+
   /** Exact top-10 cosine kNN in the 16-dim PCA subspace — the trained
     * counterpart of [[embedMatryoshka]]'s raw prefix (PCA puts the
     * variance up front when the encoder didn't). Not registered: the
     * eigensolve isn't SQL-replayable, so `embed_pca` registers
     * [[embedPcaGate]], its invariant gate, and the spec asserts this
     * path's recall floor. */
-  def embedPca(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val Pca(mean, basis, _) = memoFit(emb, d, 64)
-    val proj = pcaProject(emb, mean, basis)
-    val queries = proj.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    knnBrute(proj, queries, k = 10)
-  }
+  def embedPca(spark: SparkSession, dir: String): DataFrame =
+    pcaKnn(vectors(spark, dir))
 
   /** Registered query (HARD oracle, planted-structure recipe): the
     * learned PCA fit→project→retrieve pipeline verified end-to-end.
@@ -1441,17 +1376,8 @@ object Embeddings {
     * projected cosine is exactly 1 — the provable maximum — and
     * rank 1 is closed-form. [[embedPca]] (spec-asserted) stays the
     * honest reduced-space-recall twin. */
-  def embedPcaPlanted(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
-    val emb0 = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val clones = emb0.filter(col("vec_id") < 10)
-      .select((col("vec_id") + lit(10000000L)).as("vec_id"), col("embedding"))
-    val emb = emb0.union(clones)
-    val Pca(mean, basis, _) = memoFit(emb, d, 64)
-    val proj = pcaProject(emb, mean, basis)
-    val queries = proj.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    knnBrute(proj, queries, k = 10).filter(col("rnk") === 1).orderBy("q_id")
-  }
+  def embedPcaPlanted(spark: SparkSession, dir: String): DataFrame =
+    rankOne(pcaKnn(withClones(vectors(spark, dir), firstTen)))
 
   /** Closed-form recall GATE for a learned-retrieval path — the
     * recipe that makes the learned rows driver-checkable: join the
@@ -1511,14 +1437,17 @@ object Embeddings {
     * recall IVF path reduced to its driver-checkable gate — recall
     * ≥ 0.80 vs brute force with the registered 16-cell/5-probe/
     * 3-assign geometry (measured 0.93–0.94 tri-scale). */
-  def embedAnnIvfGate(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    recallGate(knnBrute(emb, queries, k = 10),
-      annIvf(emb, col("vec_id") < 10, k = 10,
-        nCentroids = 16, nProbe = 5, nAssign = 3),
-      k = 10, bar = 0.80, barName = "recall_ge_080")
+  def embedAnnIvfGate(spark: SparkSession, dir: String): DataFrame =
+    gateFirstTen(spark, dir, bar = 0.80, barName = "recall_ge_080")(
+      annIvf(_, firstTen, k = 10, nCentroids = 16, nProbe = 5, nAssign = 3))
+
+  /** [[recallGate]] of `approx` over the embeddings table against the
+    * exact top-10 of the first 10 vectors. */
+  private def gateFirstTen(spark: SparkSession, dir: String, bar: Double, barName: String)(
+      approx: DataFrame => DataFrame): DataFrame = {
+    val emb = vectors(spark, dir)
+    recallGate(knnBrute(emb, queryFrame(emb.filter(firstTen)), k = 10), approx(emb),
+      k = 10, bar = bar, barName = barName)
   }
 
   /** Registered query (HARD oracle via [[recallGate]]): the PQ
@@ -1527,27 +1456,16 @@ object Embeddings {
     * a structureless 2000-vector corpus genuinely costs recall (the
     * honest number, documented rather than hidden); a codebook or
     * rerank bug lands near 0.005. */
-  def embedPqGate(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    recallGate(knnBrute(emb, queries, k = 10),
-      annPq(emb, col("vec_id") < 10, k = 10),
-      k = 10, bar = 0.50, barName = "recall_ge_050")
-  }
+  def embedPqGate(spark: SparkSession, dir: String): DataFrame =
+    gateFirstTen(spark, dir, bar = 0.50, barName = "recall_ge_050")(
+      annPq(_, firstTen, k = 10))
 
   /** Registered query (HARD oracle via [[recallGate]]): the composite
     * IVF-PQ index gated at recall ≥ 0.50 (measured 0.69 at sf0.1 —
     * the compounded IVF cell miss × PQ prerank miss floor). */
-  def embedAnnIvfPqGate(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    recallGate(knnBrute(emb, queries, k = 10),
-      annIvfPq(emb, col("vec_id") < 10, k = 10,
-        nCentroids = 16, nProbe = 5, nAssign = 3),
-      k = 10, bar = 0.50, barName = "recall_ge_050")
-  }
+  def embedAnnIvfPqGate(spark: SparkSession, dir: String): DataFrame =
+    gateFirstTen(spark, dir, bar = 0.50, barName = "recall_ge_050")(
+      annIvfPq(_, firstTen, k = 10, nCentroids = 16, nProbe = 5, nAssign = 3))
 
   /** Registered query (HARD oracle): the learned PCA path reduced to
     * its mathematical invariants, each a boolean whose expected value
@@ -1574,9 +1492,10 @@ object Embeddings {
     * truncating structureless data), so retrieval
     * quality is pinned by EmbeddingsSpec's planted-subspace fixture
     * and the `embed_pca_planted` clone row instead. */
-  def embedPcaGate(spark: SparkSession, dir: String, d: Int = 16): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val Pca(mean, basis, _) = memoFit(emb, d, 64)
+  def embedPcaGate(spark: SparkSession, dir: String): DataFrame = {
+    val d = ReducedDim
+    val emb = vectors(spark, dir)
+    val Pca(mean, basis, _) = memoFit(emb, d)
     val orthoErr = (for (i <- basis.indices; j <- i until basis.length) yield
       math.abs(basis(i).zip(basis(j)).map { case (x, y) => x * y }.sum -
         (if (i == j) 1.0 else 0.0))).max
@@ -1601,7 +1520,7 @@ object Embeddings {
       lit(orthoErr < 1e-9).as("basis_orthonormal"),
       (maxAbsMean < lit(1e-4)).as("centered"),
       nonInc.as("spectrum_nonincreasing"),
-      (sumVar >= col("total_var") * lit(d.toDouble / 64.0 * 0.98))
+      (sumVar >= col("total_var") * lit(d.toDouble / Dim * 0.98))
         .as("var_captured_ge_uniform"))
   }
 

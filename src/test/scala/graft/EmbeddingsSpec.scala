@@ -25,6 +25,33 @@ class EmbeddingsSpec extends SparkSuite {
     }
   }
 
+  test("every probe layout at full depth equals knnBrute row for row") {
+    // At full depth no layout may lose a candidate, so each must return
+    // brute force's rows, values and order exactly.
+    val queries = Embeddings.queryFrame(emb.filter(col("vec_id") < 10))
+    val n = emb.count().toInt
+    val brute = Embeddings.knnBrute(emb, queries, k = 10).collect().toSeq
+    def search(layout: Embeddings.Layout) =
+      Embeddings.search(emb, queries, 10, layout).collect().toSeq
+    // IVF probing every cell scores every pair. With one cell per
+    // vector a skipped cell loses its vectors; 3-way assignment drives
+    // the widened cut and the dedup of repeated pairs.
+    for (nAssign <- Seq(1, 3))
+      assert(Embeddings.annIvf(emb, col("vec_id") < 10, k = 10, nCentroids = 16,
+        nProbe = 16, nAssign = nAssign).collect().toSeq === brute, s"IVF, every cell, $nAssign")
+    assert(search(Embeddings.Ivf(16, 16, 1, pqDepth = Some(n))) === brute, "IVF-PQ, full depth")
+    assert(search(Embeddings.Pq(n)) === brute, "PQ, full depth")
+    assert(search(Embeddings.Prefix(16, n)) === brute, "prefix, full depth")
+    // the sketch drops pairs past half the bits before its cut, so at
+    // full depth it is brute force over the pairs within that bar
+    val signed = emb.withColumn("sig", Embeddings.signatureCol(Embeddings.SketchBits))
+    val withinBar = Embeddings.knnBrute(signed,
+      Embeddings.queryFrame(signed.filter(col("vec_id") < 10), col("sig").as("q_sig")), k = 10,
+      extra = Embeddings.hamming("sig", "q_sig") <= Embeddings.SketchBits / 2)
+    assert(search(Embeddings.Sketch(n)) === withinBar.collect().toSeq, "sketch, full depth")
+    Embeddings.clearIndexes(spark)
+  }
+
   test("annSketch recall@10 >= 0.9 vs brute force") {
     // sf0.01 (500 vectors): a corpus big enough that top-10 quality is
     // meaningful; at sf0.001 half the true top-10 sits at cross-cluster
@@ -160,8 +187,8 @@ class EmbeddingsSpec extends SparkSuite {
     // pca 0.21/0.47 vs prefix 0.18/0.36 at d=16/32, varCaptured 0.38
     // at 16). Pin the ordering and a recall floor.
     val exact = Embeddings.embedKnn(spark, SparkSpec.sfSmall)
-    val pca = Embeddings.embedPca(spark, SparkSpec.sfSmall, d = 16)
-    val prefix = Embeddings.embedMatryoshka(spark, SparkSpec.sfSmall, d = 16)
+    val pca = Embeddings.embedPca(spark, SparkSpec.sfSmall)
+    val prefix = Embeddings.embedMatryoshka(spark, SparkSpec.sfSmall)
     val pcaRecall = Embeddings.recallAt(exact, pca)
     assert(pcaRecall >= Embeddings.recallAt(exact, prefix),
       "the trained subspace can't lose to a blind slice of the same width")

@@ -8,6 +8,11 @@ oracle SQL from oracle_sql.json in DuckDB over the same parquet tables,
 sorts columns by name, and compares row count, schema (column names) and
 values. Prints one line per query plus a summary. Every registered query
 carries an oracle, so a dump without one is a FAIL, not a skip.
+
+Verify writes no dump for a query whose build failed; it names the query
+and its error in errors.json instead. Each errors.json entry is a FAIL,
+and a missing errors.json fails the run (Verify always writes it, empty
+on an all-green run), so a broken query cannot vanish from the summary.
 """
 import sys, json, glob, os
 import duckdb
@@ -19,9 +24,20 @@ def main(out_dir, sf_dir):
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
+    errors = {}
+    err_path = os.path.join(out_dir, "errors.json")
+    if not os.path.exists(err_path):
+        print(f"FAIL run: {err_path} is missing; Verify always writes it, "
+              "so query failures cannot be ruled out")
+        n_fail += 1
+    else:
+        errors = json.load(open(err_path))
+        for name, msg in sorted(errors.items()):
+            print(f"FAIL {name}: Verify error: {msg}")
+            n_fail += 1
     for name in sorted(os.listdir(out_dir)):
         qdir = os.path.join(out_dir, name)
-        if not os.path.isdir(qdir):
+        if not os.path.isdir(qdir) or name in errors:
             continue
         try:
             spark_df = con.execute(
